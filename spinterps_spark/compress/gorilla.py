@@ -29,14 +29,14 @@ Value stream: first_val raw 64-bit IEEE754; then XOR with previous value:
 
 Encode/decode are exact bit-for-bit inverses for any float64 payload
 (including NaN payloads). Chunks are bounded (default 120 points, the
-Gorilla paper's 2h@1m block), so the per-chunk Python loop is O(chunk) and
-amortized across Arrow batches inside applyInPandas.
+Gorilla paper's 2h@1m block). The Spark operators below run the batch
+kernels of compress/gorilla_vec.py over whole Arrow batches inside
+mapInArrow; the scalar codec here is their bit-exact reference.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 DEFAULT_CHUNK = 120
 
@@ -323,6 +323,54 @@ CHUNK_SCHEMA = (
 )
 
 
+def chunk_arrow_schema():
+    """CHUNK_SCHEMA as the Arrow schema mapInArrow kernels emit."""
+    import pyarrow as pa
+
+    return pa.schema([
+        ("conv_id", pa.string()), ("tier", pa.string()),
+        ("chunk_start_ts", pa.timestamp("us", tz="UTC")),
+        ("n", pa.int32()), ("first_ts", pa.int64()),
+        ("first_val", pa.float64()), ("ts_d2d", pa.binary()),
+        ("vals_xor", pa.binary()), ("chunk_size", pa.int32()),
+    ])
+
+
+def epoch_us(ts_s: np.ndarray):
+    """Epoch seconds -> an Arrow timestamp("us", tz="UTC") array."""
+    import pyarrow as pa
+
+    return pa.array(np.asarray(ts_s, dtype=np.int64) * 1_000_000,
+                     type=pa.timestamp("us", tz="UTC"))
+
+
+def chunk_batch(conv_labels, tier: str, t: np.ndarray, v: np.ndarray,
+                starts: np.ndarray, chunk_size: int):
+    """Chunk rows (chunk_arrow_schema) for chunks given as segments of the
+    sorted flat series (t, v) starting at `starts`; conv_labels holds each
+    chunk's conv_id. All streams are encoded in one vectorized pass
+    (compress/gorilla_vec.py) straight into Binary columns."""
+    import pyarrow as pa
+
+    from spinterps_spark.compress.gorilla_vec import (
+        encode_ts_binary, encode_vals_binary,
+    )
+
+    C = len(starts)
+    first_ts = t[starts]
+    return pa.RecordBatch.from_arrays([
+        conv_labels,
+        pa.repeat(tier, C),
+        epoch_us(first_ts),
+        pa.array(np.diff(np.append(starts, len(t))).astype(np.int32)),
+        pa.array(first_ts),
+        pa.array(v[starts]),
+        encode_ts_binary(t, starts),
+        encode_vals_binary(v, starts),
+        pa.array(np.full(C, chunk_size, dtype=np.int32)),
+    ], schema=chunk_arrow_schema())
+
+
 def encode_tier_chunks(filled: DataFrame_or_any, tier: str, value_col: str = "value_filled",
                        chunk_size: int = DEFAULT_CHUNK):
     """(conv_id, bucket_ts, value) -> Gorilla chunk structs.
@@ -331,13 +379,14 @@ def encode_tier_chunks(filled: DataFrame_or_any, tier: str, value_col: str = "va
     time-aligned fixed windows, so chunk membership is a pure function of
     the row (deterministic across runs, resumable, and bounded at
     chunk_size points for a dense filled series — no conversation-sized
-    group ever materializes). Executed via the stitched mapInPandas path
+    group ever materializes). Executed via the stitched mapInArrow path
     (operators/grouped.py): one Python call per Arrow batch.
     """
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
     from spinterps_spark import TIER_SECONDS
-    from spinterps_spark.operators.grouped import apply_grouped_batches, group_bounds
+    from spinterps_spark.operators.grouped import apply_grouped_batches, column
 
     span = chunk_size * TIER_SECONDS[tier]
     df = filled.select(
@@ -347,84 +396,62 @@ def encode_tier_chunks(filled: DataFrame_or_any, tier: str, value_col: str = "va
         (F.unix_timestamp("bucket_ts") / span).cast("long").alias("_ck"),
     )
 
-    def to_chunks(pdf: pd.DataFrame) -> pd.DataFrame:
-        from spinterps_spark.compress.gorilla_vec import (
-            encode_ts_many, encode_vals_many,
-        )
-
-        starts = group_bounds(pdf, ["conv_id", "_ck"])
-        t_all = pdf["_t"].to_numpy(np.int64)
-        v_all = pdf["_v"].to_numpy(np.float64)
-        conv_all = pdf["conv_id"].to_numpy()
-        ns = np.diff(np.append(starts, len(pdf)))
-        first_ts = t_all[starts] if len(pdf) else np.zeros(0, np.int64)
-        out = pd.DataFrame({
-            "conv_id": conv_all[starts] if len(pdf) else conv_all,
-            "n": ns.astype(np.int32),
-            "first_ts": first_ts,
-            "first_val": (v_all[starts] if len(pdf)
-                          else np.zeros(0, np.float64)),
-            "ts_d2d": encode_ts_many(t_all, starts),
-            "vals_xor": encode_vals_many(v_all, starts),
-        })
-        out.insert(1, "tier", tier)
-        out.insert(2, "chunk_start_ts", pd.to_datetime(first_ts, unit="s"))
-        out["chunk_size"] = np.int32(chunk_size)
-        return out[["conv_id", "tier", "chunk_start_ts", "n",
-                    "first_ts", "first_val", "ts_d2d", "vals_xor",
-                    "chunk_size"]]
+    def to_chunks(batch, starts):
+        return chunk_batch(
+            pc.take(batch.column("conv_id"), starts), tier,
+            column(batch, "_t", np.int64), column(batch, "_v", np.float64),
+            starts, chunk_size)
 
     return apply_grouped_batches(df, ["conv_id", "_ck"], "_t", to_chunks, CHUNK_SCHEMA)
 
 
 def decode_tier_chunks(chunks):
-    """Inverse of encode_tier_chunks via mapInPandas (verification read).
+    """Inverse of encode_tier_chunks via mapInArrow (verification read).
     Every chunk of an Arrow batch is decoded in ONE lockstep pass
-    (compress/gorilla_vec.py) — no per-chunk Python, no per-point Python;
-    the decoded flat arrays are emitted as one frame per batch.
+    (compress/gorilla_vec.py) straight off the Binary columns' buffers —
+    no per-chunk Python, no per-point Python. Labels go out as plain
+    string columns (pc.take of the chunk's label per point): Spark 4.1
+    rejects dictionary-encoded columns from mapInArrow.
     A multi-metric chunk table (the fused pass's extra_value_cols output)
     carries a `metric` column; it is repeated per point like conv_id."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from spinterps_spark.compress.gorilla_vec import (
         decode_ts_many, decode_vals_many,
     )
+    from spinterps_spark.operators.grouped import column, worker_entry
 
     has_metric = "metric" in chunks.columns
+    fields = [("conv_id", pa.string()), ("tier", pa.string()),
+              ("bucket_ts", pa.timestamp("us", tz="UTC")),
+              ("value", pa.float64())]
+    if has_metric:
+        fields.append(("metric", pa.string()))
+    out_schema = pa.schema(fields)
 
     def expand(batches):
-        for pdf in batches:
-            if not len(pdf):
+        worker_entry()
+        for b in batches:
+            if not b.num_rows:
                 continue
-            ns = pdf["n"].to_numpy(np.int64)
-            ts = decode_ts_many(
-                pdf["first_ts"].to_numpy(np.int64), list(pdf["ts_d2d"]), ns)
-            vals = decode_vals_many(
-                pdf["first_val"].to_numpy(np.float64),
-                list(pdf["vals_xor"]), ns)
-            # label columns go out dictionary-encoded: repeating integer
-            # codes and letting Arrow carry a per-batch dictionary is ~2.4x
-            # cheaper at the Arrow boundary than materializing per-point
-            # python strings (r8); Spark reads a dictionary<string> column
-            # as the declared string type, values identical
-            rep = np.repeat(np.arange(len(pdf)), ns)
-
-            def dic(col):
-                codes, uniq = pd.factorize(pdf[col])
-                return pd.Categorical.from_codes(codes[rep], categories=uniq)
-
-            out = {
-                "conv_id": dic("conv_id"),
-                "tier": dic("tier"),
-                "bucket_ts": pd.to_datetime(ts, unit="s"),
-                "value": vals,
-            }
+            ns = column(b, "n", np.int64)
+            ts = decode_ts_many(column(b, "first_ts", np.int64),
+                                b.column("ts_d2d"), ns)
+            vals = decode_vals_many(column(b, "first_val", np.float64),
+                                    b.column("vals_xor"), ns)
+            rep = pa.array(np.repeat(np.arange(len(ns)), ns))
+            cols = [pc.take(b.column("conv_id"), rep),
+                    pc.take(b.column("tier"), rep),
+                    epoch_us(ts), pa.array(vals)]
             if has_metric:
-                out["metric"] = dic("metric")
-            yield pd.DataFrame(out)
+                cols.append(pc.take(b.column("metric"), rep))
+            yield pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
     schema = "conv_id string, tier string, bucket_ts timestamp, value double"
     if has_metric:
         schema += ", metric string"
-    return chunks.mapInPandas(expand, schema=schema)
+    return chunks.mapInArrow(expand, schema=schema)
 
 
 # typing alias kept loose to avoid importing pyspark at module import in

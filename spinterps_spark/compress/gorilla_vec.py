@@ -15,6 +15,10 @@ surface. These kernels process EVERY chunk of an Arrow batch at once:
   XORs only (zero runs collapse to one (0, gap) pair, computed from
   positions). Bit packing deposits (value, nbits<=64) pairs into 64-bit
   words via bitwise_or.reduceat — no per-bit expansion.
+- Arrow: streams cross the mapInArrow boundary as Binary columns. The
+  decoders read a column's offsets and data buffers directly; the
+  encoders build the column over the packed buffer (encode_*_binary). The
+  list-of-bytes forms serve tests and offline tools.
 
 Everything is bit-for-bit identical to the scalar codec (asserted by
 tests/test_gorilla_vec.py over adversarial and random inputs, and by the
@@ -54,15 +58,41 @@ def _lead_trail(x: np.ndarray):
     return lead, trail
 
 
-def _prep_windows(streams: list):
-    """Concatenate byte streams; return (v64, b8, base_bits): v64[k] = the
-    big-endian uint64 of padded-buffer bytes k..k+7, b8[k] = byte k+8 (as
-    uint64), base_bits[c] = absolute bit offset of stream c. A window of
-    bits [pos, pos+64) is (v64[pos>>3] << (pos&7)) | (b8[pos>>3] >> (8-(pos&7)))."""
-    lens = np.fromiter((len(s) for s in streams), dtype=np.int64,
-                       count=len(streams))
-    base_bytes = np.concatenate(([0], np.cumsum(lens)))
-    buf = np.frombuffer(b"".join(streams), dtype=np.uint8)
+def _stream_bytes(streams):
+    """(bytes uint8, base_bytes int64): the streams' bytes back to back and
+    each stream's start within them. A Binary/LargeBinary Arrow array is
+    read through its offsets and data buffers directly — no per-stream
+    Python objects — honoring a non-zero array offset (sliced batches) and
+    a None data buffer (every stream empty); a list of bytes is joined."""
+    import pyarrow as pa
+
+    if not isinstance(streams, pa.Array):
+        lens = np.fromiter((len(s) for s in streams), dtype=np.int64,
+                           count=len(streams))
+        return (np.frombuffer(b"".join(streams), dtype=np.uint8),
+                np.cumsum(lens) - lens)
+    C = len(streams)
+    if C == 0:
+        return np.zeros(0, np.uint8), np.zeros(0, np.int64)
+    odt = np.int64 if pa.types.is_large_binary(streams.type) else np.int32
+    _validity, obuf, dbuf = streams.buffers()
+    offs = np.frombuffer(obuf, dtype=odt, count=C + 1,
+                         offset=streams.offset * np.dtype(odt).itemsize
+                         ).astype(np.int64)
+    lo, hi = int(offs[0]), int(offs[-1])
+    if dbuf is None or hi == lo:
+        return np.zeros(0, np.uint8), np.zeros(C, np.int64)
+    buf = np.frombuffer(dbuf, dtype=np.uint8, count=hi - lo, offset=lo)
+    return buf, offs[:-1] - lo
+
+
+def _prep_windows(streams):
+    """Concatenated byte streams (a Binary Arrow array or a list of
+    bytes); return (v64, b8, base_bits): v64[k] = the big-endian uint64 of
+    padded-buffer bytes k..k+7, b8[k] = byte k+8 (as uint64), base_bits[c]
+    = absolute bit offset of stream c. A window of bits [pos, pos+64) is
+    (v64[pos>>3] << (pos&7)) | (b8[pos>>3] >> (8-(pos&7)))."""
+    buf, base_bytes = _stream_bytes(streams)
     # +24 pad: a token at the very end of the last stream still gathers a
     # full 64-bit window (plus the b8 byte) beyond its final payload bit —
     # e.g. a '11' value token reads bits [pos+14, pos+14+64) + 8 more,
@@ -74,7 +104,7 @@ def _prep_windows(streams: list):
     for j in range(1, 8):
         v64 <<= U64(8)
         v64 |= a[j:j - 9]
-    return v64, a[8:-1], base_bytes[:-1] * 8
+    return v64, a[8:-1], base_bytes * 8
 
 
 def _window(v64, b8, pos):
@@ -86,10 +116,11 @@ def _window(v64, b8, pos):
 
 # ---------------------------------------------------------------- decode
 
-def decode_vals_many(first_vals: np.ndarray, streams: list,
+def decode_vals_many(first_vals: np.ndarray, streams,
                      ns: np.ndarray) -> np.ndarray:
-    """Decode many value streams at once; returns the flat float64 array of
-    sum(ns) values in chunk order. Bit-identical to decode_vals per chunk."""
+    """Decode many value streams (a Binary Arrow array or a list of bytes)
+    at once; returns the flat float64 array of sum(ns) values in chunk
+    order. Bit-identical to decode_vals per chunk."""
     C = len(streams)
     ns = np.asarray(ns, dtype=np.int64)
     total = int(ns.sum())
@@ -150,10 +181,11 @@ def decode_vals_many(first_vals: np.ndarray, streams: list,
     return (acc ^ np.repeat(firsts ^ pre, ns)).view(np.float64)
 
 
-def decode_ts_many(first_ts: np.ndarray, streams: list,
+def decode_ts_many(first_ts: np.ndarray, streams,
                    ns: np.ndarray) -> np.ndarray:
-    """Decode many timestamp streams at once; flat int64 output in chunk
-    order. Bit-identical to decode_ts per chunk (mod-2^64 arithmetic)."""
+    """Decode many timestamp streams (a Binary Arrow array or a list of
+    bytes) at once; flat int64 output in chunk order. Bit-identical to
+    decode_ts per chunk (mod-2^64 arithmetic)."""
     C = len(streams)
     ns = np.asarray(ns, dtype=np.int64)
     total = int(ns.sum())
@@ -254,7 +286,9 @@ def _insert_many(base: np.ndarray, ipos, bmask, vals) -> np.ndarray:
 def _pack_pairs(vals, bits, lane_of_pair, C):
     """Pack lane-major (value, nbits<=64) pairs into per-lane byte streams,
     bit-identical to BitWriter (each lane zero-padded to a byte boundary).
-    Zero-width pairs are allowed and must carry value 0."""
+    Zero-width pairs are allowed and must carry value 0. Returns (buf,
+    offsets): lane c's stream is buf[offsets[c]:offsets[c+1]] — the
+    layout of an Arrow Binary column (buf may run past offsets[-1])."""
     lane_bits = np.bincount(lane_of_pair, weights=bits, minlength=C
                             ).astype(np.int64)
     pad = (-lane_bits) % 8
@@ -263,8 +297,10 @@ def _pack_pairs(vals, bits, lane_of_pair, C):
     v = _insert_many(vals, ipos, bmask, np.zeros(C, dtype=np.uint64))
     nb = _insert_many(bits, ipos, bmask, pad)
     total = int(lane_bits.sum() + pad.sum())
+    byte_counts = (lane_bits + pad) >> 3
+    offsets = np.concatenate(([0], np.cumsum(byte_counts)))
     if total == 0:
-        return [b""] * C
+        return np.zeros(0, np.uint8), offsets
     off = np.concatenate(([0], np.cumsum(nb)[:-1]))
     # zero-width pairs only shape the offsets; drop them before the deposit
     # (one at the very end would otherwise index one word past the buffer)
@@ -290,11 +326,25 @@ def _pack_pairs(vals, bits, lane_of_pair, C):
         qs = q[spill] + 1
         qsb = np.flatnonzero(np.concatenate(([True], qs[1:] != qs[:-1])))
         out[qs[qsb]] |= np.bitwise_or.reduceat(Bv, qsb)
-    mv = out.astype(">u8").tobytes()
-    byte_counts = (lane_bits + pad) >> 3
-    ends = np.cumsum(byte_counts)
-    starts = ends - byte_counts
-    return [mv[s:e] for s, e in zip(starts.tolist(), ends.tolist())]
+    return out.astype(">u8").view(np.uint8), offsets
+
+
+def _as_list(packed) -> list:
+    """(buf, offsets) -> one bytes object per stream."""
+    buf, offsets = packed
+    mv = buf.tobytes()
+    o = offsets.tolist()
+    return [mv[s:e] for s, e in zip(o[:-1], o[1:])]
+
+
+def _as_binary(packed):
+    """(buf, offsets) -> a pa.binary() array over the same buffer."""
+    import pyarrow as pa
+
+    buf, offsets = packed
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(buf)])
 
 
 def _zero_gap_pairs(nzmask, tok_base, C):
@@ -364,7 +414,29 @@ def _lane_major_tokens(starts, ns, off):
 
 def encode_ts_many(ts_flat: np.ndarray, starts: np.ndarray) -> list:
     """Per-chunk ts_d2d streams for chunks given as segments of ts_flat;
-    byte-identical to encode_ts per segment. Stateless classification —
+    byte-identical to encode_ts per segment."""
+    return _as_list(_encode_ts(ts_flat, starts))
+
+
+def encode_ts_binary(ts_flat: np.ndarray, starts: np.ndarray):
+    """encode_ts_many's streams as one pa.binary() array (no per-stream
+    bytes objects)."""
+    return _as_binary(_encode_ts(ts_flat, starts))
+
+
+def encode_vals_many(v_flat: np.ndarray, starts: np.ndarray) -> list:
+    """Per-chunk vals_xor streams for chunks given as segments of v_flat;
+    byte-identical to encode_vals per segment."""
+    return _as_list(_encode_vals(v_flat, starts))
+
+
+def encode_vals_binary(v_flat: np.ndarray, starts: np.ndarray):
+    """encode_vals_many's streams as one pa.binary() array."""
+    return _as_binary(_encode_vals(v_flat, starts))
+
+
+def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
+    """Packed (buf, offsets) ts_d2d streams. Stateless classification —
     no iteration at all."""
     ts_flat = np.asarray(ts_flat, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
@@ -372,7 +444,7 @@ def encode_ts_many(ts_flat: np.ndarray, starts: np.ndarray) -> list:
     ns = ends - starts
     C = len(starts)
     if C == 0:
-        return []
+        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
     d_flat = np.diff(ts_flat) if len(ts_flat) > 1 else np.zeros(0, np.int64)
     dod_flat = np.diff(d_flat) if len(d_flat) > 1 else np.zeros(0, np.int64)
     tok_base, _lr, fp = _lane_major_tokens(starts, ns, 2)
@@ -400,9 +472,8 @@ def encode_ts_many(ts_flat: np.ndarray, starts: np.ndarray) -> list:
     return _pack_pairs(v, b, lane, C)
 
 
-def encode_vals_many(v_flat: np.ndarray, starts: np.ndarray) -> list:
-    """Per-chunk vals_xor streams for chunks given as segments of v_flat;
-    byte-identical to encode_vals per segment. Only the window-reuse
+def _encode_vals(v_flat: np.ndarray, starts: np.ndarray):
+    """Packed (buf, offsets) vals_xor streams. Only the window-reuse
     decision locksteps (over nonzero XORs); everything else is one pass."""
     v_flat = np.asarray(v_flat, dtype=np.float64)
     bits64 = v_flat.view(np.uint64)
@@ -411,7 +482,7 @@ def encode_vals_many(v_flat: np.ndarray, starts: np.ndarray) -> list:
     ns = ends - starts
     C = len(starts)
     if C == 0:
-        return []
+        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
     xflat = (bits64[:-1] ^ bits64[1:]) if len(bits64) > 1 else \
         np.zeros(0, np.uint64)
     tok_base, _lr, fp = _lane_major_tokens(starts, ns, 1)

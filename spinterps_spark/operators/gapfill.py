@@ -22,8 +22,9 @@ reference's exact DSL and kernels:
 - value clamp P4 (interp/steps.py:466-476) and round(p) pre-write
   (interp/steps.py:917-918).
 
-Execution model: one `applyInPandas` group per (conv_id[, chunk]) — Arrow
-batches, float64 numpy inside, zero per-row Python. The O2 rewrite from the
+Execution model: stitched `mapInArrow` batches of complete (conv_id[, chunk])
+groups (operators/grouped.py) — Arrow columns read as float64 numpy views,
+zero per-row Python. The O2 rewrite from the
 reference (one matrix factorization per variogram/config, not per step:
 interp/prepare.py:465-508, interp/steps.py:333-346) appears here TWICE:
 a per-series pinv group keyed by the neighbor index-set (a contiguous gap
@@ -42,6 +43,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from spinterps_spark import TIER_SECONDS
@@ -187,15 +190,18 @@ def fill_series(
     # timeline replace the two bounds clamps + wheres (an exhausted side
     # reads the sentinel and yields distance +inf, the exact value the
     # where produced); per-j outputs are written to contiguous rows of
-    # (k, G) arrays, exposed to the rest of the kernel as transposed views
-    # — every downstream op is elementwise or an explicit-axis reduce, so
-    # values and reduction order are identical regardless of memory order.
+    # (k, G) arrays, exposed to the rest of the kernel as transposed views.
+    # Elementwise ops give the same values in either memory order, but an
+    # axis=1 sum over these F-ordered views adds each row sequentially,
+    # while numpy sums a C-contiguous row pairwise — so row sums (IDW
+    # weights) can differ in the last ulp from a contiguous-row
+    # implementation (tests/oracle.py) before rounding.
     t_pad = np.empty(n_ref + 2, dtype=np.float64)
     t_pad[0] = -np.inf
     t_pad[-1] = np.inf
     t_pad[1:-1] = t_ref
     pos = t_ref.searchsorted(t_gap)
-    lp = pos            # padded index of the left candidate (ref i -> i+1)
+    lp = pos.copy()     # padded index of the left candidate (ref i -> i+1)
     rp = pos + 1        # padded index of the right candidate
     nb_t = np.empty((k, n_gap), dtype=np.int64)
     d_t = np.empty((k, n_gap), dtype=np.float64)
@@ -636,8 +642,14 @@ def gapfill(
         "conv_id string, bucket_ts timestamp, value_filled double, "
         "est_var double, fill_method string"
     )
+    ts_type = pa.timestamp("us", tz="UTC")
+    out_arrow = pa.schema([
+        ("conv_id", pa.string()), ("bucket_ts", ts_type),
+        ("value_filled", pa.float64()), ("est_var", pa.float64()),
+        ("fill_method", pa.string()),
+    ])
 
-    from spinterps_spark.operators.grouped import apply_grouped_batches, group_bounds
+    from spinterps_spark.operators.grouped import apply_grouped_batches, column
 
     kw = dict(
         method=method,
@@ -653,19 +665,20 @@ def gapfill(
         nan_ulm=params.get("nan_ulm"),
     )
 
-    def fill_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fill_batch(batch: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         _cache: dict = {}   # cross-conversation pinv reuse within the batch
-        starts = group_bounds(pdf, group_cols)
-        ends = np.append(starts[1:], len(pdf))
-        t_all = pdf["_t"].to_numpy(np.int64)
-        v_all = pdf["_v"].to_numpy(np.float64)
-        vg_all = pdf["vg_str"].to_numpy() if kriging else None
+        n = batch.num_rows
+        ends = np.append(starts[1:], n)
+        t_all = column(batch, "_t", np.int64)
+        v_all = column(batch, "_v", np.float64)
+        vg_all = column(batch, "vg_str") if kriging else None
         dr_all = (
-            pdf[drift_cols].to_numpy(np.float64) if drift_cols else None
+            np.column_stack([column(batch, c, np.float64) for c in drift_cols])
+            if drift_cols else None
         )
-        filled = np.empty(len(pdf), dtype=np.float64)
-        est = np.empty(len(pdf), dtype=np.float64)
-        codes = np.empty(len(pdf), dtype=object)
+        filled = np.empty(n, dtype=np.float64)
+        est = np.empty(n, dtype=np.float64)
+        codes = np.empty(n, dtype=object)
         for s, e in zip(starts, ends):
             vg = None
             if per_row_vg:
@@ -681,25 +694,21 @@ def gapfill(
             filled[s:e] = f
             est[s:e] = ev
             codes[s:e] = cd
-        keep = ~pdf["_pad"].to_numpy()
+        keep = ~column(batch, "_pad", bool)
         if emit == "chunks":
+            gid, labels = _conv_groups(batch)
             return _encode_filled(
-                pdf["conv_id"].to_numpy()[keep],
-                t_all[keep],
-                filled[keep],
-                tier,
-                gorilla_chunk * secs,
-                gorilla_chunk,
+                gid[keep], labels, t_all[keep], filled[keep], tier,
+                gorilla_chunk * secs, gorilla_chunk,
             )
-        return pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy()[keep],
-                "bucket_ts": pdf["bucket_ts"].to_numpy()[keep],
-                "value_filled": filled[keep],
-                "est_var": est[keep],
-                "fill_method": codes[keep].astype(str),
-            }
-        )
+        rows = np.flatnonzero(keep)
+        return pa.RecordBatch.from_arrays([
+            pc.take(batch.column("conv_id"), rows),
+            pc.take(batch.column("bucket_ts"), rows).cast(ts_type),
+            pa.array(filled[keep]),
+            pa.array(est[keep]),
+            pa.array(codes[keep], type=pa.string()),
+        ], schema=out_arrow)
 
     if emit == "chunks":
         from spinterps_spark.compress.gorilla import CHUNK_SCHEMA
@@ -708,53 +717,41 @@ def gapfill(
     return apply_grouped_batches(df, group_cols, "_t", fill_batch, out_schema)
 
 
-def _encode_filled(conv_arr, t_arr, v_arr, tier: str, span: int,
-                   chunk_size: int) -> pd.DataFrame:
+def _conv_groups(batch: pa.RecordBatch):
+    """(per-row conversation index, conv_id per conversation) of a
+    conv-sorted batch: kernels carry the small integer index instead of
+    per-point conv_id strings and take the labels once per chunk."""
+    from spinterps_spark.operators.grouped import key_changes
+
+    ch = key_changes(batch.column("conv_id"))
+    gid = np.concatenate(([0], np.cumsum(ch)))
+    heads = np.flatnonzero(np.concatenate(([True], ch)))
+    return gid, pc.take(batch.column("conv_id"), heads)
+
+
+def _encode_filled(conv_gid, conv_labels, t_arr, v_arr, tier: str,
+                   span: int, chunk_size: int) -> pa.RecordBatch:
     """Gorilla-encode filled (conv-sorted, time-sorted) arrays into
-    time-aligned chunk rows (fused fill+encode path). chunk_size is the
-    encode-time points-per-chunk setting (span == chunk_size * tier
-    seconds), stamped into every row so pruned reads derive the span from
-    the table (compress/gorilla.CHUNK_SCHEMA). All chunks of the batch are
-    encoded in one vectorized pass (compress/gorilla_vec.py) — NaN rows are
-    dropped first, so chunk boundaries and streams are byte-identical to
-    the per-chunk scalar encode of each group's non-NaN rows."""
-    from spinterps_spark.compress.gorilla_vec import (
-        encode_ts_many, encode_vals_many,
-    )
+    time-aligned chunk rows (fused fill+encode path). conv_gid[i] indexes
+    point i's conv_id in conv_labels (equal for adjacent points of one
+    conversation). chunk_size is the encode-time points-per-chunk setting
+    (span == chunk_size * tier seconds), stamped into every row so pruned
+    reads derive the span from the table (compress/gorilla.CHUNK_SCHEMA).
+    NaN rows are dropped first, so chunk boundaries and streams are
+    byte-identical to the per-chunk scalar encode of each group's non-NaN
+    rows."""
+    from spinterps_spark.compress.gorilla import chunk_batch
 
     keep = ~np.isnan(v_arr)
-    conv_k = conv_arr[keep]
+    g = conv_gid[keep]
     t_k = t_arr[keep]
     v_k = v_arr[keep]
-    nk = len(conv_k)
-    if nk:
-        ck = t_k // span
-        change = np.zeros(nk, dtype=bool)
-        change[0] = True
-        change[1:] = (conv_k[1:] != conv_k[:-1]) | (ck[1:] != ck[:-1])
-        starts = np.flatnonzero(change)
-        first_ts = t_k[starts]
-        out = pd.DataFrame({
-            "conv_id": conv_k[starts],
-            "n": np.diff(np.append(starts, nk)).astype(np.int32),
-            "first_ts": first_ts,
-            "first_val": v_k[starts],
-            "ts_d2d": encode_ts_many(t_k, starts),
-            "vals_xor": encode_vals_many(v_k, starts),
-        })
-    else:
-        first_ts = np.zeros(0, dtype=np.int64)
-        out = pd.DataFrame({
-            "conv_id": conv_k, "n": np.zeros(0, np.int32),
-            "first_ts": first_ts, "first_val": v_k,
-            "ts_d2d": [], "vals_xor": [],
-        })
-    out.insert(1, "tier", tier)
-    out.insert(2, "chunk_start_ts", pd.to_datetime(first_ts, unit="s"))
-    out["chunk_size"] = np.int32(chunk_size)
-    return out[["conv_id", "tier", "chunk_start_ts", "n",
-                "first_ts", "first_val", "ts_d2d", "vals_xor",
-                "chunk_size"]]
+    ck = t_k // span
+    change = np.ones(len(g), dtype=bool)
+    change[1:] = (g[1:] != g[:-1]) | (ck[1:] != ck[:-1])
+    starts = np.flatnonzero(change)
+    return chunk_batch(pc.take(conv_labels, g[starts]), tier, t_k, v_k,
+                       starts, chunk_size)
 
 
 def gapfill_virtual_chunks(
@@ -839,7 +836,9 @@ def gapfill_virtual_chunks(
     from pyspark.sql import Window as W
 
     from spinterps_spark.compress.gorilla import CHUNK_SCHEMA
-    from spinterps_spark.operators.grouped import apply_grouped_batches, group_bounds
+    from spinterps_spark.operators.grouped import (
+        apply_grouped_batches, column, concat_batches,
+    )
 
     xcols = list(extra_value_cols or [])
     if len({value_col, *xcols}) != 1 + len(xcols):
@@ -945,27 +944,27 @@ def gapfill_virtual_chunks(
     # dispatch overhead the batching removes comes back as DRAM streaming
     # over (M, k) matrices plus per-batch allocation churn. Keep per-group.
 
-    def fill_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fill_batch(batch: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         _vcache: dict = {}  # cross-conversation pinv reuse within the batch
-        starts = group_bounds(pdf, ["conv_id", "_chunk"])
-        ends = np.append(starts[1:], len(pdf))
-        t_all = pdf["_t"].to_numpy(np.int64)
-        v_all = pdf["_v"].to_numpy(np.float64)
-        x_alls = [pdf[x].to_numpy(np.float64) for x in xnames]
-        ck_all = pdf["_chunk"].to_numpy(np.int64)
-        conv_all = pdf["conv_id"].to_numpy()
-        vg_all = pdf["vg_str"].to_numpy() if kriging else None
+        ends = np.append(starts[1:], batch.num_rows)
+        t_all = column(batch, "_t", np.int64)
+        v_all = column(batch, "_v", np.float64)
+        x_alls = [column(batch, x, np.float64) for x in xnames]
+        ck_all = column(batch, "_chunk", np.int64)
+        gid_all, conv_labels = _conv_groups(batch)
+        vg_all = column(batch, "vg_str") if kriging else None
         if dcols:
-            # drift rows carry null bounds -> pandas promotes to float64;
+            # drift rows carry null bounds -> read as float64 (NaN);
             # epochs are far below 2^53, so the int() at ref rows is exact
-            isd_all = pdf["_is_drift"].to_numpy(bool)
-            dmat_all = pdf[dcols].to_numpy(np.float64)
-            first_all = pdf["_first"].to_numpy(np.float64)
-            last_all = pdf["_last"].to_numpy(np.float64)
+            isd_all = column(batch, "_is_drift", bool)
+            dmat_all = np.column_stack(
+                [column(batch, c, np.float64) for c in dcols])
+            first_all = column(batch, "_first", np.float64)
+            last_all = column(batch, "_last", np.float64)
         else:
-            first_all = pdf["_first"].to_numpy(np.int64)
-            last_all = pdf["_last"].to_numpy(np.int64)
-        out_conv_vals, out_conv_cnts, out_t = [], [], []
+            first_all = column(batch, "_first", np.int64)
+            last_all = column(batch, "_last", np.int64)
+        out_gid, out_conv_cnts, out_t = [], [], []
         out_v: dict = {m: [] for m in [value_col, *xcols]}
         for s, e in zip(starts, ends):
             c = ck_all[s]
@@ -1045,7 +1044,7 @@ def gapfill_virtual_chunks(
             m0 = (0 if grid_min_ts is None
                   else int(grid.searchsorted(grid_min_ts, side="left")))
             keep = slice(nl + m0, nl + len(grid))
-            out_conv_vals.append(conv_all[s])
+            out_gid.append(gid_all[s])
             out_conv_cnts.append(len(grid) - m0)
             out_t.append(grid[m0:])
             out_v[value_col].append(filled[keep])
@@ -1057,17 +1056,16 @@ def gapfill_virtual_chunks(
                     t_ser, xs, vg_str=vg, drifts=d_ser,
                     pinv_cache=_vcache, **kw)
                 out_v[xname].append(fx[keep])
-        empty = not out_conv_vals
-        conv_cat = (np.array([], dtype=object) if empty
-                    else np.repeat(np.array(out_conv_vals, dtype=object),
-                                   out_conv_cnts))
+        empty = not out_gid
+        gid_cat = (np.array([], dtype=np.int64) if empty
+                   else np.repeat(np.array(out_gid), out_conv_cnts))
         t_cat = (np.array([], dtype=np.int64) if empty
                  else np.concatenate(out_t))
 
         def enc(metric):
             vals = (np.array([], dtype=np.float64) if empty
                     else np.concatenate(out_v[metric]))
-            return _encode_filled(conv_cat, t_cat, vals, tier,
+            return _encode_filled(gid_cat, conv_labels, t_cat, vals, tier,
                                   gorilla_chunk * secs, gorilla_chunk)
 
         if not xcols:
@@ -1075,9 +1073,9 @@ def gapfill_virtual_chunks(
         frames = []
         for m in [value_col, *xcols]:
             f = enc(m)
-            f["metric"] = m
-            frames.append(f)
-        return pd.concat(frames, ignore_index=True)
+            frames.append(
+                f.append_column("metric", pa.repeat(m, f.num_rows)))
+        return concat_batches(frames)
 
     out_schema = CHUNK_SCHEMA + (", metric string" if xcols else "")
     return apply_grouped_batches(df, ["conv_id", "_chunk"], "_t", fill_batch,

@@ -1,16 +1,19 @@
-"""High-cardinality grouped-map execution: mapInPandas + boundary stitching.
+"""High-cardinality grouped-map execution: mapInArrow + boundary stitching.
 
-applyInPandas pays a fixed per-group cost (one pandas DataFrame build +
-Python call per group). With millions of small groups (one per conversation)
+A per-group UDF (applyInPandas) pays a fixed per-group cost (one pandas
+DataFrame build + Python call per group). With millions of small groups (one per conversation)
 that overhead dominates the actual math. This utility keeps the same
 semantics but amortizes it:
 
-    repartition(key) -> sortWithinPartitions(key, order) -> mapInPandas
+    repartition(key) -> sortWithinPartitions(key, order) -> mapInArrow
 
 Within a partition, rows of a group are contiguous; the generator stitches
 groups that straddle Arrow batch boundaries by carrying the trailing group
 into the next batch, then hands the whole batch (complete groups only,
 sorted) to a vectorized batch function — one Python call per ~64k rows.
+Batches stay pyarrow RecordBatches end to end: kernels read columns as
+numpy views (`column`) and build their output with pyarrow, so no pandas
+frame is built on either side of the kernel.
 
 Reference precedent: the Spark translation of the reference's "chunk of
 steps per worker, loop groups inside" plan (interp/main.py:652-859) rather
@@ -23,37 +26,100 @@ group across batches.
 
 from __future__ import annotations
 
+import os
+import sys
+import zipimport
 from typing import Callable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 
-def group_bounds(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
-    """Start indices of key groups in a key-sorted frame."""
-    n = len(pdf)
+def _keep_directory() -> None:
+    """zipimporter.invalidate_caches replacement: keep the directory."""
+
+
+def worker_entry() -> None:
+    """Run first in every Python kernel. pyspark's worker calls
+    importlib.invalidate_caches() before EVERY task, and each cached
+    zipimporter then re-reads its whole archive directory — pyspark.zip
+    (~1.3k entries, a dozen importers, one per imported subpackage) and
+    the spark-core jar (~5.4k entries): 0.17-0.21 CPU-s per task against
+    a ~2 ms kernel body on a 4-core box. Those archives are immutable for
+    the life of the worker, so their importers get a no-op
+    invalidate_caches. Archives under the SparkFiles root (--py-files,
+    addPyFile) can change between tasks and stay refreshable. Idempotent;
+    a no-op outside a Spark worker."""
+    from pyspark.core.files import SparkFiles
+
+    root = SparkFiles._root_directory
+    if not SparkFiles._is_running_on_worker or not root:
+        return
+    root = os.path.join(root, "")
+    for finder in list(sys.path_importer_cache.values()):
+        if (isinstance(finder, zipimport.zipimporter)
+                and "invalidate_caches" not in vars(finder)
+                and not finder.archive.startswith(root)):
+            finder.invalidate_caches = _keep_directory
+
+
+def column(batch: pa.RecordBatch, name: str, dtype=None) -> np.ndarray:
+    """A batch column as numpy: a zero-copy view for null-free primitive
+    columns (sliced batches included), else a copy — nulls become NaN
+    (numeric) or None (string)."""
+    a = batch.column(name).to_numpy(zero_copy_only=False)
+    return a if dtype is None else np.asarray(a, dtype=dtype)
+
+
+def key_changes(arr: pa.Array) -> np.ndarray:
+    """Bool mask over arr[1:]: True where the value differs from its
+    predecessor (string columns compare in Arrow, no Python objects)."""
+    if len(arr) < 2:
+        return np.zeros(0, dtype=bool)
+    ne = pc.not_equal(arr.slice(1), arr.slice(0, len(arr) - 1))
+    return ne.to_numpy(zero_copy_only=False)
+
+
+def group_bounds(batch: pa.RecordBatch, key_cols: list[str]) -> np.ndarray:
+    """Start indices of key groups in a key-sorted batch."""
+    n = batch.num_rows
     if n == 0:
         return np.array([], dtype=np.int64)
     change = np.zeros(n, dtype=bool)
     change[0] = True
     for c in key_cols:
-        a = pdf[c].to_numpy()
-        change[1:] |= a[1:] != a[:-1]
+        change[1:] |= key_changes(batch.column(c))
     return np.flatnonzero(change)
+
+
+def concat_batches(batches: list[pa.RecordBatch]) -> pa.RecordBatch:
+    """Row-wise concatenation of same-schema batches (pyarrow 16 has no
+    RecordBatch concat): one pa.concat_arrays per column."""
+    if len(batches) == 1:
+        return batches[0]
+    first = batches[0]
+    return pa.RecordBatch.from_arrays(
+        [pa.concat_arrays([b.column(i) for b in batches])
+         for i in range(first.num_columns)],
+        schema=first.schema)
 
 
 def apply_grouped_batches(
     df: DataFrame,
     key_cols: list[str],
     order_col: str,
-    batch_fn: Callable[[pd.DataFrame], pd.DataFrame],
+    batch_fn: Callable[[pa.RecordBatch, np.ndarray], pa.RecordBatch],
     schema: str,
     n_parts: int | None = None,
 ) -> DataFrame:
-    """Run batch_fn over stitched batches of complete, key-contiguous,
-    order-sorted groups. batch_fn must handle multiple groups per call
-    (use group_bounds) and return a DataFrame matching `schema`.
+    """Run batch_fn(batch, starts) over stitched batches of complete,
+    key-contiguous, order-sorted groups; starts are the group start rows
+    (group_bounds over key_cols). batch_fn must handle multiple groups per
+    call and return a RecordBatch matching `schema`
+    (string/binary columns as pa.string()/pa.binary(), timestamps as
+    timestamp("us", tz="UTC"), int as int32, long as int64).
 
     n_parts=None sizes the shuffle from the input's Catalyst size estimate
     (VERDICT r1: the fixed defaultParallelism*2 was not data-aware and
@@ -76,22 +142,26 @@ def apply_grouped_batches(
         *key_cols, order_col
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        worker_entry()
+        carry: pa.RecordBatch | None = None
+        for batch in batches:
+            if carry is not None:
+                batch = concat_batches([carry, batch])
                 carry = None
-            starts = group_bounds(pdf, key_cols)
+            starts = group_bounds(batch, key_cols)
             if len(starts) == 0:
                 continue
-            last_start = starts[-1]
+            last_start = int(starts[-1])
             # hold back the last group: it may continue in the next batch
-            carry = pdf.iloc[last_start:]
-            body = pdf.iloc[:last_start].reset_index(drop=True)
-            if len(body):
-                yield batch_fn(body)
-        if carry is not None and len(carry):
-            yield batch_fn(carry.reset_index(drop=True))
+            carry = batch.slice(last_start)
+            if last_start:
+                out = batch_fn(batch.slice(0, last_start), starts[:-1])
+                if out.num_rows:
+                    yield out
+        if carry is not None:
+            out = batch_fn(carry, np.zeros(1, dtype=np.int64))
+            if out.num_rows:
+                yield out
 
-    return part.mapInPandas(run, schema=schema)
+    return part.mapInArrow(run, schema=schema)

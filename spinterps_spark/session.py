@@ -5,14 +5,83 @@ ones we would ship in spark-defaults for a 1000-executor cluster: AQE on
 (runtime re-plan, skew-join splitting), Arrow on (vectorized pandas UDFs,
 reference precedent: BLAS single-thread pinning in spinterps __init__.py:4-10
 is the moral equivalent of keeping UDF workers un-oversubscribed), shuffle
-partition count sized to parallelism.
+partition count sized to parallelism. Driver memory and the shuffle
+directory are sized from the machine (`MemAvailable`, `/dev/shm` free
+space) unless SPARK_GRAFT_DRIVER_MEM / SPARK_GRAFT_LOCAL_DIR set them.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+GIB = 1 << 30
+MAX_DRIVER_BYTES = 24 * GIB     # the fixed default before sizing
+MIN_AVAILABLE_BYTES = 2 * GIB   # a 1 GiB heap plus the Python workers
+SHM_MIN_FREE_BYTES = 4 * GIB    # /dev/shm room needed to put shuffle there
+_UNITS = {"k": 1 << 10, "m": 1 << 20, "g": GIB, "t": 1 << 40}
+
+
+def mem_available_bytes() -> int | None:
+    """MemAvailable from /proc/meminfo (None where there is none)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) << 10
+    except OSError:
+        pass
+    return None
+
+
+def parse_mem(spec: str) -> int:
+    """Spark memory string ("24g", "512m", "2048" = MiB) -> bytes."""
+    s = spec.strip().lower().rstrip("b")
+    if s and s[-1] in _UNITS:
+        return int(float(s[:-1]) * _UNITS[s[-1]])
+    return int(s) << 20
+
+
+def driver_memory(available: int | None) -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half of the available memory, 1-24 GiB
+    (available None: unknown or moot — no check, 4g default). Raises
+    RuntimeError when the heap cannot fit, instead of letting the JVM grow
+    into an OOM kill."""
+    spec = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if available is None:
+        return spec or "4g"
+    if spec is None:
+        if available < MIN_AVAILABLE_BYTES:
+            raise RuntimeError(
+                f"spinterps_spark: only {available / GIB:.1f} GiB of memory "
+                f"available; a session needs at least "
+                f"{MIN_AVAILABLE_BYTES / GIB:.0f} GiB (free memory, or set "
+                f"SPARK_GRAFT_DRIVER_MEM to a smaller heap)")
+        spec = f"{max(1, min(MAX_DRIVER_BYTES, available // 2) // GIB)}g"
+    if parse_mem(spec) > available:
+        raise RuntimeError(
+            f"spinterps_spark: driver memory {spec} exceeds the "
+            f"{available / GIB:.1f} GiB available on this machine; lower "
+            f"SPARK_GRAFT_DRIVER_MEM")
+    return spec
+
+
+def shuffle_dir(available: int | None, heap: int) -> str | None:
+    """SPARK_GRAFT_LOCAL_DIR, else /dev/shm when it has room: tmpfs pages
+    are RAM, so it needs SHM_MIN_FREE_BYTES free both on /dev/shm and in
+    memory beyond the driver heap. None = Spark's default (/tmp)."""
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir is not None or not os.path.isdir("/dev/shm"):
+        return local_dir
+    st = os.statvfs("/dev/shm")
+    shm_free = st.f_bavail * st.f_frsize
+    if available is not None and available - heap < SHM_MIN_FREE_BYTES:
+        return None
+    if shm_free < SHM_MIN_FREE_BYTES:
+        return None
+    return "/dev/shm/spark_graft_local"
 
 
 def get_spark(
@@ -28,14 +97,17 @@ def get_spark(
         # is 2-3x total executor cores, and AQE coalesces the excess.
         shuffle_partitions = max(cores, 8)
 
-    # shuffle/spill on tmpfs when available: the sandbox's /tmp sits on a
+    # the driver heap is fixed when the JVM starts: once it runs, a later
+    # session's driver-memory setting is moot, so only check at launch
+    available = (None if SparkContext._gateway is not None
+                 else mem_available_bytes())
+    driver_mem = driver_memory(available)
+    # shuffle/spill on tmpfs when it has room: the sandbox's /tmp sits on a
     # ~475 MB/s virtual disk that serializes concurrent shuffle IO (measured:
     # identity Arrow round-trip anti-scaled 8->32 cores); RAM-backed local
     # dirs restore CPU-bound scaling. On a real cluster this maps to NVMe
     # shuffle disks / disaggregated shuffle service.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/spark_graft_local"
+    local_dir = shuffle_dir(available, parse_mem(driver_mem))
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
@@ -48,7 +120,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
     )

@@ -59,7 +59,7 @@ def main():
     p3 = plan_of(G.gapfill_virtual_chunks(ser, "v", method="OK", tier="1m",
                                           coords=coords, vg_dim=vg))
     sections.append(("Virtual-spine fused fill+Gorilla (broadcast dims, one big shuffle)", p3,
-                     ["BroadcastExchange", "MapInPandas", "Exchange", "Window"]))
+                     ["BroadcastExchange", "MapInArrow", "Exchange", "Window"]))
 
     p4 = plan_of(Q.queries()["cosine_topk"](spark, sf))
     sections.append(("Brute-force cosine top-k (broadcast queries, codegen dot products)", p4,
@@ -253,7 +253,7 @@ def main():
            f"group would be {n_refs} rows and unbounded at 100 TB)\n") + p18
     sections.append(("Fused pass under a mega-conversation "
                      "(r6: skew-bounded Arrow groups)", p18,
-                     ["MapInPandas", "Arrow groups bounded: True"]))
+                     ["MapInArrow", "Arrow groups bounded: True"]))
 
     # r6: compaction rewrite — ONE range exchange of opaque binary chunk
     # rows, a partition-local sort, and NO Python/decode node anywhere:
@@ -268,7 +268,7 @@ def main():
         chunks19.repartitionByRange(4, "conv_id", "chunk_start_ts")
         .sortWithinPartitions("conv_id", "chunk_start_ts")
     )
-    n_py19 = len(re.findall(r"MapInPandas|ArrowEvalPython|BatchEvalPython",
+    n_py19 = len(re.findall(r"MapInPandas|MapInArrow|PythonMapInArrow|ArrowEvalPython|BatchEvalPython",
                             p19.split("rangepartitioning")[-1]))
     p19 = (f"(python nodes above the range exchange: {n_py19} — must be 0; "
            f"compaction moves encoded bytes, it never decodes)\n") + p19
