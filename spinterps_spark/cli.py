@@ -14,6 +14,12 @@ Local smoke:
 The script only uses SparkSession.builder.getOrCreate(), so all cluster
 sizing (master, executors, memory) comes from spark-submit — the same
 artifact runs at N and 4N executors (BASELINE.md scaling protocol).
+spark-submit starts the driver JVM before this script runs, so pass the
+driver JIT policy (session.DRIVER_JIT_OPTIONS) on its command line:
+
+    JIT="-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+    JIT="$JIT -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    spark-submit --conf "spark.driver.defaultJavaOptions=$JIT" --py-files ...
 """
 
 from __future__ import annotations
@@ -26,10 +32,11 @@ import sys
 def _spark(app: str):
     from pyspark.sql import SparkSession
 
-    from spinterps_spark.session import quiet_noisy_loggers
+    from spinterps_spark.session import DRIVER_JIT_OPTIONS, quiet_noisy_loggers
 
     spark = (
         SparkSession.builder.appName(app)
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -42,11 +49,10 @@ def _spark(app: str):
 
 def _warmup(spark):
     """Touch codegen + python-worker pools once before the timed section
-    (cluster warm-up is not steady-state throughput)."""
-    import pandas as pd
-
+    (cluster warm-up is not steady-state throughput). Identity mapInArrow:
+    the boundary every Python kernel uses."""
     df = spark.range(256).repartition(8, "id")
-    df.mapInPandas(lambda it: it, schema="id long").count()
+    df.mapInArrow(lambda it: it, schema="id long").count()
 
 
 def cmd_rollup(args) -> int:

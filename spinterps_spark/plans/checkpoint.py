@@ -21,6 +21,7 @@ stays small (4-16) and constant, not proportional to data.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -32,14 +33,21 @@ CKPT_SCHEMA = (
     "run_id string, tier string, wave int, n_waves int, status string, "
     "rows_in long, rows_out long, checksum long, wall_sec double, ts timestamp"
 )
+# published lineage files: append() writes `ckpt-<hex>.parquet.tmp` and then
+# renames it, so a crash in between leaves a truncated .tmp that no reader
+# may touch. Any *.parquet counts, so a checkpoint rewritten or compacted
+# with Spark (part-*.parquet) keeps resuming.
+PUBLISHED_GLOB = "*.parquet"
 
 
 class CheckpointLog:
     """Lineage rows are appended driver-side with pyarrow (milliseconds, no
     Spark job — the reference's lock-held incremental writes were similarly
-    out-of-band of the compute, interp/steps.py:895-949) and read back
-    through Spark for resume/reporting. The done-set is cached per process;
-    a fresh CheckpointLog (fresh driver) re-reads from disk."""
+    out-of-band of the compute, interp/steps.py:895-949). The resume
+    done-set is read back driver-side with pyarrow too; `read()` gives the
+    full table as a DataFrame for reporting. Both see only published files
+    (PUBLISHED_GLOB). The done-set is cached per process; a fresh
+    CheckpointLog (fresh driver) re-reads from disk."""
 
     def __init__(self, spark, ckpt_dir: str):
         self.spark = spark
@@ -54,19 +62,31 @@ class CheckpointLog:
         if not os.path.isdir(self.dir):
             return self.spark.createDataFrame([], CKPT_SCHEMA)
         try:
-            return self.spark.read.schema(CKPT_SCHEMA).parquet(self.dir)
+            return (self.spark.read.schema(CKPT_SCHEMA)
+                    .option("pathGlobFilter", PUBLISHED_GLOB)
+                    .parquet(self.dir))
         except Exception:
             return self.spark.createDataFrame([], CKPT_SCHEMA)
 
     def _load_done(self) -> set[tuple[str, str, int, int | None]]:
         if self._done is None:
-            rows = (
-                self.read()
-                .where(F.col("status") == "done")
-                .select("run_id", "tier", "wave", "n_waves")
-                .collect()
-            )
-            self._done = {(r.run_id, r.tier, r.wave, r.n_waves) for r in rows}
+            import pyarrow as pa
+            import pyarrow.dataset as ds
+
+            files = sorted(glob.glob(os.path.join(self.dir, PUBLISHED_GLOB)))
+            self._done = set()
+            if files:
+                # explicit schema: files written before n_waves existed
+                # read it as null (None), as the CKPT_SCHEMA Spark read does
+                schema = pa.schema([("run_id", pa.string()),
+                                    ("tier", pa.string()),
+                                    ("wave", pa.int32()),
+                                    ("n_waves", pa.int32()),
+                                    ("status", pa.string())])
+                t = ds.dataset(files, schema=schema, format="parquet").to_table(
+                    columns=["run_id", "tier", "wave", "n_waves"],
+                    filter=ds.field("status") == "done")
+                self._done = set(zip(*(t[c].to_pylist() for c in t.column_names)))
         return self._done
 
     def done_waves(self, run_id: str, tier: str, n_waves: int | None = None) -> set[int]:

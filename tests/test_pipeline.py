@@ -77,6 +77,40 @@ def test_resume_skips_done_waves_and_matches_single_shot(spark, tdir):
     assert (counts["count"] == 1).all()
 
 
+def test_truncated_ckpt_tmp_does_not_block_resume(spark, tdir):
+    """A crash between append()'s write and its rename leaves a truncated
+    ckpt-*.parquet.tmp; the done-set and read() must skip it."""
+    ckdir = os.path.join(tdir, "ckpt")
+    C.CheckpointLog(spark, ckdir).append(dict(
+        run_id="r", tier="1m", wave=0, n_waves=2, status="done",
+        rows_in=-1, rows_out=5, checksum=7, wall_sec=0.1))
+    published = glob.glob(os.path.join(ckdir, "ckpt-*.parquet"))
+    assert len(published) == 1
+    with open(published[0], "rb") as f:
+        head = f.read()[:40]
+    with open(os.path.join(ckdir, "ckpt-feed.parquet.tmp"), "wb") as f:
+        f.write(head)
+    ck = C.CheckpointLog(spark, ckdir)
+    assert ck.done_waves("r", "1m", n_waves=2) == {0}
+    assert ck.read().count() == 1
+
+
+def test_ckpt_rows_without_n_waves_read_as_none(spark, tdir):
+    """Lineage written before n_waves existed has no such column: the wave
+    still counts as done and no wave-count check applies to it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ckdir = os.path.join(tdir, "ckpt")
+    os.makedirs(ckdir)
+    pq.write_table(pa.table({"run_id": ["r"], "tier": ["1m"],
+                             "wave": pa.array([1], pa.int32()),
+                             "status": ["done"]}),
+                   os.path.join(ckdir, "ckpt-old.parquet"))
+    # n_waves=4 would raise against any recorded wave count
+    assert C.CheckpointLog(spark, ckdir).done_waves("r", "1m", n_waves=4) == {1}
+
+
 def test_drift_without_cols_rejected(spark, tdir):
     """Review r2: drift without drift_cols would silently run the synthetic
     time drift instead of the user's covariates — must be rejected."""

@@ -1,6 +1,6 @@
 """Session defaults sized from the machine: driver heap from MemAvailable,
 shuffle on /dev/shm only when it has room, a clear error instead of an
-OOM kill."""
+OOM kill. The driver JIT policy rides spark.driver.defaultJavaOptions."""
 
 import pytest
 
@@ -51,3 +51,36 @@ def test_shuffle_dir(monkeypatch):
     assert S.shuffle_dir(64 * GIB, 8 * GIB) is None
     Stat.f_bavail = (8 * GIB // 4096)
     assert S.shuffle_dir(64 * GIB, 8 * GIB) == "/dev/shm/spark_graft_local"
+
+
+def test_jit_policy_in_builder_config(monkeypatch):
+    """get_spark hands the policy to the JVM launch as defaultJavaOptions
+    and leaves extraJavaOptions to the caller; a caller's own
+    defaultJavaOptions replaces it."""
+    seen = []
+
+    def capture(self):
+        seen.append(dict(self._options))
+        raise RuntimeError("captured")
+
+    monkeypatch.setattr(S.SparkSession.Builder, "getOrCreate", capture)
+    with pytest.raises(RuntimeError, match="captured"):
+        S.get_spark("t", cores=1, extra_conf={
+            "spark.driver.extraJavaOptions": "-Dx=1"})
+    assert seen[0]["spark.driver.defaultJavaOptions"] == S.DRIVER_JIT_OPTIONS
+    assert seen[0]["spark.driver.extraJavaOptions"] == "-Dx=1"
+    with pytest.raises(RuntimeError, match="captured"):
+        S.get_spark("t", cores=1, extra_conf={
+            "spark.driver.defaultJavaOptions": "-Dy=2"})
+    assert seen[1]["spark.driver.defaultJavaOptions"] == "-Dy=2"
+    assert "spark.driver.extraJavaOptions" not in seen[1]
+
+
+def test_jit_policy_reaches_live_driver_jvm(spark):
+    """The test session comes from get_spark (conftest), so its JVM was
+    launched with the policy: HotSpot reports the raised threshold."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    assert bean.getVMOption("Tier4InvocationThreshold").getValue() == "50000"
+    assert bean.getVMOption("Tier4BackEdgeThreshold").getValue() == "400000"
