@@ -3,7 +3,7 @@
 Usage (cluster):
     spark-submit --py-files spinterps_spark.zip -m ... cli.py rollup \
         --input <transcripts path/table> --out <warehouse dir> \
-        --tiers 1m,1h,1d --fill IDW --waves 8 --salt 64 [--resume RUN_ID]
+        --tiers 1m,1h,1d --fill IDW --waves 8 [--resume RUN_ID]
 
     spark-submit --py-files spinterps_spark.zip cli.py synth \
         --turns 1000000 --out <dir>
@@ -81,15 +81,12 @@ def cmd_rollup(args) -> int:
         fill_method=args.fill,
         coords=coords,
         vg_dim=vg_dim,
-        n_salt=args.salt,
         n_waves=args.waves,
         run_id=args.resume,
-        fill_knobs={"chunk_buckets": args.chunk_buckets, "pad_buckets": args.pad_buckets},
-        fuse_fill_and_chunks=not args.materialize_filled,
+        fill_knobs={"chunk_buckets": args.chunk_buckets},
         iceberg_table=args.iceberg_table,
         drift=drift,
         drift_cols=drift_cols,
-        one_pass=not args.per_wave,
     )
     print(json.dumps(metrics))
     return 0
@@ -485,15 +482,8 @@ def main(argv=None) -> int:
                    choices=["IDW", "OK", "SK", "EDK", "IK", "NNB"])
     r.add_argument("--coords", default=None)
     r.add_argument("--vg-dim", dest="vg_dim", default=None)
-    r.add_argument("--salt", type=int, default=16)
     r.add_argument("--waves", type=int, default=4)
     r.add_argument("--chunk-buckets", type=int, default=3840)
-    r.add_argument(
-        "--materialize-filled", action="store_true",
-        help="write the filled series as parquet too (default: fused "
-        "fill+Gorilla pass; the chunk table is the tier storage)",
-    )
-    r.add_argument("--pad-buckets", type=int, default=64)
     r.add_argument("--resume", default=None, help="run_id to resume")
     r.add_argument("--iceberg-table", default=None,
                    help="tier table identifier (catalog.db.table); used when "
@@ -501,13 +491,9 @@ def main(argv=None) -> int:
                    "parquet+snapshot-sidecar seam")
     r.add_argument("--drift", default=None,
                    help="parquet of (conv_id, bucket_ts, <drift cols>) EDK "
-                   "covariates; rides the fused virtual-spine path unless "
-                   "--materialize-filled")
+                   "covariates; rides the fused virtual-spine pass")
     r.add_argument("--drift-cols", default=None,
                    help="comma-separated drift column names in --drift")
-    r.add_argument("--per-wave", action="store_true",
-                   help="run each wave as its own job (blast-radius "
-                   "isolation) instead of the one-pass partitioned write")
     r.set_defaults(fn=cmd_rollup)
 
     s = sub.add_parser("synth", help="generate deterministic transcripts")

@@ -63,48 +63,6 @@ class BitWriter:
         return bytes(self.buf)
 
 
-class VecWriter:
-    """Drop-in BitWriter replacement that DEFERS packing: write() only
-    appends (value, nbits) parts (>64-bit writes split MSB-first into
-    64-bit limbs), and bytes() emits the whole stream with one vectorized
-    numpy pass (repeat/cumsum bit expansion + packbits, MSB-first — the
-    exact BitWriter bit order, asserted identical in test_gorilla)."""
-
-    __slots__ = ("vals", "bits")
-
-    def __init__(self):
-        self.vals: list[int] = []
-        self.bits: list[int] = []
-
-    def write(self, value: int, nbits: int):
-        value &= (1 << nbits) - 1
-        while nbits > 64:
-            self.vals.append(value >> (nbits - 64))
-            self.bits.append(64)
-            nbits -= 64
-            value &= (1 << nbits) - 1
-        self.vals.append(value)
-        self.bits.append(nbits)
-
-    def bytes(self) -> bytes:
-        if not self.vals:
-            return b""
-        n_arr = np.asarray(self.bits, dtype=np.int64)
-        v_arr = np.asarray(self.vals, dtype=np.uint64)
-        total = int(n_arr.sum())
-        pad = (-total) % 8
-        if pad:
-            n_arr = np.append(n_arr, pad)
-            v_arr = np.append(v_arr, np.uint64(0))
-            total += pad
-        pid = np.repeat(np.arange(len(n_arr)), n_arr)
-        off = np.concatenate(([0], np.cumsum(n_arr)[:-1]))
-        k = np.arange(total) - off[pid]
-        shift = (n_arr[pid] - 1 - k).astype(np.uint64)
-        out_bits = ((v_arr[pid] >> shift) & np.uint64(1)).astype(np.uint8)
-        return np.packbits(out_bits).tobytes()
-
-
 class BitReader:
     __slots__ = ("data", "pos")
 
@@ -141,11 +99,9 @@ def encode_ts(ts: np.ndarray) -> bytes:
     struct); includes the first delta as a raw 64-bit field.
 
     Classification of delta-of-deltas is vectorized (np.select); the loop
-    only emits precomputed (prefix, payload) pairs; packing is the
-    vectorized VecWriter (BitWriter kept as the bit-exact reference
-    implementation, equality-tested)."""
+    only emits precomputed (prefix, payload) pairs into a BitWriter."""
     ts = np.asarray(ts, dtype=np.int64)
-    w = VecWriter()
+    w = BitWriter()
     if len(ts) < 2:
         return w.bytes()
     deltas = np.diff(ts)
@@ -220,7 +176,7 @@ def encode_vals(vals: np.ndarray) -> bytes:
     (unpackbits over the big-endian byte view); the loop only applies the
     window-control state machine and emits bits."""
     bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
-    w = VecWriter()
+    w = BitWriter()
     if len(bits) < 2:
         return w.bytes()
     xors = bits[:-1] ^ bits[1:]

@@ -521,9 +521,6 @@ def gapfill(
     coords: DataFrame | None = None,
     tier: str = "1h",
     chunk_buckets: int | None = None,
-    pad_buckets: int | None = None,
-    emit: str = "filled",
-    gorilla_chunk: int = 120,
     drift_cols: list[str] | None = None,
     vg_col: str | None = None,
     **knobs,
@@ -543,11 +540,9 @@ def gapfill(
     `spined` (join them with with_drift); m columns -> m border rows/cols
     in the kriging system. None + EDK = the synthetic linear-time drift.
 
-    emit='chunks' fuses Gorilla encoding into the same grouped pass (no
-    second shuffle of the filled series): output is the chunk-struct schema
-    of compress/gorilla.py, windows time-aligned at gorilla_chunk buckets.
-    Requires chunk_buckets % gorilla_chunk == 0 (windows nest in fill
-    chunks, so every chunk is complete within its group).
+    Emits filled rows over a materialized spine (the declared fill queries
+    read them); the retention store fills through gapfill_virtual_chunks,
+    which encodes Gorilla chunks in the same pass.
     """
     params = {**DEFAULTS, **knobs}
     secs = TIER_SECONDS[tier]
@@ -590,10 +585,8 @@ def gapfill(
         # including ones lying wholly inside a silence hole longer than the
         # chunk span — receives at least the k nearest refs on each side,
         # and per-gap neighbor selection is bit-identical to the global
-        # k-NN. (ADVICE r1: the fixed pad_buckets edge pad lost true
-        # neighbors across holes longer than the pad.) pad_buckets is
-        # retained for API compatibility but no longer used. The ref/gap
-        # split shares one shuffle via ReusedExchange — the branches are
+        # k-NN. (ADVICE r1: a fixed edge pad lost true neighbors across
+        # holes longer than the pad.) The ref/gap split shares one shuffle via ReusedExchange — the branches are
         # filters over the same child plan.
         from pyspark.sql import Window as W
 
@@ -634,9 +627,6 @@ def gapfill(
         group_cols = ["conv_id", "_chunk"]
     else:
         df = df.select("*", F.lit(0).alias("_chunk"), F.lit(False).alias("_pad"))
-
-    if emit == "chunks" and chunk_buckets and chunk_buckets % gorilla_chunk != 0:
-        raise ValueError("chunk_buckets must be a multiple of gorilla_chunk")
 
     out_schema = (
         "conv_id string, bucket_ts timestamp, value_filled double, "
@@ -695,12 +685,6 @@ def gapfill(
             est[s:e] = ev
             codes[s:e] = cd
         keep = ~column(batch, "_pad", bool)
-        if emit == "chunks":
-            gid, labels = _conv_groups(batch)
-            return _encode_filled(
-                gid[keep], labels, t_all[keep], filled[keep], tier,
-                gorilla_chunk * secs, gorilla_chunk,
-            )
         rows = np.flatnonzero(keep)
         return pa.RecordBatch.from_arrays([
             pc.take(batch.column("conv_id"), rows),
@@ -710,10 +694,6 @@ def gapfill(
             pa.array(codes[keep], type=pa.string()),
         ], schema=out_arrow)
 
-    if emit == "chunks":
-        from spinterps_spark.compress.gorilla import CHUNK_SCHEMA
-
-        return apply_grouped_batches(df, group_cols, "_t", fill_batch, CHUNK_SCHEMA)
     return apply_grouped_batches(df, group_cols, "_t", fill_batch, out_schema)
 
 
@@ -820,8 +800,8 @@ def gapfill_virtual_chunks(
 
     Output: Gorilla chunk structs (compress/gorilla.CHUNK_SCHEMA); windows
     (gorilla_chunk buckets) nest in fill chunks (chunk_buckets % gorilla_chunk
-    == 0) and the grid is tier-aligned, so chunk boundaries match the
-    materialized fused path exactly.
+    == 0) and the grid is tier-aligned, so chunks equal encode_tier_chunks
+    over the materialized gapfill output exactly.
     """
     params = {**DEFAULTS, **knobs}
     if chunk_buckets % gorilla_chunk != 0:

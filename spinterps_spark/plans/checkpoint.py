@@ -12,7 +12,9 @@ production), one lineage row per wave is appended to the checkpoint table:
 Resume = read the checkpoint table, skip waves already 'done' for the same
 (run_id, tier). Conversations are hash-assigned to waves, so a resumed run
 recomputes only the missing conversations — mid-tier resumability after
-executor loss, with per-partition metrics for free.
+executor loss, with per-partition metrics for free. All pending waves of a
+pass are written by ONE job (run_waved_pass), so a crash mid-job records
+no lineage row and a resume redoes all the waves that were pending.
 
 Scale note: waves trade a little scheduling overhead for bounded blast
 radius; at 100 TB each wave is itself thousands of tasks, so wave count
@@ -24,6 +26,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -165,9 +168,6 @@ def run_waved_pass(
     run_id: str,
     tier: str,
     n_waves: int = 4,
-    checksum_cols: list[str] | None = None,
-    count_input: bool = False,
-    one_pass: bool = True,
     wave_key: str = "conv_id",
 ) -> DataFrame:
     """Execute `transform` over conversation-hash waves, writing wave K's
@@ -175,175 +175,89 @@ def run_waved_pass(
     Already-done waves (same run_id+tier, recorded n_waves validated) are
     skipped on resume. Returns the unioned output DataFrame (read from disk).
 
-    one_pass=True (default): ONE source scan — all pending waves run as a
-    single job whose output is written partitionBy(wave) with dynamic
-    partition overwrite (done-wave directories untouched). Per-wave lineage
-    metrics ride the write job via per-wave conditional Observation
-    aggregates — no re-read, no per-wave recomputation of the upstream
-    DataFrame (the r1 design cost n_waves input scans). Requires `transform` to be
-    conversation-local (true for every tier pass: rollups/gap-fill group by
-    conv_id), since transform(union of waves) must equal union of per-wave
-    transforms. Crash mid-job -> no lineage rows -> all pending waves redo.
+    ONE source scan: all pending waves run as a single write job. Per-wave
+    lineage (rows_out, checksum) rides that job as per-wave conditional
+    Observation aggregates — no re-read, no per-wave recomputation of the
+    upstream DataFrame. Requires `transform` to be conversation-local (true
+    for every tier pass: rollups/gap-fill group by conv_id), since
+    transform(union of waves) must equal union of per-wave transforms.
+    Crash mid-job -> no lineage rows -> all pending waves redo. rows_in is
+    recorded as -1: rows_out + checksum already pin the output content.
 
-    one_pass=False: the r1 per-wave loop (n_waves source scans) for when
-    per-wave blast-radius isolation matters more than throughput.
-
-    count_input=True records exact rows_in per wave at the cost of one
-    extra aggregation over the source; default keeps lineage cheap
-    (rows_in=-1) since rows_out+checksum already pin the output content."""
+    A single pending wave (fresh n_waves=1 runs, or a resume with one wave
+    left) is written straight into its wave directory; several are written
+    partitionBy(wave) with dynamic partition overwrite (done-wave
+    directories untouched)."""
     from pyspark.sql import Observation
 
     done = ckpt.done_waves(run_id, tier, n_waves=n_waves)
     pending = [w for w in range(n_waves) if w not in done]
-    src = source.withColumn("_wave", wave_col(n_waves, wave_key))
-    if not pending:
-        return spark.read.parquet(os.path.join(out_dir, "wave=*"))
-
-    if one_pass and len(pending) == 1:
-        # single pending wave (fresh n_waves=1 runs, or a resume with one
-        # wave left): write straight into its wave directory — the
-        # partitionBy(wave) path below costs a full sort of the output by
-        # the partition column (measured ~13% of pipeline wall at 19.6M
-        # turns) for no benefit when only one partition value exists.
-        w = pending[0]
+    if pending:
         t0 = time.time()
-        sub = (
-            src.where(F.col("_wave") == w).drop("_wave")
-            if n_waves > 1 else src.drop("_wave")
-        )
+        wave = wave_col(n_waves, wave_key)
+        direct = len(pending) == 1
+        if n_waves == 1:
+            sub = source
+        elif direct:
+            sub = source.where(wave == pending[0])
+        else:
+            sub = source.where(wave.isin(pending))
         out = transform(sub)
-        cols = checksum_cols or list(out.columns)
-        h = F.xxhash64(*[F.col(c) for c in cols])
-        obs = Observation(f"{tier}-w{w}")
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("cnt"),
-            F.pmod(
-                F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0)),
-                F.lit(2**62),
-            ).cast("long").alias("checksum"),
-        )
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"wave={w}"))
-        stats = obs.get
-        ckpt.append(
-            dict(
-                run_id=run_id, tier=tier, wave=w, n_waves=n_waves,
-                status="done",
-                rows_in=sub.count() if count_input else -1,
-                rows_out=stats["cnt"],
-                checksum=stats["checksum"] if stats["checksum"] is not None else 0,
-                wall_sec=time.time() - t0,
-            )
-        )
-        return spark.read.parquet(os.path.join(out_dir, "wave=*"))
-
-    if one_pass:
-        t0 = time.time()
-        sub = src.where(F.col("_wave").isin(pending)).drop("_wave")
-        out = transform(sub).withColumn("wave", wave_col(n_waves, wave_key))
-        # per-wave lineage metrics ride the write job itself: one
-        # conditional (cnt, checksum) aggregate pair per pending wave on an
-        # Observation — no re-read of the written output (keeps the
-        # one-source-scan property this mode exists for).
-        cols = checksum_cols or [c for c in out.columns if c != "wave"]
-        h = F.xxhash64(*[F.col(c) for c in cols])
-        obs = Observation(f"{tier}-onepass")
+        schema = out.schema
+        h = F.xxhash64(*[F.col(c) for c in out.columns])
+        if not direct:
+            out = out.withColumn("wave", wave_col(n_waves, wave_key))
         aggs = []
         for w in pending:
-            is_w = F.col("wave") == w
-            aggs.append(
+            def in_w(c, w=w):
+                return c if direct else F.when(F.col("wave") == w, c)
+            aggs += [
+                F.count(in_w(F.lit(1))).alias(f"cnt{w}"),
                 # coalesce: F.sum over a zero-row write job yields NULL
-                F.coalesce(
-                    F.sum(F.when(is_w, 1).otherwise(0)), F.lit(0)
-                ).alias(f"cnt{w}")
-            )
-            aggs.append(
                 F.pmod(
-                    F.coalesce(
-                        F.sum(F.when(is_w, h).cast("decimal(38,0)")), F.lit(0)
-                    ),
+                    F.coalesce(F.sum(in_w(h).cast("decimal(38,0)")), F.lit(0)),
                     F.lit(2**62),
-                ).cast("long").alias(f"chk{w}")
-            )
+                ).cast("long").alias(f"chk{w}"),
+            ]
+        obs = Observation(f"{tier}-waves")
         out = out.observe(obs, *aggs)
-        # dynamic overwrite only replaces partitions PRESENT in the new
-        # output: clear every pending wave dir first so a pending wave that
-        # happens to produce zero rows cannot leak a previous run's data
-        # into the trailing wave=* read
-        import shutil
-
-        for w in pending:
-            shutil.rmtree(os.path.join(out_dir, f"wave={w}"), ignore_errors=True)
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("wave")
-            .parquet(out_dir)
-        )
+        if direct:
+            # no partitionBy(wave): its sort of the output by the partition
+            # column cost ~13% of pipeline wall at 19.6M turns, for no
+            # benefit when only one partition value exists
+            out.write.mode("overwrite").parquet(
+                os.path.join(out_dir, f"wave={pending[0]}"))
+        else:
+            # dynamic overwrite only replaces partitions PRESENT in the new
+            # output: clear every pending wave dir first so a pending wave
+            # that happens to produce zero rows cannot leak a previous
+            # run's data into the trailing wave=* read
+            for w in pending:
+                shutil.rmtree(os.path.join(out_dir, f"wave={w}"),
+                              ignore_errors=True)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("wave")
+                .parquet(out_dir)
+            )
         wall = time.time() - t0
-        ostats = obs.get
-        stats = {
-            w: (ostats[f"cnt{w}"] or 0, ostats[f"chk{w}"]) for w in pending
-        }
-        # empty pending waves wrote no partition dir: materialize an empty
-        # one so the final wave=* glob read always resolves
-        empty_schema = out.drop("wave").schema
+        stats = obs.get
         for w in pending:
             wdir = os.path.join(out_dir, f"wave={w}")
-            if stats[w][0] == 0 and not os.path.isdir(wdir):
-                spark.createDataFrame([], empty_schema).write.mode(
-                    "overwrite"
-                ).parquet(wdir)
-        rows_in = {}
-        if count_input:
-            rows_in = {
-                r["_wave"]: r["count"]
-                for r in src.where(F.col("_wave").isin(pending))
-                .groupBy("_wave").count().collect()
-            }
-        for w in pending:
-            cnt, chk = stats.get(w, (0, 0))
+            if not os.path.isdir(wdir):
+                # an empty pending wave wrote no partition dir: materialize
+                # an empty one so the final wave=* glob read always resolves
+                spark.createDataFrame([], schema).write.mode(
+                    "overwrite").parquet(wdir)
             ckpt.append(
                 dict(
                     run_id=run_id, tier=tier, wave=w, n_waves=n_waves,
-                    status="done",
-                    rows_in=rows_in.get(w, -1) if count_input else -1,
-                    rows_out=cnt, checksum=chk if chk is not None else 0,
-                    wall_sec=wall,  # shared job: wall of the whole pass
+                    status="done", rows_in=-1,
+                    rows_out=stats[f"cnt{w}"], checksum=stats[f"chk{w}"],
+                    wall_sec=wall,  # one job: wall of the whole pass
                 )
             )
-        return spark.read.parquet(os.path.join(out_dir, "wave=*"))
-
-    for w in pending:
-        t0 = time.time()
-        sub = src.where(F.col("_wave") == w).drop("_wave")
-        out = transform(sub)
-        # lineage metrics ride the write job itself (Observation API) —
-        # no second scan of the written output per wave.
-        cols = checksum_cols or list(out.columns)
-        h = F.xxhash64(*[F.col(c) for c in cols])
-        obs = Observation(f"{tier}-w{w}")
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("cnt"),
-            F.pmod(
-                F.coalesce(F.sum(h.cast("decimal(38,0)")), F.lit(0)),
-                F.lit(2**62),
-            ).cast("long").alias("checksum"),
-        )
-        path = os.path.join(out_dir, f"wave={w}")
-        out.write.mode("overwrite").parquet(path)
-        stats = obs.get
-        ckpt.append(
-            dict(
-                run_id=run_id, tier=tier, wave=w, n_waves=n_waves,
-                status="done",
-                rows_in=sub.count() if count_input else -1,
-                rows_out=stats["cnt"],
-                checksum=stats["checksum"] if stats["checksum"] is not None else 0,
-                wall_sec=time.time() - t0,
-            )
-        )
     return spark.read.parquet(os.path.join(out_dir, "wave=*"))
 
 

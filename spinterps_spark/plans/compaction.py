@@ -92,7 +92,6 @@ def run_compaction_pass(
     run_id: str | None = None,
     n_waves: int = 1,
     table_format=None,
-    one_pass: bool = True,
 ) -> dict:
     """Rewrite the tier's current chunk generation into ~target_file_mb
     files range-clustered on (conv_id, chunk_start_ts); publish the
@@ -152,7 +151,7 @@ def run_compaction_pass(
     gen_loc = os.path.join(out_dir, f"chunks_compacted/tier={tier}/gen={run_id}")
     compacted = run_waved_pass(
         spark, src, repack, gen_loc,
-        ckpt, run_id, stage, n_waves=n_waves, one_pass=one_pass,
+        ckpt, run_id, stage, n_waves=n_waves,
     )
     files_after = [_local_path(f) for f in compacted.inputFiles()]
     bytes_after = fmt.file_bytes(files_after)

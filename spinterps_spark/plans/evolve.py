@@ -80,7 +80,6 @@ def run_evolve_pass(
     extra_fill_metrics: dict[str, str] | None = None,
     n_waves: int = 2,
     run_id: str | None = None,
-    one_pass: bool = True,
 ) -> dict:
     """Backfill `new_metrics` ({name: SQL expression over the rollup
     columns}) into an existing store at `out_dir` and stamp the evolved
@@ -218,7 +217,7 @@ def run_evolve_pass(
             out_dir, f"chunks_evolve/tier={tier}/gen={run_id}")
         chunks = run_waved_pass(
             spark, ser, make, chunk_loc, ckpt, run_id,
-            f"evolve_chunks:{tier}", n_waves=n_waves, one_pass=one_pass,
+            f"evolve_chunks:{tier}", n_waves=n_waves,
         )
         n_chunks = chunks.count()
         cfmt.commit_tier(tier, chunks, chunk_loc, {

@@ -91,7 +91,6 @@ def run_merge_pass(
     extra_fill_metrics: dict[str, str] | None = None,
     n_waves: int = 2,
     run_id: str | None = None,
-    one_pass: bool = True,
     broadcast_overlap_limit: int = 2_000_000,
 ) -> dict:
     """Merge the stores at `src_dirs` into a NEW store at `out_dir`.
@@ -320,7 +319,7 @@ def run_merge_pass(
 
             merged = run_waved_pass(
                 spark, src, make, roll_loc, ckpt, run_id,
-                f"merge_rollup:{tier}", n_waves=n_waves, one_pass=one_pass,
+                f"merge_rollup:{tier}", n_waves=n_waves,
             )
             rfmt.commit_tier(tier, merged, roll_loc, {
                 "run_id": run_id, "stage": f"merge:{tier}", "mode": mode,
@@ -347,7 +346,6 @@ def run_merge_pass(
             copied = run_waved_pass(
                 spark, copy_src, lambda sub: sub, copy_loc, ckpt, run_id,
                 f"merge_chunks_copy:{tier}", n_waves=n_waves,
-                one_pass=one_pass,
             )
             if any(b is None for b in bounds):
                 # pre-r7 source (layout-dir base, no stamped bound): one
@@ -394,7 +392,6 @@ def run_merge_pass(
             enc = run_waved_pass(
                 spark, ser, chunk, delta_loc, ckpt, run_id,
                 f"merge_chunks_enc:{tier}", n_waves=n_waves,
-                one_pass=one_pass,
             )
             cfmt.commit_tier(tier, enc, delta_loc, {
                 "run_id": run_id, "stage": f"merge_delta:{tier}",

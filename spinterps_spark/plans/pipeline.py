@@ -1,12 +1,12 @@
 """End-to-end retention pipeline: the engine's flagship entry point.
 
-transcripts -> 1m/1h/1d rollups -> spine -> gap-fill -> Gorilla chunks,
-each tier pass checkpointed and resumable (plans/checkpoint.py).
+transcripts -> 1m/1h/1d rollups -> virtual-spine gap-fill fused with the
+Gorilla encode -> chunks, each tier pass checkpointed and resumable (plans/checkpoint.py).
 
 This is the Spark translation of SpInterpMain.interpolate()
 (SURVEY.md §3.1): the reference's `_interp_args` logical-plan list becomes
 the `tiers`/`fill_method` arguments; its memory-planned mp.Pool chunking
-becomes AQE + salted repartition + wave checkpoints; its lock-serialized
+becomes AQE + conversation-hash wave checkpoints; its lock-serialized
 netCDF writes become per-wave parquet (Iceberg in production) commits.
 """
 
@@ -19,10 +19,8 @@ import time
 from pyspark.sql import DataFrame, functions as F
 
 from spinterps_spark import TIERS
-from spinterps_spark.compress.gorilla import encode_tier_chunks
-from spinterps_spark.operators.gapfill import gapfill, gapfill_virtual_chunks
+from spinterps_spark.operators.gapfill import gapfill_virtual_chunks
 from spinterps_spark.operators.rollup import base_rollup, rollup_tier
-from spinterps_spark.operators.spine import with_spine
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
 from spinterps_spark.sources.tableformat import tier_tables
 
@@ -75,29 +73,25 @@ def run_retention_pipeline(
     n_waves: int = 4,
     run_id: str | None = None,
     min_cnt: dict | None = None,
-    gorilla: bool = True,
     fill_knobs: dict | None = None,
     n_turns_hint: int | None = None,
-    fuse_fill_and_chunks: bool = False,
+    fuse_fill_and_chunks: bool = True,
     table_format=None,
     iceberg_table: str | None = None,
     drift: DataFrame | None = None,
     drift_cols: list[str] | None = None,
-    one_pass: bool = True,
     extra_fill_metrics: dict[str, str] | None = None,
 ) -> dict:
     """Run (or resume) the full tier cascade. Returns a metrics dict.
 
     extra_fill_metrics: {metric_name: SQL expression over the rollup
     columns} — fill k metrics through the ONE fused pass (the chunk
-    table gains a `metric` column; primary = fill_metric). Requires the
-    fused+gorilla path; k metrics cost one scan/shuffle/kernel, with the
-    kriging solve shared across them (operators/gapfill.py
-    gapfill_virtual_chunks extra_value_cols).
+    table gains a `metric` column; primary = fill_metric). k metrics cost
+    one scan/shuffle/kernel, with the kriging solve shared across them
+    (operators/gapfill.py gapfill_virtual_chunks extra_value_cols).
 
     Layout under out_dir:
         rollup/tier=<t>/wave=<k>/*.parquet   rolled-up buckets
-        filled/tier=<t>/wave=<k>/*.parquet   gap-filled series
         chunks/tier=<t>/wave=<k>/*.parquet   Gorilla chunk structs
         rollup/_snapshots.jsonl               tier commits + run settings
         ckpt/*.parquet                        lineage + metrics rows
@@ -107,7 +101,21 @@ def run_retention_pipeline(
     with run settings in the snapshot summary when the runtime is present,
     parquet + _snapshots.jsonl metadata commits otherwise. Resume first
     consults the snapshot log (whole-tier skip), then the wave checkpoints
-    (partial-tier skip)."""
+    (partial-tier skip).
+
+    Every tier writes rollup/ and chunks/ through the one fused
+    virtual-spine fill+encode pass; fuse_fill_and_chunks=False (the
+    removed materialized-spine path) raises."""
+    # n_salt, fill_knobs["pad_buckets"] and fuse_fill_and_chunks=True are
+    # accepted and ignored for the frozen callers bench.py and
+    # perfbench/harness.py (queries.py passes n_salt to base_rollup, which
+    # drops it too).
+    if not fuse_fill_and_chunks:
+        raise ValueError(
+            "fuse_fill_and_chunks=False selected the materialized-spine "
+            "fill path (a filled/ table), which was removed; the fused "
+            "virtual-spine pass is the only fill path"
+        )
     if (drift is None) != (not drift_cols):
         raise ValueError(
             "drift and drift_cols go together: a drift table without "
@@ -129,9 +137,9 @@ def run_retention_pipeline(
         spark, os.path.join(out_dir, "rollup"), iceberg_table
     )
     run_props = dict(
-        run_id=run_id, n_waves=n_waves, n_salt=n_salt,
+        run_id=run_id, n_waves=n_waves,
         fill_method=fill_method, fill_metric=fill_metric,
-        tiers=",".join(tiers), fused=fuse_fill_and_chunks,
+        tiers=",".join(tiers),
         # the store's metric set travels with the data (settings-as-
         # attributes rule): refresh validates its own metric set against
         # this, because latest-wins replaces ALL of a refreshed conv's
@@ -141,13 +149,11 @@ def run_retention_pipeline(
             [fill_metric, *sorted(extra_fill_metrics or {})]),
     )
     min_cnt = min_cnt or {}
-    fill_knobs = fill_knobs or {}
+    project, chunker = fused_fill_builder(
+        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
+        fill_knobs or {}, dict(extra_fill_metrics or {}),
+    )
     t_start = time.time()
-    if extra_fill_metrics and not (fuse_fill_and_chunks and gorilla):
-        raise ValueError(
-            "extra_fill_metrics requires the fused gorilla path "
-            "(fuse_fill_and_chunks=True, gorilla=True)"
-        )
     metrics = {"run_id": run_id, "tiers": {}}
 
     # avoid a dedicated count scan when the caller already knows the volume
@@ -159,8 +165,7 @@ def run_retention_pipeline(
         t0 = time.time()
         if lower is None:
             def make(sub, _tier=tier):
-                return base_rollup(sub, _tier, n_salt=n_salt,
-                                   min_cnt=min_cnt.get(_tier))
+                return base_rollup(sub, _tier, min_cnt=min_cnt.get(_tier))
             src = transcripts
         else:
             def make(sub, _tier=tier):
@@ -175,62 +180,20 @@ def run_retention_pipeline(
         else:
             rolled = run_waved_pass(
                 spark, src, make, tier_loc,
-                ckpt, run_id, stage, n_waves=n_waves, one_pass=one_pass,
+                ckpt, run_id, stage, n_waves=n_waves,
             )
             fmt.commit_tier(tier, rolled, tier_loc,
                             {**run_props, "stage": stage})
 
-        if fuse_fill_and_chunks and gorilla:
-            # one grouped pass over the VIRTUAL spine: gap grid points are
-            # generated inside the kernel from conversation bounds, so the
-            # ~30x NULL-row spine inflation never hits the shuffle or the
-            # Arrow boundary; output is the Gorilla chunk table directly.
-            project, chunker = fused_fill_builder(
-                fill_metric, fill_method, coords, vg_dim, drift,
-                drift_cols, fill_knobs, dict(extra_fill_metrics or {}),
-            )
-            valid_ser = project(rolled.where(F.col("valid")))
-            fill_chunk = chunker(tier)
-
-            run_waved_pass(
-                spark, valid_ser, fill_chunk,
-                os.path.join(out_dir, f"chunks/tier={tier}"),
-                ckpt, run_id, f"chunks:{tier}", n_waves=n_waves, one_pass=one_pass,
-            )
-        else:
-            spined = with_spine(rolled, tier)
-            ser = spined.select(
-                "conv_id", "bucket_ts",
-                (F.col("tok_len_sum") / F.col("turn_cnt")).alias(fill_metric),
-            )
-            if drift is not None:
-                from spinterps_spark.operators.gapfill import with_drift
-
-                ser = with_drift(ser, drift, drift_cols or [])
-
-            def fill(sub, _tier=tier):
-                return gapfill(
-                    sub, fill_metric, method=fill_method, tier=_tier,
-                    coords=coords, vg_dim=vg_dim,
-                    drift_cols=drift_cols if drift is not None else None,
-                    **fill_knobs,
-                )
-
-            filled = run_waved_pass(
-                spark, ser, fill, os.path.join(out_dir, f"filled/tier={tier}"),
-                ckpt, run_id, f"filled:{tier}", n_waves=n_waves, one_pass=one_pass,
-            )
-
-            if gorilla:
-                def chunk(sub, _tier=tier):
-                    return encode_tier_chunks(
-                        sub.where(F.col("value_filled").isNotNull()), _tier
-                    )
-
-                run_waved_pass(
-                    spark, filled, chunk, os.path.join(out_dir, f"chunks/tier={tier}"),
-                    ckpt, run_id, f"chunks:{tier}", n_waves=n_waves, one_pass=one_pass,
-                )
+        # one grouped pass over the VIRTUAL spine: gap grid points are
+        # generated inside the kernel from conversation bounds, so the
+        # ~30x NULL-row spine inflation never hits the shuffle or the
+        # Arrow boundary; output is the Gorilla chunk table directly.
+        run_waved_pass(
+            spark, project(rolled.where(F.col("valid"))), chunker(tier),
+            os.path.join(out_dir, f"chunks/tier={tier}"),
+            ckpt, run_id, f"chunks:{tier}", n_waves=n_waves,
+        )
 
         metrics["tiers"][tier] = {"wall_sec": time.time() - t0}
         lower = rolled

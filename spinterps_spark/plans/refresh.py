@@ -79,11 +79,9 @@ def run_refresh_pass(
     coords: DataFrame | None = None,
     vg_dim: DataFrame | None = None,
     min_cnt: dict | None = None,
-    n_salt: int = 16,
     n_waves: int = 2,
     run_id: str | None = None,
     fill_knobs: dict | None = None,
-    one_pass: bool = True,
     drift: DataFrame | None = None,
     drift_cols: list[str] | None = None,
     extra_fill_metrics: dict[str, str] | None = None,
@@ -197,7 +195,7 @@ def run_refresh_pass(
                         f"{out_dir} — run the pipeline first"
                     )
                 old_aff = old.join(F.broadcast(convs), "conv_id", "semi")
-                delta = base_rollup(new_turns, tier, n_salt=n_salt, min_cnt=mc)
+                delta = base_rollup(new_turns, tier, min_cnt=mc)
 
                 def make(sub, _old=old_aff, _mc=mc):
                     # waves split by conv hash; the merge groups by conv, so
@@ -212,7 +210,7 @@ def run_refresh_pass(
 
                 merged = run_waved_pass(
                     spark, delta, make, roll_loc, ckpt, run_id,
-                    f"refresh_rollup:{tier}", n_waves=n_waves, one_pass=one_pass,
+                    f"refresh_rollup:{tier}", n_waves=n_waves,
                 )
             else:
                 # coarser tiers recompute from the merged finer tier
@@ -222,7 +220,7 @@ def run_refresh_pass(
 
                 merged = run_waved_pass(
                     spark, lower_merged, make, roll_loc, ckpt, run_id,
-                    f"refresh_rollup:{tier}", n_waves=n_waves, one_pass=one_pass,
+                    f"refresh_rollup:{tier}", n_waves=n_waves,
                 )
             rfmt.commit_tier(tier, merged, roll_loc, {
                 "run_id": run_id, "stage": stage,
@@ -268,7 +266,7 @@ def run_refresh_pass(
 
             chunks = run_waved_pass(
                 spark, ser, chunk, chunk_loc, ckpt, run_id,
-                f"refresh_chunks:{tier}", n_waves=n_waves, one_pass=one_pass,
+                f"refresh_chunks:{tier}", n_waves=n_waves,
             )
             cfmt.commit_tier(tier, chunks, chunk_loc, {
                 "run_id": run_id, "stage": stage,

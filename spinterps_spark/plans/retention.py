@@ -69,7 +69,6 @@ def run_retention_pass(
     run_id: str | None = None,
     n_waves: int = 4,
     table_format=None,
-    one_pass: bool = True,
 ) -> dict:
     """Drop every chunk of `chunks/tier=<tier>` whose whole window lies
     before `horizon_ts` (epoch seconds); publish the retained generation.
@@ -135,7 +134,7 @@ def run_retention_pass(
     gen_loc = os.path.join(out_dir, f"chunks_retained/tier={tier}/gen={run_id}")
     retained = run_waved_pass(
         spark, src.where(keep_pred), lambda sub: sub, gen_loc,
-        ckpt, run_id, stage, n_waves=n_waves, one_pass=one_pass,
+        ckpt, run_id, stage, n_waves=n_waves,
     )
     commit_id = fmt.commit_tier(
         tier, retained, gen_loc,

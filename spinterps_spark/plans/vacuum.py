@@ -76,7 +76,6 @@ def run_flatten_pass(
     table: str = "rollup",
     run_id: str | None = None,
     n_waves: int = 4,
-    one_pass: bool = True,
 ) -> dict:
     """Fold a tier's refresh-delta chain into one new full generation.
 
@@ -142,7 +141,7 @@ def run_flatten_pass(
     flat = run_waved_pass(
         spark, src, lambda sub: sub, gen_loc,
         ckpt, run_id, f"flatten_{table}:{tier}",
-        n_waves=n_waves, one_pass=one_pass,
+        n_waves=n_waves,
     )
     props = {"run_id": run_id, "stage": stage,
              "n_deltas_folded": len(deltas)}

@@ -24,7 +24,6 @@ def piped(spark, tmp_path_factory):
     tdir = str(tmp_path_factory.mktemp("compaction"))
     t = datagen.transcripts_spark(spark, seed=21, n_turns_target=4000)
     run_retention_pipeline(spark, t, tdir, tiers=("1m",), n_waves=4,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     return tdir
 
@@ -130,7 +129,6 @@ def test_compaction_composes_with_retention(spark, tmp_path):
     tdir = str(tmp_path)
     t = datagen.transcripts_spark(spark, seed=22, n_turns_target=2500)
     run_retention_pipeline(spark, t, tdir, tiers=("1m",), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     pdf = _points(spark, tdir, "1m")
     horizon = int((pdf["bucket_ts"].astype("int64") // 10**9).quantile(0.5))

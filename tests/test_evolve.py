@@ -43,14 +43,12 @@ def test_evolve_equals_from_scratch_rebuild(spark, tmp_path):
     t = datagen.transcripts_spark(spark, seed=61, n_turns_target=2000)
     da, db = str(tmp_path / "evolved"), str(tmp_path / "scratch")
     run_retention_pipeline(spark, t, da, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics=M2)
     m = run_evolve_pass(spark, da, new_metrics=M3, tiers=(TIER,),
                         extra_fill_metrics=M2, n_waves=2, run_id="ev")
     assert m["tiers"][TIER]["commit"] == "published"
     assert m["tiers"][TIER]["n_chunks"] > 0
     run_retention_pipeline(spark, t, db, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics={**M2, **M3})
     got, want = _pts(spark, da), _pts(spark, db)
     assert set(got["metric"].unique()) == {
@@ -72,13 +70,10 @@ def test_evolve_single_metric_store_pads_base(spark, tmp_path):
     and the result equals a 2-metric rebuild."""
     t = datagen.transcripts_spark(spark, seed=67, n_turns_target=1500)
     da, db = str(tmp_path / "evolved"), str(tmp_path / "scratch")
-    run_retention_pipeline(spark, t, da, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
-                           run_id="p0")
+    run_retention_pipeline(spark, t, da, tiers=(TIER,), n_waves=2, run_id="p0")
     run_evolve_pass(spark, da, new_metrics=M2, tiers=(TIER,), n_waves=2,
                     run_id="ev")
     run_retention_pipeline(spark, t, db, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics=M2)
     pd.testing.assert_frame_equal(_pts(spark, da), _pts(spark, db),
                                   check_exact=True)
@@ -96,8 +91,7 @@ def test_refresh_accepts_evolved_set_and_rejects_old(spark, tmp_path):
         F.unix_timestamp("ts") >= cut)
     da, db = str(tmp_path / "evolved"), str(tmp_path / "scratch")
     run_retention_pipeline(spark, t.where(~pred), da, tiers=(TIER,),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0",
+                           n_waves=2, run_id="p0",
                            extra_fill_metrics=M2)
     run_evolve_pass(spark, da, new_metrics=M3, tiers=(TIER,),
                     extra_fill_metrics=M2, n_waves=2, run_id="ev")
@@ -107,7 +101,6 @@ def test_refresh_accepts_evolved_set_and_rejects_old(spark, tmp_path):
     run_refresh_pass(spark, t.where(pred), da, tiers=(TIER,), n_waves=2,
                      run_id="r2", extra_fill_metrics={**M2, **M3})
     run_retention_pipeline(spark, t, db, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics={**M2, **M3})
     pd.testing.assert_frame_equal(_pts(spark, da), _pts(spark, db),
                                   check_exact=True)
@@ -125,8 +118,7 @@ def test_evolve_respects_retention_horizon(spark, tmp_path):
     da, db = str(tmp_path / "evolved"), str(tmp_path / "scratch")
     for d in (da, db):
         run_retention_pipeline(
-            spark, t, d, tiers=(TIER,), n_waves=2, gorilla=True,
-            fuse_fill_and_chunks=True, run_id="p0",
+            spark, t, d, tiers=(TIER,), n_waves=2, run_id="p0",
             extra_fill_metrics=M2 if d == da else {**M2, **M3})
     run_retention_pass(spark, da, TIER, int(mid), run_id="ret", n_waves=2)
     run_evolve_pass(spark, da, new_metrics=M3, tiers=(TIER,),
@@ -147,7 +139,6 @@ def test_evolve_resume_converges_after_lost_meta_stamp(spark, tmp_path):
     t = datagen.transcripts_spark(spark, seed=79, n_turns_target=1000)
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t, d, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics=M2)
     run_evolve_pass(spark, d, new_metrics=M3, tiers=(TIER,),
                     extra_fill_metrics=M2, n_waves=2, run_id="ev")
@@ -177,7 +168,6 @@ def test_evolve_input_guards(spark, tmp_path):
     t = datagen.transcripts_spark(spark, seed=83, n_turns_target=600)
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t, d, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="p0", extra_fill_metrics=M2)
     with pytest.raises(ValueError, match="nothing to evolve"):
         run_evolve_pass(spark, d, new_metrics={}, tiers=(TIER,),

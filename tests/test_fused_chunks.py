@@ -1,53 +1,37 @@
 import numpy as np
+import pandas as pd
 
 from spinterps_spark import datagen
 from spinterps_spark.compress.gorilla import decode_tier_chunks, encode_tier_chunks
 from spinterps_spark.operators import gapfill as G
 from spinterps_spark.operators import rollup as R
 from spinterps_spark.operators import spine as S
-
-
-def _ser(spark):
-    t = datagen.transcripts_spark(spark, seed=42, n_turns_target=3000)
-    h1 = R.rollup_tier(R.base_rollup(t, "1m"), "1h", min_cnt=1)
-    return S.with_spine(h1, "1h").selectExpr(
-        "conv_id", "bucket_ts", "tok_len_sum/turn_cnt AS v"
-    )
+from tests.test_virtual_spine import assert_chunks_equal_filled
 
 
 def test_fused_equals_separate(spark):
-    ser = _ser(spark)
-    ser.persist()
+    """The fused virtual-spine pass == materialized fill, then encode:
+    the decoded points equal the gapfill rows bit-for-bit, and the chunk
+    rows (windows, streams) equal encode_tier_chunks of those rows."""
+    t = datagen.transcripts_spark(spark, seed=42, n_turns_target=3000)
+    h1 = R.rollup_tier(R.base_rollup(t, "1m"), "1h", min_cnt=1)
+    h1.persist()
+    valid = h1.selectExpr("conv_id", "bucket_ts", "tok_len_sum/turn_cnt AS v")
+    ser = S.with_spine(h1, "1h").selectExpr(
+        "conv_id", "bucket_ts", "tok_len_sum/turn_cnt AS v"
+    )
     # separate: fill -> encode (two shuffles)
-    filled = G.gapfill(ser, "v", method="IDW", tier="1h",
-                       chunk_buckets=3840, pad_buckets=64)
+    filled = G.gapfill(ser, "v", method="IDW", tier="1h", chunk_buckets=3840)
     sep = encode_tier_chunks(filled.where("value_filled IS NOT NULL"), "1h")
-    # fused: one grouped pass
-    fus = G.gapfill(ser, "v", method="IDW", tier="1h",
-                    chunk_buckets=3840, pad_buckets=64, emit="chunks")
-
-    a = (
-        decode_tier_chunks(sep).toPandas()
-        .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
-    )
-    b = (
-        decode_tier_chunks(fus).toPandas()
-        .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
-    )
-    assert len(a) == len(b)
-    assert (a["bucket_ts"].to_numpy() == b["bucket_ts"].to_numpy()).all()
-    av, bv = a["value"].to_numpy(), b["value"].to_numpy()
-    assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()
-    ser.unpersist()
-
-
-def test_fused_requires_aligned_chunks(spark):
-    ser = _ser(spark)
-    import pytest
-
-    with pytest.raises(ValueError):
-        G.gapfill(ser, "v", method="IDW", tier="1h",
-                  chunk_buckets=1000, emit="chunks")
+    # fused: one grouped pass, no materialized spine
+    fus = G.gapfill_virtual_chunks(valid, "v", method="IDW", tier="1h",
+                                   chunk_buckets=3840)
+    assert_chunks_equal_filled(fus, filled)
+    key = ["conv_id", "chunk_start_ts"]
+    a = sep.toPandas().sort_values(key).reset_index(drop=True)
+    b = fus.select(*sep.columns).toPandas().sort_values(key).reset_index(drop=True)
+    pd.testing.assert_frame_equal(a, b)
+    h1.unpersist()
 
 
 def _rollup_metrics(spark):

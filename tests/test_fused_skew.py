@@ -12,8 +12,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from spinterps_spark.compress.gorilla import decode_tier_chunks
 from spinterps_spark.operators import gapfill as G
+from tests.test_virtual_spine import assert_chunks_equal_filled
 
 T0 = 1_700_000_000 - (1_700_000_000 % 60)
 N_SPAN = 1_050_000        # minute buckets spanned by the mega conversation
@@ -88,15 +88,8 @@ def test_fused_mega_matches_materialized_oracle(spark, fixture_df):
     )
     spined = grid.join(df, ["conv_id", "bucket_ts"], "left")
 
-    mat = G.gapfill(spined, "v", method="IDW", tier="1m", emit="chunks")
+    mat = G.gapfill(spined, "v", method="IDW", tier="1m")
     vir = G.gapfill_virtual_chunks(df, "v", method="IDW", tier="1m",
                                    chunk_buckets=CHUNK_BUCKETS)
-    a = (decode_tier_chunks(mat).toPandas()
-         .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True))
-    c = (decode_tier_chunks(vir).toPandas()
-         .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True))
-    assert len(a) == len(c)
+    a = assert_chunks_equal_filled(vir, mat)
     assert (a["conv_id"] == "mega").sum() >= 10**6
-    assert (a["bucket_ts"].to_numpy() == c["bucket_ts"].to_numpy()).all()
-    av, cv = a["value"].to_numpy(), c["value"].to_numpy()
-    assert ((av == cv) | (np.isnan(av) & np.isnan(cv))).all()

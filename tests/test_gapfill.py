@@ -198,7 +198,7 @@ def test_chunked_equals_unchunked(spark):
     b = (
         G.gapfill(
             spined, "tok_len_mean", method="IDW", tier="1h",
-            chunk_buckets=256, pad_buckets=64,
+            chunk_buckets=256,
         )
         .toPandas().sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
     )

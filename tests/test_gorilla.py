@@ -45,27 +45,6 @@ def test_dod_roundtrip_any_deltas(deltas):
     assert (t2 == ts).all()
 
 
-@settings(max_examples=200, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=(1 << 80) - 1),
-            st.integers(min_value=1, max_value=80),
-        ),
-        min_size=0, max_size=40,
-    )
-)
-def test_vecwriter_matches_bitwriter(parts):
-    """VecWriter (deferred vectorized packbits) must produce the exact
-    BitWriter byte stream for any (value, nbits) sequence incl. >64-bit
-    writes and non-byte-aligned tails."""
-    a, b = GZ.BitWriter(), GZ.VecWriter()
-    for v, n in parts:
-        a.write(v, n)
-        b.write(v, n)
-    assert a.bytes() == b.bytes()
-
-
 def test_constant_series_compresses_hard():
     ts = np.arange(0, 120 * 60, 60, dtype=np.int64)
     vs = np.full(120, 42.5)

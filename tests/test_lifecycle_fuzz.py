@@ -70,7 +70,6 @@ def test_random_maintenance_interleavings_preserve_the_view(
     for i, src in enumerate(unions):
         gdir = str(tmp_path / f"gt{i}")
         run_retention_pipeline(spark, src, gdir, tiers=(TIER,), n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                run_id="gt")
         gt_pts.append(_pts(spark, gdir))
 
@@ -84,13 +83,11 @@ def test_random_maintenance_interleavings_preserve_the_view(
     for i, p in enumerate(preds):
         sdir = str(tmp_path / f"slice{i}")
         run_retention_pipeline(spark, t.where(p), sdir, tiers=(TIER,),
-                               n_waves=2, gorilla=True,
-                               fuse_fill_and_chunks=True, run_id="gt")
+                               n_waves=2, run_id="gt")
         slice_stores.append(sdir)
 
     d = str(tmp_path / "store")
     run_retention_pipeline(spark, rest, d, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="boot")
     from spinterps_spark.plans.evolve import run_evolve_pass
 
@@ -103,8 +100,7 @@ def test_random_maintenance_interleavings_preserve_the_view(
         if i not in gt_ev_pts:
             gdir = str(tmp_path / f"gtev{i}")
             run_retention_pipeline(
-                spark, unions[i], gdir, tiers=(TIER,), n_waves=2,
-                gorilla=True, fuse_fill_and_chunks=True, run_id="gt",
+                spark, unions[i], gdir, tiers=(TIER,), n_waves=2, run_id="gt",
                 extra_fill_metrics=MX)
             gt_ev_pts[i] = _pts(spark, gdir)
         return gt_ev_pts[i]
@@ -127,8 +123,7 @@ def test_random_maintenance_interleavings_preserve_the_view(
             if ingested >= len(preds):
                 continue
             run_refresh_pass(spark, t.where(preds[ingested]), d,
-                             tiers=(TIER,), n_waves=2,
-                             run_id=f"r{step}",
+                             tiers=(TIER,), n_waves=2, run_id=f"r{step}",
                              extra_fill_metrics=MX if evolved else None)
             ingested += 1
         elif op == "merge_ingest":
@@ -202,14 +197,12 @@ def test_random_interleavings_with_retention_horizons(spark, tmp_path):
     for i, src in enumerate(unions):
         gdir = str(tmp_path / f"gt{i}")
         run_retention_pipeline(spark, src, gdir, tiers=(TIER,), n_waves=2,
-                               fill_method="IDW", gorilla=True,
-                               fuse_fill_and_chunks=True, run_id="gt")
+                               fill_method="IDW", run_id="gt")
         gt_pts.append(_pts(spark, gdir))
 
     d = str(tmp_path / "store")
     run_retention_pipeline(spark, rest, d, tiers=(TIER,), n_waves=2,
-                           fill_method="IDW", gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="boot")
+                           fill_method="IDW", run_id="boot")
 
     span = 120 * 60  # DEFAULT_CHUNK x 1m tier seconds
     # monotone horizon ladder inside the data range, bucket-aligned
@@ -224,8 +217,7 @@ def test_random_interleavings_with_retention_horizons(spark, tmp_path):
             gdir = str(tmp_path / f"gtev{i}")
             run_retention_pipeline(
                 spark, unions[i], gdir, tiers=(TIER,), n_waves=2,
-                fill_method="IDW", gorilla=True, fuse_fill_and_chunks=True,
-                run_id="gt", extra_fill_metrics=MX)
+                fill_method="IDW", run_id="gt", extra_fill_metrics=MX)
             gt_ev_pts[i] = _pts(spark, gdir)
         return gt_ev_pts[i]
 
@@ -256,8 +248,7 @@ def test_random_interleavings_with_retention_horizons(spark, tmp_path):
             if ingested >= len(slices):
                 continue
             run_refresh_pass(spark, slices[ingested], d, tiers=(TIER,),
-                             n_waves=2, fill_method="IDW",
-                             run_id=f"r{step}",
+                             n_waves=2, fill_method="IDW", run_id=f"r{step}",
                              extra_fill_metrics=MX if evolved else None)
             for c in slice_convs[ingested]:
                 refresh_hz[c] = hz_committed
@@ -336,13 +327,11 @@ def test_concurrent_refreshes_and_flatten_lose_nothing(spark, tmp_path):
 
     gdir = str(tmp_path / "gt")
     run_retention_pipeline(spark, t, gdir, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="gt")
     want = _pts(spark, gdir)
 
     d = str(tmp_path / "store")
     run_retention_pipeline(spark, rest, d, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="boot")
 
     errs = []

@@ -41,8 +41,7 @@ def _roll(spark, d, tier):
 
 def _build(spark, src, d, **kw):
     run_retention_pipeline(
-        spark, src, d, tiers=TIERS, n_waves=2, gorilla=True,
-        fuse_fill_and_chunks=True, run_id="gt", **kw)
+        spark, src, d, tiers=TIERS, n_waves=2, run_id="gt", **kw)
 
 
 @pytest.fixture(scope="module")
@@ -407,7 +406,6 @@ def test_merge_ok_kriging_equals_full_rebuild(spark, tmp_path):
     kw = dict(fill_method="OK", coords=coords, vg_dim=vg)
     for d, src in ((da, t.where(pa)), (db, t.where(~pa)), (df_, t)):
         run_retention_pipeline(spark, src, d, tiers=("1m",), n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                run_id="gt", **kw)
     m = run_merge_pass(spark, [da, db], dm, tiers=("1m",), n_waves=2,
                        run_id="mg", **kw)

@@ -6,6 +6,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
+from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.operators.spine import with_spine
 from spinterps_spark.plans import checkpoint as C
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 
@@ -17,17 +19,24 @@ def tdir(tmp_path):
 
 def test_pipeline_end_to_end(spark, tdir):
     t = datagen.transcripts_spark(spark, seed=42, n_turns_target=3000)
-    m = run_retention_pipeline(spark, t, tdir, n_waves=2, gorilla=True)
+    m = run_retention_pipeline(spark, t, tdir, n_waves=2)
     assert m["n_turns"] > 2000
     assert set(m["tiers"]) == {"1m", "1h", "1d"}
     for tier in ("1m", "1h", "1d"):
         assert glob.glob(os.path.join(tdir, f"rollup/tier={tier}/wave=*/*.parquet"))
         assert glob.glob(os.path.join(tdir, f"chunks/tier={tier}/wave=*/*.parquet"))
     ck = spark.read.parquet(os.path.join(tdir, "ckpt"))
-    assert ck.where("status = 'done'").count() == 3 * 3 * 2  # stages*tiers*waves
-    # no gaps left in the filled 1h series
-    filled = spark.read.parquet(os.path.join(tdir, "filled/tier=1h/wave=*"))
-    assert filled.where("value_filled IS NULL").count() == 0
+    assert ck.where("status = 'done'").count() == 2 * 3 * 2  # stages*tiers*waves
+    assert sorted(os.listdir(tdir)) == ["chunks", "ckpt", "rollup"]
+    # no gaps left: the decoded 1h chunks hold one non-NaN point per bucket
+    # of the spine over the valid 1h rollup rows
+    h1 = spark.read.parquet(os.path.join(tdir, "rollup/tier=1h/wave=*"))
+    spine = with_spine(h1.where("valid"), "1h").select("conv_id", "bucket_ts")
+    pts = decode_tier_chunks(
+        spark.read.parquet(os.path.join(tdir, "chunks/tier=1h/wave=*")))
+    assert pts.where(F.isnan("value")).count() == 0
+    assert pts.count() == spine.count() > 0
+    assert pts.select("conv_id", "bucket_ts").exceptAll(spine).count() == 0
 
 
 def test_resume_skips_done_waves_and_matches_single_shot(spark, tdir):
@@ -35,14 +44,14 @@ def test_resume_skips_done_waves_and_matches_single_shot(spark, tdir):
 
     full_dir = os.path.join(tdir, "full")
     run_retention_pipeline(spark, t, full_dir, tiers=("1m",), n_waves=2,
-                           gorilla=False, run_id="r1")
+                           run_id="r1")
 
     # simulate a crash: keep wave 0 outputs + its checkpoint rows, drop wave 1
     resume_dir = os.path.join(tdir, "resume")
     run_retention_pipeline(spark, t, resume_dir, tiers=("1m",), n_waves=2,
-                           gorilla=False, run_id="r2")
+                           run_id="r2")
     import shutil
-    for stage in ("rollup/tier=1m", "filled/tier=1m"):
+    for stage in ("rollup/tier=1m", "chunks/tier=1m"):
         shutil.rmtree(os.path.join(resume_dir, stage, "wave=1"))
     # a real mid-tier crash happens BEFORE the tier's snapshot commit, so
     # the simulated crash must also drop the tier-table commit record
@@ -56,16 +65,15 @@ def test_resume_skips_done_waves_and_matches_single_shot(spark, tdir):
 
     # resume with the same run_id: only wave 1 recomputed
     run_retention_pipeline(spark, t, resume_dir, tiers=("1m",), n_waves=2,
-                           gorilla=False, run_id="r2")
+                           run_id="r2")
 
-    a = (
-        spark.read.parquet(os.path.join(full_dir, "filled/tier=1m/wave=*"))
+    a, b = (
+        decode_tier_chunks(
+            spark.read.parquet(os.path.join(d, "chunks/tier=1m/wave=*")))
         .orderBy("conv_id", "bucket_ts").toPandas()
+        for d in (full_dir, resume_dir)
     )
-    b = (
-        spark.read.parquet(os.path.join(resume_dir, "filled/tier=1m/wave=*"))
-        .orderBy("conv_id", "bucket_ts").toPandas()
-    )
+    assert len(a) > 0
     pd.testing.assert_frame_equal(a, b)
 
     # wave 0 was not recomputed: exactly one 'done' row per (stage, wave 0)
@@ -118,9 +126,18 @@ def test_drift_without_cols_rejected(spark, tdir):
     drift = t.select("conv_id", F.col("ts").alias("bucket_ts"))
     with pytest.raises(ValueError, match="drift and drift_cols go together"):
         run_retention_pipeline(
-            spark, t, tdir, tiers=("1m",), gorilla=False,
-            fuse_fill_and_chunks=False, drift=drift,
+            spark, t, tdir, tiers=("1m",), drift=drift,
         )
+
+
+def test_materialized_fill_path_rejected(spark, tdir):
+    """The materialized-spine fill path (a filled/ table) was removed:
+    asking for it fails loudly instead of silently running the fused pass."""
+    t = datagen.transcripts_spark(spark, seed=1, n_turns_target=500)
+    with pytest.raises(ValueError, match="removed"):
+        run_retention_pipeline(spark, t, tdir, tiers=("1m",),
+                               fuse_fill_and_chunks=False)
+    assert not os.path.exists(os.path.join(tdir, "rollup"))
 
 
 def test_one_pass_empty_wave_no_stale_data(spark, tdir):
@@ -148,6 +165,50 @@ def test_one_pass_empty_wave_no_stale_data(spark, tdir):
     assert empty.count() == 0  # no stale rows from rA leak through
     rows = ck2.read().where("run_id = 'rB' and status = 'done'").collect()
     assert len(rows) == 2 and all(r.rows_out == 0 for r in rows)
+
+
+def test_waved_pass_write_paths_agree(spark, tdir):
+    """One run_waved_pass over the same source gives the same output and
+    the same per-wave (rows_out, checksum) lineage whichever write it
+    takes: n_waves=1 (direct), n_waves=2 fresh (partitioned by wave), and
+    n_waves=2 resumed with one wave pending (direct into wave=1)."""
+    import shutil
+
+    src = spark.range(500).selectExpr("concat('c', id % 37) AS conv_id",
+                                      "id AS x")
+
+    def transform(d):  # conversation-local, like every tier pass
+        return d.groupBy("conv_id").agg(F.sum("x").alias("s"),
+                                        F.count("*").alias("n"))
+
+    def run(name, n_waves, done0=None):
+        out = os.path.join(tdir, name)
+        ck = C.CheckpointLog(spark, os.path.join(tdir, f"ck_{name}"))
+        if done0 is not None:  # wave 0 of "two" done before a crash
+            shutil.copytree(os.path.join(tdir, "two", "wave=0"),
+                            os.path.join(out, "wave=0"))
+            ck.append(dict(run_id="r", tier="t", wave=0, n_waves=2,
+                           status="done", rows_in=-1, rows_out=done0[0],
+                           checksum=done0[1], wall_sec=0.0))
+        df = C.run_waved_pass(spark, src, transform, out, ck, "r", "t",
+                              n_waves=n_waves)
+        rows = ck.read().where("run_id = 'r' and status = 'done'").collect()
+        assert len(rows) == n_waves
+        return (df.orderBy("conv_id").toPandas(),
+                {r.wave: (r.rows_out, r.checksum) for r in rows})
+
+    one, lin1 = run("one", 1)
+    two, lin = run("two", 2)
+    resumed, lin_r = run("resumed", 2, done0=lin[0])
+    pd.testing.assert_frame_equal(one, two)
+    pd.testing.assert_frame_equal(one, resumed)
+    assert lin_r == lin
+    assert 0 < lin[0][0] < lin1[0][0] == 37
+    # the per-wave lineage partitions the whole-output fingerprint
+    whole = C.checksum_agg(spark.createDataFrame(one), ["conv_id", "s", "n"]).first()
+    assert lin1[0] == (whole.cnt, whole.checksum)
+    assert lin[0][0] + lin[1][0] == whole.cnt
+    assert (lin[0][1] + lin[1][1]) % 2**62 == whole.checksum
 
 
 def test_checksum_is_order_insensitive(spark):

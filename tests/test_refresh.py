@@ -68,7 +68,6 @@ def stores(spark, tmp_path_factory):
     }
     for k, src in gt.items():
         run_retention_pipeline(spark, src, dirs[k], tiers=TIERS, n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                run_id=f"gt-{k}")
     base_files = sorted(glob.glob(f"{dirs['a']}/chunks/tier=*/wave=*/*.parquet"))
     base_stat = [(p, os.path.getmtime(p)) for p in base_files]
@@ -185,7 +184,6 @@ def test_refresh_ok_kriging_equals_full_recompute(spark, tmp_path):
     da, db = str(tmp_path / "incr"), str(tmp_path / "full")
     for d, src in ((da, t.where(~pred)), (db, t)):
         run_retention_pipeline(spark, src, d, tiers=("1m",), n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                fill_method="OK", coords=coords, vg_dim=vg,
                                run_id="gt")
     m = run_refresh_pass(spark, t.where(pred), da, tiers=("1m",),
@@ -215,7 +213,6 @@ def test_crash_between_rollup_and_chunk_commit_resumes(spark, tmp_path):
     da, db = str(tmp_path / "incr"), str(tmp_path / "full")
     for d, src in ((da, t.where(~pred)), (db, t)):
         run_retention_pipeline(spark, src, d, tiers=("1m",), n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                run_id="gt")
     run_refresh_pass(spark, t.where(pred), da, tiers=("1m",), n_waves=2,
                      run_id="rc")
@@ -309,14 +306,12 @@ def test_refresh_after_retention_keeps_fill_anchored_by_prehorizon_refs(
 
     da, db = str(tmp_path / "incr"), str(tmp_path / "full")
     run_retention_pipeline(spark, old, da, tiers=("1h",), n_waves=2,
-                           fill_method="IDW", gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="gt")
+                           fill_method="IDW", run_id="gt")
     run_retention_pass(spark, da, "1h", hz, run_id="ret", n_waves=2)
     run_refresh_pass(spark, delta, da, tiers=("1h",), n_waves=2,
                      fill_method="IDW", run_id="rf")
     run_retention_pipeline(spark, old.unionByName(delta), db, tiers=("1h",),
-                           n_waves=2, fill_method="IDW", gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="gt2")
+                           n_waves=2, fill_method="IDW", run_id="gt2")
 
     got = (
         decode_tier_chunks(read_tier_chunks(spark, da, "1h"))
@@ -355,17 +350,13 @@ def test_multi_metric_pipeline_refresh_equals_full_recompute(spark, tmp_path):
 
     da, db, dc = (str(tmp_path / k) for k in ("incr", "full", "single"))
     run_retention_pipeline(spark, t.where(~pred), da, tiers=("1m",),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="gt",
+                           n_waves=2, run_id="gt",
                            extra_fill_metrics=extras)
     run_refresh_pass(spark, t.where(pred), da, tiers=("1m",), n_waves=2,
                      run_id="rf", extra_fill_metrics=extras)
     run_retention_pipeline(spark, t, db, tiers=("1m",), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="gt", extra_fill_metrics=extras)
-    run_retention_pipeline(spark, t, dc, tiers=("1m",), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
-                           run_id="gt")
+    run_retention_pipeline(spark, t, dc, tiers=("1m",), n_waves=2, run_id="gt")
 
     def pts(d, where=None, drop_metric=False):
         df = decode_tier_chunks(read_tier_chunks(spark, d, "1m"))
@@ -406,8 +397,7 @@ def test_refresh_rejects_mismatched_metric_set(spark, tmp_path):
     pred = F.substring(F.md5("conv_id"), 1, 1) >= "c"
     d = str(tmp_path / "s")
     run_retention_pipeline(
-        spark, t.where(~pred), d, tiers=("1m",), n_waves=2, gorilla=True,
-        fuse_fill_and_chunks=True, run_id="p0",
+        spark, t.where(~pred), d, tiers=("1m",), n_waves=2, run_id="p0",
         extra_fill_metrics={"turn_rate": "CAST(turn_cnt AS DOUBLE)"})
     with pytest.raises(ValueError, match="metric set"):
         run_refresh_pass(spark, t.where(pred), d, tiers=("1m",),
@@ -452,13 +442,11 @@ def test_three_tier_cascade_refresh_equals_full_rebuild(spark, tmp_path):
     # actually exercised against non-trivial validity
     mc = {"1h": 2, "1d": 3}
     run_retention_pipeline(spark, t.where(~pred), da, tiers=tiers3,
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="gt",
+                           n_waves=2, run_id="gt",
                            min_cnt=mc)
     run_refresh_pass(spark, t.where(pred), da, tiers=tiers3, n_waves=2,
                      run_id="rc", min_cnt=mc)
     run_retention_pipeline(spark, t, db, tiers=tiers3, n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="gt", min_cnt=mc)
     for tier in tiers3:
         pd.testing.assert_frame_equal(

@@ -22,7 +22,6 @@ def piped(spark, tmp_path_factory):
     tdir = str(tmp_path_factory.mktemp("retention"))
     t = datagen.transcripts_spark(spark, seed=11, n_turns_target=4000)
     run_retention_pipeline(spark, t, tdir, tiers=("1m", "1h"), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     return tdir
 
@@ -100,7 +99,6 @@ def test_retention_wave_resume_recomputes_only_missing(spark, tmp_path):
     tdir = str(tmp_path)
     t = datagen.transcripts_spark(spark, seed=12, n_turns_target=2500)
     run_retention_pipeline(spark, t, tdir, tiers=("1m",), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     before = decode_tier_chunks(
         spark.read.parquet(os.path.join(tdir, "chunks/tier=1m/wave=*"))
@@ -141,7 +139,6 @@ def test_retention_rejects_legacy_chunk_table(spark, tmp_path):
     tdir = str(tmp_path)
     t = datagen.transcripts_spark(spark, seed=13, n_turns_target=800)
     run_retention_pipeline(spark, t, tdir, tiers=("1m",), n_waves=1,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     loc = os.path.join(tdir, "chunks/tier=1m")
     # materialize before deleting the source (the read is lazy)

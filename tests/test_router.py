@@ -22,7 +22,6 @@ def store(spark, tmp_path_factory):
     tdir = str(tmp_path_factory.mktemp("router"))
     t = datagen.transcripts_spark(spark, seed=23, n_turns_target=4000)
     run_retention_pipeline(spark, t, tdir, tiers=("1m", "1h"), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="base")
     full_1m = decode_tier_chunks(read_tier_chunks(spark, tdir, "1m")).toPandas()
     full_1h = decode_tier_chunks(read_tier_chunks(spark, tdir, "1h")).toPandas()

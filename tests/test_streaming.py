@@ -524,10 +524,8 @@ def test_stream_refresh_equals_batch_and_survives_redelivery(spark, tmp_path):
 
     store, full = str(tmp_path / "store"), str(tmp_path / "full")
     run_retention_pipeline(spark, t.where(~(p1 | p2)), store, tiers=("1m",),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="boot")
+                           n_waves=2, run_id="boot")
     run_retention_pipeline(spark, t, full, tiers=("1m",), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="gt")
 
     # two arrival waves, conv-disjoint by hash range; maxFilesPerTrigger=1

@@ -53,7 +53,7 @@ def test_pipeline_snapshot_skip(spark, tmp_path):
     t = datagen.transcripts_spark(spark, seed=7, n_turns_target=2000)
     out = str(tmp_path / "run")
     m1 = run_retention_pipeline(
-        spark, t, out, tiers=("1m",), gorilla=False, n_waves=2, run_id="rid7"
+        spark, t, out, tiers=("1m",), n_waves=2, run_id="rid7"
     )
     fmt = TF.tier_tables(spark, os.path.join(out, "rollup"))
     assert fmt.committed("rid7", "rollup:1m")
@@ -61,7 +61,7 @@ def test_pipeline_snapshot_skip(spark, tmp_path):
 
     # resume: no new commit, same output rows
     m2 = run_retention_pipeline(
-        spark, t, out, tiers=("1m",), gorilla=False, n_waves=2, run_id="rid7"
+        spark, t, out, tiers=("1m",), n_waves=2, run_id="rid7"
     )
     assert len(fmt.snapshots()) == n_snaps
     assert m2["run_id"] == m1["run_id"]

@@ -75,7 +75,6 @@ def store(spark, tmp_path_factory):
     gt = {"a": old, "m": old.unionByName(t.where(p1)), "b": t}
     for k, src in gt.items():
         run_retention_pipeline(spark, src, dirs[k], tiers=(TIER,), n_waves=2,
-                               gorilla=True, fuse_fill_and_chunks=True,
                                run_id=f"gt-{k}")
     d = dirs["a"]
     run_refresh_pass(spark, t.where(p1), d, tiers=(TIER,), n_waves=2,
@@ -261,8 +260,7 @@ def test_history_reports_liveness_horizons_and_vacuum(spark, tmp_path):
     pred = F.substring(F.md5("conv_id"), 1, 1) >= "c"
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t.where(~pred), d, tiers=(TIER,),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0")
+                           n_waves=2, run_id="p0")
     run_refresh_pass(spark, t.where(pred), d, tiers=(TIER,), n_waves=2,
                      run_id="r1")
     run_retention_pass(spark, d, TIER, horizon_ts=int(bounds.mn) - 1,
@@ -300,8 +298,7 @@ def test_vacuum_tier_subset_keeps_shared_convs_sidecar(spark, tmp_path):
     pred = F.substring(F.md5("conv_id"), 1, 1) >= "c"
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t.where(~pred), d, tiers=("1m", "1h"),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0")
+                           n_waves=2, run_id="p0")
     run_refresh_pass(spark, t.where(pred), d, tiers=("1m", "1h"),
                      n_waves=2, run_id="r1")
     run_flatten_pass(spark, d, "1m", table="chunks", run_id="f1", n_waves=2)
@@ -333,8 +330,7 @@ def test_flatten_resume_aborts_when_the_delta_chain_moved(spark, tmp_path):
     h = F.substring(F.md5("conv_id"), 1, 1)
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t.where(h < "c"), d, tiers=(TIER,),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0")
+                           n_waves=2, run_id="p0")
     run_refresh_pass(spark, t.where(h.between("c", "e")), d, tiers=(TIER,),
                      n_waves=2, run_id="r1")
     # crash simulation: the flatten ran its waves but its commit was lost
@@ -352,7 +348,6 @@ def test_flatten_resume_aborts_when_the_delta_chain_moved(spark, tmp_path):
     assert m["n_deltas_folded"] == 2
     full = str(tmp_path / "full")
     run_retention_pipeline(spark, t, full, tiers=(TIER,), n_waves=2,
-                           gorilla=True, fuse_fill_and_chunks=True,
                            run_id="gt")
     pd.testing.assert_frame_equal(
         _chunk_points_tier(spark, d, TIER),
@@ -367,8 +362,7 @@ def test_vacuum_store_path_containing_gen_keeps_layout(spark, tmp_path):
     pred = F.substring(F.md5("conv_id"), 1, 1) >= "c"
     d = str(tmp_path / "gen=2026" / "store")
     run_retention_pipeline(spark, t.where(~pred), d, tiers=(TIER,),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0")
+                           n_waves=2, run_id="p0")
     run_refresh_pass(spark, t.where(pred), d, tiers=(TIER,), n_waves=2,
                      run_id="r1")
     run_flatten_pass(spark, d, TIER, table="rollup", run_id="f1", n_waves=2)
@@ -398,8 +392,7 @@ def test_flatten_midwave_resume_with_unchanged_chain_succeeds(spark, tmp_path):
     pred = F.substring(F.md5("conv_id"), 1, 1) >= "c"
     d = str(tmp_path / "s")
     run_retention_pipeline(spark, t.where(~pred), d, tiers=(TIER,),
-                           n_waves=2, gorilla=True,
-                           fuse_fill_and_chunks=True, run_id="p0")
+                           n_waves=2, run_id="p0")
     run_refresh_pass(spark, t.where(pred), d, tiers=(TIER,), n_waves=2,
                      run_id="r1")
     want = _chunk_points(spark, d)

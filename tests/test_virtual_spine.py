@@ -31,21 +31,35 @@ def _decode_sorted(chunks):
     )
 
 
+def assert_chunks_equal_filled(chunks, filled):
+    """Decoded virtual-spine chunks == the materialized gapfill rows,
+    bit-for-bit: same (conv_id, bucket_ts) points and value bits. The codec
+    is lossless and never stores an unfillable (NULL/NaN) point, so those
+    rows are dropped from `filled` first. Returns the decoded points."""
+    a = _decode_sorted(chunks)
+    b = (
+        filled.where("value_filled IS NOT NULL AND NOT isnan(value_filled)")
+        .select("conv_id", "bucket_ts", "value_filled").toPandas()
+        .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
+    )
+    assert len(a) == len(b) > 0
+    assert (a["conv_id"].to_numpy() == b["conv_id"].to_numpy()).all()
+    assert (a["bucket_ts"].to_numpy() == b["bucket_ts"].to_numpy()).all()
+    assert (a["value"].to_numpy().view(np.int64)
+            == b["value_filled"].to_numpy().view(np.int64)).all()
+    return a
+
+
 @pytest.mark.parametrize("method", ["IDW", "NNB"])
 def test_virtual_equals_materialized_global(spark, parts, method):
-    """Virtual-spine fused chunks == materialized-spine unchunked fused
-    chunks, bit-for-bit after decode (the rank-based chunk membership must
+    """Virtual-spine fused chunks == materialized-spine unchunked fill,
+    bit-for-bit after decode (the rank-based chunk membership must
     reproduce global k-NN semantics, including inside silence holes)."""
     ser_valid, spined = parts
-    mat = G.gapfill(spined, "v", method=method, tier="1h", emit="chunks")
+    mat = G.gapfill(spined, "v", method=method, tier="1h")
     vir = G.gapfill_virtual_chunks(ser_valid, "v", method=method, tier="1h",
                                    chunk_buckets=3840)
-    a = _decode_sorted(mat)
-    b = _decode_sorted(vir)
-    assert len(a) == len(b)
-    assert (a["bucket_ts"].to_numpy() == b["bucket_ts"].to_numpy()).all()
-    av, bv = a["value"].to_numpy(), b["value"].to_numpy()
-    assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()
+    assert_chunks_equal_filled(vir, mat)
 
 
 def test_virtual_ok_with_vg(spark, parts):
@@ -55,14 +69,11 @@ def test_virtual_ok_with_vg(spark, parts):
     vg = spark.createDataFrame(
         [(c, "1.0 Sph(7200.0)") for c in range(8)], "cluster_id int, vg_str string"
     )
-    mat = G.gapfill(spined, "v", method="OK", tier="1h", emit="chunks",
+    mat = G.gapfill(spined, "v", method="OK", tier="1h",
                     coords=coords, vg_dim=vg)
     vir = G.gapfill_virtual_chunks(ser_valid, "v", method="OK", tier="1h",
                                    coords=coords, vg_dim=vg, chunk_buckets=3840)
-    a, b = _decode_sorted(mat), _decode_sorted(vir)
-    assert len(a) == len(b)
-    av, bv = a["value"].to_numpy(), b["value"].to_numpy()
-    assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()
+    assert_chunks_equal_filled(vir, mat)
 
 
 def _drift_table(spined):
@@ -92,17 +103,13 @@ def test_virtual_edk_with_drift_equals_materialized(spark, parts):
     dcols = ["d1", "d2"]
     mat = G.gapfill(
         G.with_drift(spined, drift, dcols), "v", method="EDK", tier="1h",
-        emit="chunks", coords=coords, vg_dim=vg, drift_cols=dcols,
+        coords=coords, vg_dim=vg, drift_cols=dcols,
     )
     vir = G.gapfill_virtual_chunks(
         ser_valid, "v", method="EDK", tier="1h", coords=coords, vg_dim=vg,
         drift=drift, drift_cols=dcols, chunk_buckets=3840,
     )
-    a, b = _decode_sorted(mat), _decode_sorted(vir)
-    assert len(a) == len(b)
-    assert (a["bucket_ts"].to_numpy() == b["bucket_ts"].to_numpy()).all()
-    av, bv = a["value"].to_numpy(), b["value"].to_numpy()
-    assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()
+    assert_chunks_equal_filled(vir, mat)
 
 
 def test_virtual_edk_chunk_size_independent(spark, parts):
