@@ -81,6 +81,32 @@ def _row_max(a: np.ndarray) -> np.ndarray:
     return r
 
 
+def _row_sum(a: np.ndarray) -> np.ndarray:
+    """sum over axis=1 in the order numpy sums a C-contiguous row, applied
+    to the columns a[:, j] (contiguous rows of the (k, G) buffers behind
+    the kernel's transposed views): for k < 8 a sequential chain, else 8
+    strided accumulators, ((r0+r1)+(r2+r3))+((r4+r5)+(r6+r7)), then the
+    remainder added sequentially (numpy's pairwise_sum for k <= 128),
+    from numpy's 0.0 start value (so -0.0 sums to 0.0). A plain
+    a.sum(axis=1) on those F-ordered views adds sequentially, which
+    differs in the last ulp from the contiguous-row oracle."""
+    k = a.shape[1]
+    if k < 8:
+        r = a[:, 0] + 0.0
+        for j in range(1, k):
+            r += a[:, j]
+        return r
+    acc = a[:, :8].T.copy()
+    tail = k - k % 8
+    for i in range(8, tail, 8):
+        acc += a[:, i:i + 8].T
+    r = 0.0 + (((acc[0] + acc[1]) + (acc[2] + acc[3]))
+               + ((acc[4] + acc[5]) + (acc[6] + acc[7])))
+    for j in range(tail, k):
+        r += a[:, j]
+    return r
+
+
 def fill_series(
     t: np.ndarray,
     v: np.ndarray,
@@ -191,11 +217,10 @@ def fill_series(
     # reads the sentinel and yields distance +inf, the exact value the
     # where produced); per-j outputs are written to contiguous rows of
     # (k, G) arrays, exposed to the rest of the kernel as transposed views.
-    # Elementwise ops give the same values in either memory order, but an
-    # axis=1 sum over these F-ordered views adds each row sequentially,
-    # while numpy sums a C-contiguous row pairwise — so row sums (IDW
-    # weights) can differ in the last ulp from a contiguous-row
-    # implementation (tests/oracle.py) before rounding.
+    # Elementwise ops give the same values in either memory order; row
+    # sums over these F-ordered views go through _row_sum, which adds in
+    # numpy's contiguous-row order, so IDW matches the contiguous-row
+    # oracle (tests/oracle.py) bit-for-bit even unrounded.
     t_pad = np.empty(n_ref + 2, dtype=np.float64)
     t_pad[0] = -np.inf
     t_pad[-1] = np.inf
@@ -277,9 +302,9 @@ def fill_series(
                 dn = np.where(
                     dm[:, None] > 0, d / np.where(dm == 0, 1, dm)[:, None], d)
             wts = 1.0 / (dn ** idw_exp)
-            wts_sum = wts.sum(axis=1)
+            wts_sum = _row_sum(wts)
             assert (wts_sum >= 1e-14).all(), wts_sum.min()
-            out[idx] = (wts * z).sum(axis=1) / wts_sum
+            out[idx] = _row_sum(wts * z) / wts_sum
             if codes is not None:
                 codes[idx] = M_IDW
 

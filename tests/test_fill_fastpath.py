@@ -12,9 +12,12 @@
 - the low-signal fast path: when no row is low-signal the kernel skips
   the g_rows gather entirely; mixed batches must take the gather branch
   and still match the oracle row-for-row.
+- _row_sum: the IDW row sums over the transposed (F-ordered) views must
+  add in numpy's contiguous-row order, bit-identical to sum(axis=1) of a
+  contiguous copy for every k.
 
-All comparisons are exact (bit-for-bit after round_p), matching the
-engine's oracle bar.
+All comparisons are exact, both after the default round_p and unrounded
+(round_p=None), matching the engine's oracle bar.
 """
 
 import numpy as np
@@ -26,14 +29,16 @@ from tests import oracle
 
 
 def _cmp_series(t, v, method, **kw):
-    got, gev, gcd = G.fill_series(
-        np.asarray(t, np.int64), np.asarray(v, float), method=method, **kw
-    )
-    want, wev, wcd = oracle.fill_series_oracle(t, v, method, **kw)
-    same = (got == want) | (np.isnan(got) & np.isnan(want))
-    assert same.all(), (method, got[~same], want[~same])
-    assert (gev == wev).all()
-    assert (gcd == wcd).all()
+    for leg in ({}, {"round_p": None}):   # default rounding, then unrounded
+        got, gev, gcd = G.fill_series(
+            np.asarray(t, np.int64), np.asarray(v, float), method=method,
+            **kw, **leg,
+        )
+        want, wev, wcd = oracle.fill_series_oracle(t, v, method, **kw, **leg)
+        same = (got == want) | (np.isnan(got) & np.isnan(want))
+        assert same.all(), (method, leg, got[~same], want[~same])
+        assert (gev == wev).all()
+        assert (gcd == wcd).all()
 
 
 def test_row_max_bit_identical():
@@ -53,6 +58,18 @@ def test_row_max_bit_identical():
     # transposed (F-ordered) views as produced by the selection loop
     a = rng.standard_normal((8, 300)).T
     np.testing.assert_array_equal(G._row_max(a), a.max(axis=1))
+
+
+def test_row_sum_bit_identical():
+    rng = np.random.default_rng(5)
+    for k in range(1, 17):
+        a = rng.standard_normal((k, 300)) * rng.uniform(0.0, 1e6, (k, 1))
+        a[:, :5] = -0.0                       # signed-zero rows
+        a[0, 5:10] = 0.0
+        view = a.T                            # (G, k) F-ordered, as in fill_series
+        want = np.ascontiguousarray(view).sum(axis=1)
+        np.testing.assert_array_equal(G._row_sum(view).view(np.int64),
+                                      want.view(np.int64))
 
 
 @pytest.mark.parametrize("method", ["IDW", "NNB"])
@@ -110,5 +127,5 @@ def test_fill_series_oracle_fuzz():
         if miss.all():
             miss[int(rng.integers(n))] = False
         v[miss] = np.nan
-        method = ["IDW", "NNB"][case % 2]
-        _cmp_series(t, v, method)
+        for method in ("IDW", "NNB"):
+            _cmp_series(t, v, method)
