@@ -611,8 +611,9 @@ def gapfill(
         # chunk span — receives at least the k nearest refs on each side,
         # and per-gap neighbor selection is bit-identical to the global
         # k-NN. (ADVICE r1: a fixed edge pad lost true neighbors across
-        # holes longer than the pad.) The ref/gap split shares one shuffle via ReusedExchange — the branches are
-        # filters over the same child plan.
+        # holes longer than the pad.) The ref/gap split shares one shuffle
+        # via ReusedExchange — the branches are filters over the same
+        # child plan.
         from pyspark.sql import Window as W
 
         span = chunk_buckets * secs

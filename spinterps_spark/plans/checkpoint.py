@@ -194,28 +194,26 @@ def run_waved_pass(
     pending = [w for w in range(n_waves) if w not in done]
     if pending:
         t0 = time.time()
-        wave = wave_col(n_waves, wave_key)
         direct = len(pending) == 1
-        if n_waves == 1:
-            sub = source
-        elif direct:
-            sub = source.where(wave == pending[0])
-        else:
-            sub = source.where(wave.isin(pending))
+        sub = (source if len(pending) == n_waves else
+               source.where(wave_col(n_waves, wave_key).isin(pending)))
         out = transform(sub)
         schema = out.schema
         h = F.xxhash64(*[F.col(c) for c in out.columns])
         if not direct:
             out = out.withColumn("wave", wave_col(n_waves, wave_key))
+
+        def in_wave(c, w):
+            return c if direct else F.when(F.col("wave") == w, c)
+
         aggs = []
         for w in pending:
-            def in_w(c, w=w):
-                return c if direct else F.when(F.col("wave") == w, c)
             aggs += [
-                F.count(in_w(F.lit(1))).alias(f"cnt{w}"),
+                F.count(in_wave(F.lit(1), w)).alias(f"cnt{w}"),
                 # coalesce: F.sum over a zero-row write job yields NULL
                 F.pmod(
-                    F.coalesce(F.sum(in_w(h).cast("decimal(38,0)")), F.lit(0)),
+                    F.coalesce(F.sum(in_wave(h, w).cast("decimal(38,0)")),
+                               F.lit(0)),
                     F.lit(2**62),
                 ).cast("long").alias(f"chk{w}"),
             ]
