@@ -83,27 +83,30 @@ def _row_max(a: np.ndarray) -> np.ndarray:
 
 def _row_sum(a: np.ndarray) -> np.ndarray:
     """sum over axis=1 in the order numpy sums a C-contiguous row, applied
-    to the columns a[:, j] (contiguous rows of the (k, G) buffers behind
-    the kernel's transposed views): for k < 8 a sequential chain, else 8
-    strided accumulators, ((r0+r1)+(r2+r3))+((r4+r5)+(r6+r7)), then the
-    remainder added sequentially (numpy's pairwise_sum for k <= 128),
-    from numpy's 0.0 start value (so -0.0 sums to 0.0). A plain
-    a.sum(axis=1) on those F-ordered views adds sequentially, which
-    differs in the last ulp from the contiguous-row oracle."""
-    k = a.shape[1]
+    to the rows of a.T (contiguous for the kernel's transposed (k, G)
+    views): for k < 8 a sequential chain, else 8 strided accumulators,
+    ((r0+r1)+(r2+r3))+((r4+r5)+(r6+r7)), then the remainder added
+    sequentially (numpy's pairwise_sum for k <= 128), from numpy's 0.0
+    start value (so -0.0 sums to 0.0). A plain a.sum(axis=1) on those
+    F-ordered views adds sequentially, which differs in the last ulp from
+    the contiguous-row oracle."""
+    x = a.T
+    k = len(x)
     if k < 8:
-        r = a[:, 0] + 0.0
-        for j in range(1, k):
-            r += a[:, j]
+        r = x[0] + 0.0
+        for row in x[1:]:
+            r += row
         return r
-    acc = a[:, :8].T.copy()
     tail = k - k % 8
+    acc = x[:8]
     for i in range(8, tail, 8):
-        acc += a[:, i:i + 8].T
-    r = 0.0 + (((acc[0] + acc[1]) + (acc[2] + acc[3]))
-               + ((acc[4] + acc[5]) + (acc[6] + acc[7])))
+        acc = acc + x[i:i + 8]
+    acc = acc[0::2] + acc[1::2]     # r0+r1, r2+r3, r4+r5, r6+r7
+    acc = acc[0::2] + acc[1::2]
+    r = acc[0] + acc[1]
+    r += 0.0
     for j in range(tail, k):
-        r += a[:, j]
+        r += x[j]
     return r
 
 
