@@ -470,6 +470,10 @@ def cmd_query(args) -> int:
 
 
 def main(argv=None) -> int:
+    from spinterps_spark.operators.gapfill import FILL_METHODS
+
+    # the maintenance passes also serve stores written without gap fill
+    store_fills = (*FILL_METHODS, "none")
     p = argparse.ArgumentParser(prog="spinterps_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -478,8 +482,7 @@ def main(argv=None) -> int:
     r.add_argument("--format", default="parquet", choices=["parquet", "iceberg"])
     r.add_argument("--out", required=True)
     r.add_argument("--tiers", default="1m,1h,1d")
-    r.add_argument("--fill", default="IDW",
-                   choices=["IDW", "OK", "SK", "EDK", "IK", "NNB"])
+    r.add_argument("--fill", default="IDW", choices=FILL_METHODS)
     r.add_argument("--coords", default=None)
     r.add_argument("--vg-dim", dest="vg_dim", default=None)
     r.add_argument("--waves", type=int, default=4)
@@ -617,7 +620,7 @@ def main(argv=None) -> int:
                     help="pipeline out_dir holding rollup/ + chunks/")
     rf.add_argument("--tiers", default="1m,1h",
                     help="the store's cascade order, finest first")
-    rf.add_argument("--fill", default="IDW",
+    rf.add_argument("--fill", default="IDW", choices=store_fills,
                     help="gap-fill method, or 'none' for stores written "
                          "without fill")
     rf.add_argument("--coords", default=None)
@@ -638,7 +641,7 @@ def main(argv=None) -> int:
                     help="the store's CURRENT extra metrics (NAME=SQL_EXPR, "
                          "repeatable) — must match what the pipeline used")
     ev.add_argument("--tiers", default="1m,1h")
-    ev.add_argument("--fill", default="IDW",
+    ev.add_argument("--fill", default="IDW", choices=store_fills,
                     help="the store's fill method, or 'none'")
     ev.add_argument("--coords", default=None)
     ev.add_argument("--vg-dim", dest="vg_dim", default=None)
@@ -657,7 +660,7 @@ def main(argv=None) -> int:
     mg.add_argument("--mode", default="combine",
                     choices=["combine", "overwrite"])
     mg.add_argument("--tiers", default="1m,1h")
-    mg.add_argument("--fill", default="IDW",
+    mg.add_argument("--fill", default="IDW", choices=store_fills,
                     help="the sources' fill method, or 'none'")
     mg.add_argument("--coords", default=None)
     mg.add_argument("--vg-dim", dest="vg_dim", default=None)

@@ -62,6 +62,9 @@ DEFAULTS = dict(
     round_p=2,               # nmrl_prcn (FIXTURES.md F6)
 )
 
+KRIGING = ("OK", "SK", "EDK", "IK")
+FILL_METHODS = ("IDW", *KRIGING, "NNB")
+
 # fill_method codes emitted per filled bucket (K5 problem-step logging analog)
 M_OBSERVED, M_SINGLE, M_LOWSIG, M_NUGGET, M_IDW, M_OK, M_NNB_FALLBACK, M_NNB, M_EMPTY = (
     "observed", "single_ref", "low_signal_mean", "nugget_mean", "idw", "ok",
@@ -186,7 +189,7 @@ def fill_series(
 
     t_ref = t[ref_idx]
     v_ref = v[ref_idx]
-    kriging = method in ("OK", "SK", "EDK", "IK")
+    kriging = method in KRIGING
     vg_gap = None
     if kriging:
         if vg_arr is not None:
@@ -311,7 +314,7 @@ def fill_series(
             if codes is not None:
                 codes[idx] = M_IDW
 
-        elif method in ("OK", "SK", "EDK", "IK"):
+        elif kriging:
             if whole:
                 g_rows = np.arange(n_gap)
             kr_rows = g_rows
@@ -541,6 +544,37 @@ def with_drift(
     return spined.join(drift.select(*keys, *drift_cols), list(keys), "left")
 
 
+def _fill_kwargs(method: str, params: dict) -> dict:
+    """fill_series keyword arguments from the merged DEFAULTS + knobs."""
+    return dict(
+        method=method,
+        idw_exp=params["idw_exp"],
+        n_neighbors=params["n_neighbors"],
+        min_var_val_thresh=params["min_var_val_thresh"],
+        min_vg_val=params["min_vg_val"],
+        min_cut=params.get("min_cut"),
+        max_cut=params.get("max_cut"),
+        round_p=params.get("round_p"),
+        ik_lim=params.get("ik_lim", 1.0),
+        nan_llm=params.get("nan_llm"),
+        nan_ulm=params.get("nan_ulm"),
+    )
+
+
+def _with_conv_vg(df: DataFrame, method: str, coords, vg_dim) -> DataFrame:
+    """Attach each conversation's variogram string as `vg_str`: kriging
+    broadcast-joins coords (conv_id -> cluster_id) with vg_dim
+    (cluster_id -> vg_str); the other methods get a NULL column."""
+    if method not in KRIGING:
+        return df.withColumn("vg_str", F.lit(None).cast("string"))
+    if coords is None or vg_dim is None:
+        raise ValueError(f"{method} needs coords (conv_id->cluster_id) and vg_dim")
+    dim = coords.select("conv_id", "cluster_id").join(
+        vg_dim.select("cluster_id", "vg_str"), "cluster_id", "left"
+    )
+    return df.join(F.broadcast(dim.select("conv_id", "vg_str")), "conv_id", "left")
+
+
 def gapfill(
     spined: DataFrame,
     value_col: str,
@@ -577,7 +611,7 @@ def gapfill(
 
     drift_cols = list(drift_cols) if drift_cols else []
     per_row_vg = vg_col is not None
-    kriging = method in ("OK", "SK", "EDK", "IK")
+    kriging = method in KRIGING
     if per_row_vg and not kriging:
         raise ValueError("vg_col only applies to kriging methods")
     if per_row_vg and (coords is not None or vg_dim is not None):
@@ -593,17 +627,8 @@ def gapfill(
         *( [F.col(vg_col).alias("vg_str")] if per_row_vg else [] ),
     )
 
-    if per_row_vg:
-        pass  # vg already rides each row
-    elif kriging:
-        if coords is None or vg_dim is None:
-            raise ValueError(f"{method} needs coords (conv_id->cluster_id) and vg_dim")
-        dim = coords.select("conv_id", "cluster_id").join(
-            vg_dim.select("cluster_id", "vg_str"), "cluster_id", "left"
-        )
-        df = df.join(F.broadcast(dim.select("conv_id", "vg_str")), "conv_id", "left")
-    else:
-        df = df.withColumn("vg_str", F.lit(None).cast("string"))
+    if not per_row_vg:  # else the vg already rides each row
+        df = _with_conv_vg(df, method, coords, vg_dim)
 
     group_cols = ["conv_id"]
     if chunk_buckets:
@@ -670,19 +695,7 @@ def gapfill(
 
     from spinterps_spark.operators.grouped import apply_grouped_batches, column
 
-    kw = dict(
-        method=method,
-        idw_exp=params["idw_exp"],
-        n_neighbors=params["n_neighbors"],
-        min_var_val_thresh=params["min_var_val_thresh"],
-        min_vg_val=params["min_vg_val"],
-        min_cut=params.get("min_cut"),
-        max_cut=params.get("max_cut"),
-        round_p=params.get("round_p"),
-        ik_lim=params.get("ik_lim", 1.0),
-        nan_llm=params.get("nan_llm"),
-        nan_ulm=params.get("nan_ulm"),
-    )
+    kw = _fill_kwargs(method, params)
 
     def fill_batch(batch: pa.RecordBatch, starts: np.ndarray) -> pa.RecordBatch:
         _cache: dict = {}   # cross-conversation pinv reuse within the batch
@@ -866,16 +879,8 @@ def gapfill_virtual_chunks(
         ],
     ).where(F.col("_v").isNotNull())
 
-    kriging = method in ("OK", "SK", "EDK", "IK")
-    if kriging:
-        if coords is None or vg_dim is None:
-            raise ValueError(f"{method} needs coords and vg_dim")
-        dim = coords.select("conv_id", "cluster_id").join(
-            vg_dim.select("cluster_id", "vg_str"), "cluster_id", "left"
-        )
-        df = df.join(F.broadcast(dim.select("conv_id", "vg_str")), "conv_id", "left")
-    else:
-        df = df.withColumn("vg_str", F.lit(None).cast("string"))
+    kriging = method in KRIGING
+    df = _with_conv_vg(df, method, coords, vg_dim)
 
     dsel = None
     if dcols:
@@ -928,22 +933,9 @@ def gapfill_virtual_chunks(
         )
         df = df.unionByName(drows)
 
-    kw = dict(
-        method=method,
-        idw_exp=params["idw_exp"],
-        n_neighbors=params["n_neighbors"],
-        min_var_val_thresh=params["min_var_val_thresh"],
-        min_vg_val=params["min_vg_val"],
-        min_cut=params.get("min_cut"),
-        max_cut=params.get("max_cut"),
-        round_p=params.get("round_p"),
-        ik_lim=params.get("ik_lim", 1.0),
-        nan_llm=params.get("nan_llm"),
-        nan_ulm=params.get("nan_ulm"),
-        # the fused path never emits method codes — skip building the
-        # per-row object array inside the kernel (pure overhead here)
-        want_codes=False,
-    )
+    # the fused path never emits method codes — skip building the
+    # per-row object array inside the kernel (pure overhead here)
+    kw = dict(_fill_kwargs(method, params), want_codes=False)
     # NOTE r8 negative result, recorded so it is not retried: batching the
     # IDW fill across all groups of a batch (one vectorized pass instead of
     # one fill_series call per (conv, chunk) group) is bit-exactly possible
