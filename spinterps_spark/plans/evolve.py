@@ -58,9 +58,10 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from spinterps_spark.compress.gorilla import DEFAULT_CHUNK
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
 from spinterps_spark.plans.generations import current_rollup, tier_horizons
+from spinterps_spark.plans.pipeline import (
+    fused_fill_builder, metric_set, stamped_metrics)
 from spinterps_spark.sources.tableformat import (
     pinned_tier_validator, release_pin, tier_tables)
 
@@ -88,21 +89,24 @@ def run_evolve_pass(
     fill_metric / extra_fill_metrics / fill_method / coords / vg_dim /
     drift / fill_knobs must MATCH what the store was built with (validated
     against the stamped fill_metrics set, same contract as refresh); the
-    new metric names must be disjoint from the existing set.
-    fill_method=None is supported (ADVICE r7 #4): the new metrics take the
-    per-metric no-fill branch — a direct encode of the merged valid rollup
-    rows, horizon-trimmed exactly like the filled branch.
+    new metric names must be disjoint from the existing set. The new
+    metrics' chunks come from the pipeline's own encoder (plans/pipeline.
+    fused_fill_builder), so fill_method=None (ADVICE r7 #4) encodes the
+    merged valid rollup rows directly, trimmed at the horizon.
 
     Returns a metrics dict (per-tier chunks published, wall time).
     """
     if not new_metrics:
         raise ValueError("new_metrics is empty — nothing to evolve")
-    if (drift is None) != (not drift_cols):
-        raise ValueError("drift and drift_cols go together (same contract "
-                         "as run_retention_pipeline)")
+    # the encoder runs with the PRIMARY metric's gating and ONLY the new
+    # metrics as extras: identical refs/grid/vg/drift to a from-scratch
+    # (k+1)-metric rebuild, whose per-metric fills are independent
+    project, chunker, chunk_size_max = fused_fill_builder(
+        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
+        dict(fill_knobs or {}), dict(new_metrics),
+    )
     run_id = run_id or new_run_id()
     t0 = time.time()
-    fill_knobs = dict(fill_knobs or {})
     existing = dict(extra_fill_metrics or {})
     overlap = set(new_metrics) & ({fill_metric} | set(existing))
     if overlap:
@@ -118,31 +122,18 @@ def run_evolve_pass(
     # validate the caller's claim of the CURRENT set against the stamped
     # one (the same guard refresh applies — a wrong current set would make
     # the kernel's primary gating differ from the store's)
-    mine = json.dumps([fill_metric, *sorted(existing)])
-    evolved = json.dumps([fill_metric, *sorted({*existing, *new_metrics})])
-    stamped = [s["fill_metrics"] for s in rfmt.snapshots()
-               if s.get("fill_metrics")]
+    mine = metric_set(fill_metric, existing)
+    evolved = metric_set(fill_metric, {**existing, **new_metrics})
+    stamped = stamped_metrics(rfmt)
     # a resumed/re-run evolve sees its OWN stamp as the latest — the
     # evolved set is as valid a starting state as the pre-evolve one
-    if stamped and stamped[-1] not in (mine, evolved):
+    if stamped is not None and stamped not in (mine, evolved):
         raise ValueError(
             f"evolve: current metric set {mine} does not match the store's "
-            f"{stamped[-1]} — pass the same fill_metric/extra_fill_metrics "
+            f"{stamped} — pass the same fill_metric/extra_fill_metrics "
             "the store was last built/evolved with"
         )
 
-    from spinterps_spark.plans.pipeline import fused_fill_builder
-
-    # the kernel runs with the PRIMARY metric's gating and ONLY the new
-    # metrics as extras: identical refs/grid/vg/drift to a from-scratch
-    # (k+1)-metric rebuild, whose per-metric fills are independent.
-    # fill_method=None (no-fill store): the new metric's chunks are a
-    # direct encode of the merged valid rollup rows — same exact-trim
-    # horizon rule as refresh's no-fill path.
-    project, chunker = fused_fill_builder(
-        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        fill_knobs, dict(new_metrics),
-    )
     new_names = list(new_metrics)
 
     metrics: dict = {"run_id": run_id, "tiers": {},
@@ -178,46 +169,20 @@ def run_evolve_pass(
                 f"evolve: no committed rollup for tier={tier} under "
                 f"{out_dir} — run the pipeline first"
             )
-        ser = project(rolled.where(F.col("valid")))
         hz = horizons.get(tier)
-        if fill_method is None:
-            # no-fill store: the new metric's refs ARE its content; exact
-            # trim at the horizon (refresh's no-fill rule — never
-            # resurrect aged-out points)
-            if hz is not None:
-                ser = ser.where(
-                    F.unix_timestamp("bucket_ts") >= F.lit(int(hz)))
 
-            from spinterps_spark.compress.gorilla import encode_tier_chunks
-
-            def make(sub, _tier=tier):
-                frames = [
-                    encode_tier_chunks(
-                        sub.select("conv_id", "bucket_ts",
-                                   F.col(n).alias("value_filled")),
-                        _tier,
-                    ).withColumn("metric", F.lit(n))
-                    for n in new_names
-                ]
-                out = frames[0]
-                for f in frames[1:]:
-                    out = out.unionByName(f)
-                return out
-        else:
-            fill_chunk = chunker(tier, None if hz is None else int(hz))
-
-            def make(sub, _fc=fill_chunk):
-                # keep ONLY the new metrics' chunks: the primary's
-                # recomputed chunks are bit-identical to what the store
-                # already holds — publishing them would duplicate every
-                # point
-                return _fc(sub).where(F.col("metric").isin(new_names))
+        def make(sub, _fc=chunker(tier, hz)):
+            # keep ONLY the new metrics' chunks: the primary's recomputed
+            # chunks are bit-identical to what the store already holds —
+            # publishing them would duplicate every point (Catalyst prunes
+            # the no-fill encode of the primary under this filter)
+            return _fc(sub).where(F.col("metric").isin(new_names))
 
         chunk_loc = os.path.join(
             out_dir, f"chunks_evolve/tier={tier}/gen={run_id}")
         chunks = run_waved_pass(
-            spark, ser, make, chunk_loc, ckpt, run_id,
-            f"evolve_chunks:{tier}", n_waves=n_waves,
+            spark, project(rolled.where(F.col("valid"))), make, chunk_loc,
+            ckpt, run_id, f"evolve_chunks:{tier}", n_waves=n_waves,
         )
         n_chunks = chunks.count()
         cfmt.commit_tier(tier, chunks, chunk_loc, {
@@ -227,13 +192,7 @@ def run_evolve_pass(
             "primary_metric": fill_metric,
             "n_chunks": n_chunks,
             "horizon_ts": int(hz) if hz is not None else 0,
-            # the no-fill branch encodes with DEFAULT_CHUNK regardless of
-            # fill_knobs — stamping the knob there would under-size the
-            # metadata pruning span and silently drop rows from routed
-            # reads (code-review r7 #3; same guard as refresh/merge)
-            "chunk_size_max": int(
-                fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)
-                if fill_method is not None else DEFAULT_CHUNK),
+            "chunk_size_max": chunk_size_max,
         }, validate=validate)
         # the settings stamp refresh validates against (rollup log)
         rfmt.commit_tier(tier, None,

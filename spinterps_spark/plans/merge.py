@@ -50,28 +50,22 @@ instead of publishing a mixed-state merge.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from spinterps_spark.compress.gorilla import DEFAULT_CHUNK, encode_tier_chunks
 from spinterps_spark.operators.rollup import (
     DEFAULT_MIN_CNT, METRIC_COLS, rollup_tier)
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
 from spinterps_spark.plans.generations import (
     current_chunks, current_rollup, tier_chunk_size_bound, tier_horizons)
+from spinterps_spark.plans.pipeline import (
+    fused_fill_builder, metric_set, stamped_metrics)
 from spinterps_spark.sources.tableformat import (
     pinned_tier_validator, release_pin, tier_tables)
 
 MODES = ("combine", "overwrite")
-
-
-def _stamped_metrics(fmt) -> str | None:
-    stamped = [s["fill_metrics"] for s in fmt.snapshots()
-               if s.get("fill_metrics")]
-    return stamped[-1] if stamped else None
 
 
 def run_merge_pass(
@@ -97,10 +91,12 @@ def run_merge_pass(
 
     `tiers` must be the sources' cascade order (finest first). fill_*,
     coords/vg_dim/drift and min_cnt must MATCH what the sources were built
-    with (validated against the stamped fill_metrics sets) — the overlap
-    re-encode uses the pipeline's own fused kernel, so merged reads are
-    bit-identical to a full rebuild over the unioned turns when the
-    sources' turn sets are disjoint (mode="combine").
+    with (validated against the stamped fill_metrics sets, which may be
+    evolved ones) — the overlap re-encode uses the pipeline's own encoder
+    (plans/pipeline.fused_fill_builder; fill_method=None encodes the
+    merged valid rows directly), so merged reads are bit-identical to a
+    full rebuild over the unioned turns when the sources' turn sets are
+    disjoint (mode="combine").
 
     Returns a metrics dict: overlap conv count, per-tier copied vs
     re-encoded chunk rows, wall time.
@@ -111,19 +107,15 @@ def run_merge_pass(
         raise ValueError("out_dir must not be one of the sources")
     if mode not in MODES:
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
-    if (drift is None) != (not drift_cols):
-        raise ValueError("drift and drift_cols go together (same contract "
-                         "as run_retention_pipeline)")
+    project, chunker, chunk_size_max = fused_fill_builder(
+        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
+        dict(fill_knobs or {}), dict(extra_fill_metrics or {}),
+    )
     run_id = run_id or new_run_id()
     t0 = time.time()
     min_cnt = min_cnt or {}
-    fill_knobs = dict(fill_knobs or {})
-    extras = dict(extra_fill_metrics or {})
-    if extras and fill_method is None:
-        raise ValueError("extra_fill_metrics requires a fill_method (the "
-                         "no-fill encode path is single-metric)")
 
-    mine = json.dumps([fill_metric, *sorted(extras)])
+    mine = metric_set(fill_metric, extra_fill_metrics)
     src_rfmts = [tier_tables(spark, os.path.join(d, "rollup"))
                  for d in src_dirs]
     src_cfmts = [tier_tables(spark, os.path.join(d, "chunks"))
@@ -145,7 +137,7 @@ def run_merge_pass(
 
     try:
         for d, rf in zip(src_dirs, src_rfmts):
-            st = _stamped_metrics(rf)
+            st = stamped_metrics(rf)
             if st is not None and st != mine:
                 raise ValueError(
                     f"merge: source {d} was built with metric set {st}, "
@@ -224,13 +216,6 @@ def run_merge_pass(
     # still O(store), never O(pairs).
     overlap_broadcast = n_overlap <= broadcast_overlap_limit
     ovj = F.broadcast(ov) if overlap_broadcast else ov
-
-    from spinterps_spark.plans.pipeline import fused_fill_builder
-
-    project, chunker = fused_fill_builder(
-        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        fill_knobs, extras,
-    )
 
     metrics: dict = {"run_id": run_id, "mode": mode, "n_src": len(src_dirs),
                      "n_overlap_convs": n_overlap,
@@ -371,35 +356,15 @@ def run_merge_pass(
                 merged.where(F.col("valid"))
                 .join(ovj, "conv_id", "semi")
             )
-            hz = horizons[tier] or None
-            if fill_method is None:
-                # no-fill store: the refs ARE the content — exact trim at
-                # the horizon (refresh's no-fill rule)
-                if hz is not None:
-                    ser = ser.where(
-                        F.unix_timestamp("bucket_ts") >= F.lit(int(hz)))
-
-                def chunk(sub, _tier=tier):
-                    return encode_tier_chunks(
-                        sub.withColumnRenamed(fill_metric, "value_filled"),
-                        _tier,
-                    )
-            else:
-                # filled store: trim AFTER the fill, inside the kernel —
-                # pre-horizon refs keep anchoring the interpolation
-                chunk = chunker(tier, None if hz is None else int(hz))
-
             enc = run_waved_pass(
-                spark, ser, chunk, delta_loc, ckpt, run_id,
-                f"merge_chunks_enc:{tier}", n_waves=n_waves,
+                spark, ser, chunker(tier, horizons[tier]), delta_loc, ckpt,
+                run_id, f"merge_chunks_enc:{tier}", n_waves=n_waves,
             )
             cfmt.commit_tier(tier, enc, delta_loc, {
                 "run_id": run_id, "stage": f"merge_delta:{tier}",
                 "convs_location": convs_loc, "n_affected_convs": n_overlap,
                 "horizon_ts": int(horizons[tier]),
-                "chunk_size_max": int(
-                    fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)
-                    if fill_method is not None else DEFAULT_CHUNK),
+                "chunk_size_max": chunk_size_max,
             }, validate=validate)
             tier_metrics["chunks_reencoded"] = enc.count()
 

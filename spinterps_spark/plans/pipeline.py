@@ -15,26 +15,66 @@ from __future__ import annotations
 import json
 import os
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
 from spinterps_spark import TIERS
-from spinterps_spark.operators.gapfill import gapfill_virtual_chunks
+from spinterps_spark.compress.gorilla import DEFAULT_CHUNK, encode_tier_chunks
+from spinterps_spark.operators.gapfill import FILL_METHODS, gapfill_virtual_chunks
 from spinterps_spark.operators.rollup import base_rollup, rollup_tier
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
 from spinterps_spark.sources.tableformat import tier_tables
 
 
+def metric_set(fill_metric: str, extras) -> str:
+    """A store's metric set as stamped in its commit rows (fill_metrics):
+    the primary metric first, then the extra metric names sorted."""
+    return json.dumps([fill_metric, *sorted(extras or {})])
+
+
+def stamped_metrics(fmt) -> str | None:
+    """The latest metric set stamped on a rollup log (pipeline run
+    settings, merge commits, evolve's meta stamp); None when none is."""
+    stamped = [s["fill_metrics"] for s in fmt.snapshots()
+               if s.get("fill_metrics")]
+    return stamped[-1] if stamped else None
+
+
 def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
                        drift_cols, fill_knobs, extras):
-    """The valid-series projection and the fused fill+encode closure,
-    shared VERBATIM by run_retention_pipeline and run_refresh_pass — the
-    refresh == full-rebuild bit-equality contract depends on the two
-    sites never drifting (a knob added to one and not the other breaks it
-    silently). Returns (project, chunker): project maps valid rollup rows
-    to the fill series; chunker(tier, grid_min_ts) builds the per-wave
-    transform (grid_min_ts is the refresh pass's post-fill horizon trim,
-    None for the pipeline)."""
+    """The one encoder from valid rollup rows to chunk rows, shared by the
+    pipeline, refresh, merge and evolve — the refresh == full-rebuild
+    bit-equality contract depends on those passes never drifting (a knob
+    added to one and not the other breaks it silently). It validates the
+    arguments, so call it before a pass reads or commits anything.
+
+    Returns (project, chunker, chunk_size_max): project maps valid rollup
+    rows to the metric series; chunker(tier, horizon) builds the per-wave
+    transform; chunk_size_max is the encode-time points-per-chunk setting
+    a commit stamps for routed-read pruning. horizon (epoch seconds; None
+    or 0 for none) is the retention horizon no emitted point may precede:
+
+    - filled stores pass it to the fused kernel as grid_min_ts, so refs
+      before it still anchor the interpolation of the points after it;
+    - no-fill stores (fill_method=None) hold only the refs: the rows are
+      trimmed at the horizon and each metric is encoded directly.
+
+    With extras, every metric's chunks carry a `metric` column (primary =
+    fill_metric); without, the single-metric chunk schema."""
+    if (drift is None) != (not drift_cols):
+        raise ValueError(
+            "drift and drift_cols go together: a drift table without "
+            "drift_cols would be silently ignored (EDK would fall back to "
+            "the synthetic linear-time drift), and drift_cols without a "
+            "table cannot be joined"
+        )
+    if fill_method is not None and fill_method not in FILL_METHODS:
+        raise ValueError(
+            f"fill_method must be one of {FILL_METHODS} or None (no fill), "
+            f"got {fill_method!r}"
+        )
+    names = [fill_metric, *extras]
 
     def project(rolled_valid: DataFrame) -> DataFrame:
         return rolled_valid.select(
@@ -43,13 +83,31 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
             *[F.expr(x).alias(n) for n, x in extras.items()],
         )
 
-    def chunker(tier: str, grid_min_ts: int | None = None):
+    def chunker(tier: str, horizon: int | None = None):
+        hz = int(horizon) if horizon else None
+        if fill_method is None:
+            def chunk(sub):
+                if hz is not None:
+                    sub = sub.where(F.unix_timestamp("bucket_ts") >= F.lit(hz))
+                frames = [
+                    encode_tier_chunks(
+                        sub.select("conv_id", "bucket_ts",
+                                   F.col(n).alias("value_filled")), tier)
+                    for n in names
+                ]
+                if not extras:
+                    return frames[0]
+                return reduce(DataFrame.unionByName, [
+                    f.withColumn("metric", F.lit(n))
+                    for f, n in zip(frames, names)])
+            return chunk
+
         def chunk(sub):
             return gapfill_virtual_chunks(
                 sub, fill_metric, method=fill_method, tier=tier,
                 coords=coords, vg_dim=vg_dim,
                 drift=drift, drift_cols=drift_cols,
-                grid_min_ts=grid_min_ts,
+                grid_min_ts=hz,
                 extra_value_cols=list(extras) or None,
                 chunk_buckets=fill_knobs.get("chunk_buckets", 3840),
                 **{k: v for k, v in fill_knobs.items()
@@ -57,7 +115,9 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
             )
         return chunk
 
-    return project, chunker
+    chunk_size_max = (DEFAULT_CHUNK if fill_method is None
+                      else int(fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)))
+    return project, chunker, chunk_size_max
 
 
 def run_retention_pipeline(
@@ -103,9 +163,11 @@ def run_retention_pipeline(
     consults the snapshot log (whole-tier skip), then the wave checkpoints
     (partial-tier skip).
 
-    Every tier writes rollup/ and chunks/ through the one fused
-    virtual-spine fill+encode pass; fuse_fill_and_chunks=False (the
-    removed materialized-spine path) raises."""
+    Every tier writes rollup/ and chunks/; the chunks come from
+    fused_fill_builder: the one fused virtual-spine fill+encode pass, or
+    a direct encode of the valid rows with fill_method=None.
+    fuse_fill_and_chunks=False (the removed materialized-spine path)
+    raises."""
     # n_salt, fill_knobs["pad_buckets"] and fuse_fill_and_chunks=True are
     # accepted and ignored for the frozen callers bench.py and
     # perfbench/harness.py (queries.py passes n_salt to base_rollup, which
@@ -116,13 +178,6 @@ def run_retention_pipeline(
             "fill path (a filled/ table), which was removed; the fused "
             "virtual-spine pass is the only fill path"
         )
-    if (drift is None) != (not drift_cols):
-        raise ValueError(
-            "drift and drift_cols go together: a drift table without "
-            "drift_cols would be silently ignored (EDK would fall back to "
-            "the synthetic linear-time drift), and drift_cols without a "
-            "table cannot be joined"
-        )
     # NOTE r6: external drift now rides the fused virtual-spine path too —
     # gapfill_virtual_chunks chunk-assigns the drift table rows and the
     # kernel looks gap-point covariates up by exact bucket (bit-identical
@@ -131,6 +186,10 @@ def run_retention_pipeline(
     # row for every spine bucket of every tier being filled — a cascade
     # over ("1m","1h") needs 1m-granular drift; missing buckets fail fast
     # with the kernel's NaN-drift ValueError, never a silent fallback.
+    project, chunker, _ = fused_fill_builder(
+        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
+        fill_knobs or {}, dict(extra_fill_metrics or {}),
+    )
     run_id = run_id or new_run_id()
     ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
     fmt = table_format or tier_tables(
@@ -145,14 +204,9 @@ def run_retention_pipeline(
         # this, because latest-wins replaces ALL of a refreshed conv's
         # metrics at once — a mismatched refresh would silently thin
         # per-conv metric coverage
-        fill_metrics=json.dumps(
-            [fill_metric, *sorted(extra_fill_metrics or {})]),
+        fill_metrics=metric_set(fill_metric, extra_fill_metrics),
     )
     min_cnt = min_cnt or {}
-    project, chunker = fused_fill_builder(
-        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        fill_knobs or {}, dict(extra_fill_metrics or {}),
-    )
     t_start = time.time()
     metrics = {"run_id": run_id, "tiers": {}}
 

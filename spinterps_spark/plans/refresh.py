@@ -37,17 +37,17 @@ affected-conv count. A day's late data against a year's history touches
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, functions as F
 
-from spinterps_spark.compress.gorilla import DEFAULT_CHUNK, encode_tier_chunks
 from spinterps_spark.operators.rollup import (
     DEFAULT_MIN_CNT, METRIC_COLS, base_rollup, rollup_tier)
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
 from spinterps_spark.plans.generations import current_rollup, tier_horizons
+from spinterps_spark.plans.pipeline import (
+    fused_fill_builder, metric_set, stamped_metrics)
 from spinterps_spark.sources.tableformat import tier_tables
 
 
@@ -88,32 +88,32 @@ def run_refresh_pass(
 ) -> dict:
     """Merge `new_turns` into an existing tier store at `out_dir`.
 
-    extra_fill_metrics must MATCH what the pipeline wrote (same
-    {name: rollup-expression} dict): a refresh delta's chunk schema has
-    to union with the base generation's, and the re-encoded conversations
-    replace ALL their metrics at once (latest-wins is per conv_id).
-    Requires a fill_method (the no-fill encode is single-metric).
+    extra_fill_metrics must MATCH the store's stamped metric set (what
+    the pipeline wrote, or the last evolve added): a refresh delta's
+    chunk schema has to union with the base generation's, and the
+    re-encoded conversations replace ALL their metrics at once
+    (latest-wins is per conv_id).
 
     `tiers` must be the store's cascade order (finest first, as the
-    pipeline wrote it). fill_method=None encodes the merged valid series
-    directly (stores written without gap fill); otherwise the affected
-    conversations are re-filled with the same conv-local kernel the
-    pipeline uses, which makes refresh-then-read bit-identical to a full
-    pipeline rerun over the union of all turns (tests/test_refresh.py).
+    pipeline wrote it). The affected conversations' chunks are re-encoded
+    by the pipeline's own encoder (plans/pipeline.fused_fill_builder):
+    re-filled with the same conv-local kernel for a filled store, or
+    encoded directly from the merged valid rows with fill_method=None
+    (stores written without gap fill). That makes refresh-then-read
+    bit-identical to a full rebuild over the union of all turns
+    (tests/test_refresh.py). Arguments and the metric set are validated
+    before anything is committed.
 
     Returns a metrics dict: affected conv count, per-tier rows merged and
     chunks published, wall time.
     """
-    if (drift is None) != (not drift_cols):
-        raise ValueError(
-            "drift and drift_cols go together (same contract as "
-            "run_retention_pipeline): the drift table must hold a row for "
-            "every spine bucket of every refreshed tier"
-        )
+    project, chunker, chunk_size_max = fused_fill_builder(
+        fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
+        dict(fill_knobs or {}), dict(extra_fill_metrics or {}),
+    )
     run_id = run_id or new_run_id()
     t0 = time.time()
     min_cnt = min_cnt or {}
-    fill_knobs = dict(fill_knobs or {})
     ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
     rfmt = tier_tables(spark, os.path.join(out_dir, "rollup"))
     cfmt = tier_tables(spark, os.path.join(out_dir, "chunks"))
@@ -123,13 +123,12 @@ def run_refresh_pass(
     # into its commit rows (settings-as-attributes): latest-wins replaces
     # ALL of a refreshed conv's metrics at once, so a mismatched set would
     # silently thin per-conv metric coverage with no failure anywhere
-    mine = json.dumps([fill_metric, *sorted(extra_fill_metrics or {})])
-    stamped = [s["fill_metrics"] for s in rfmt.snapshots()
-               if s.get("fill_metrics")]
-    if stamped and stamped[-1] != mine:
+    mine = metric_set(fill_metric, extra_fill_metrics)
+    stamped = stamped_metrics(rfmt)
+    if stamped is not None and stamped != mine:
         raise ValueError(
             f"refresh metric set {mine} does not match the store's "
-            f"{stamped[-1]} — pass the same fill_metric/extra_fill_metrics "
+            f"{stamped} — pass the same fill_metric/extra_fill_metrics "
             "the pipeline used"
         )
 
@@ -228,44 +227,13 @@ def run_refresh_pass(
             })
 
         if not cfmt.committed(run_id, stage):
-            extras = dict(extra_fill_metrics or {})
-            if extras and fill_method is None:
-                raise ValueError(
-                    "extra_fill_metrics requires a fill_method (the "
-                    "no-fill encode path is single-metric)"
-                )
-            from spinterps_spark.plans.pipeline import fused_fill_builder
-
-            project, chunker = fused_fill_builder(
-                fill_metric, fill_method, coords, vg_dim, drift,
-                drift_cols, fill_knobs, extras,
-            )
-            ser = project(merged.where(F.col("valid")))
+            # never resurrect aged-out points: the chunker trims at the
+            # horizon (after the fill for a filled store, so pre-horizon
+            # refs keep anchoring it — code-review r6 finding #1)
             hz = horizons.get(tier)
-            if fill_method is None:
-                # no-fill store: refs ARE the content — exact trim at the
-                # horizon (never resurrect aged-out points)
-                if hz is not None:
-                    ser = ser.where(
-                        F.unix_timestamp("bucket_ts") >= F.lit(int(hz)))
-
-                def chunk(sub, _tier=tier):
-                    return encode_tier_chunks(
-                        sub.withColumnRenamed(fill_metric, "value_filled"),
-                        _tier,
-                    )
-            else:
-                # filled store: trim AFTER the fill, inside the kernel
-                # (grid_min_ts) — pre-horizon refs must keep anchoring the
-                # interpolation or filled points just after the horizon
-                # vanish vs a full rebuild (code-review r6 finding #1);
-                # aged-out grid points are still never emitted. The
-                # closure itself is the pipeline's own (fused_fill_builder)
-                # so the two call sites cannot drift.
-                chunk = chunker(tier, None if hz is None else int(hz))
-
             chunks = run_waved_pass(
-                spark, ser, chunk, chunk_loc, ckpt, run_id,
+                spark, project(merged.where(F.col("valid"))),
+                chunker(tier, hz), chunk_loc, ckpt, run_id,
                 f"refresh_chunks:{tier}", n_waves=n_waves,
             )
             cfmt.commit_tier(tier, chunks, chunk_loc, {
@@ -276,9 +244,7 @@ def run_refresh_pass(
                 # stamped into every row): lets routed reads derive the
                 # pruning span from commit metadata instead of an eager
                 # max(chunk_size) scan per leg (ADVICE r6 #5)
-                "chunk_size_max": int(
-                    fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)
-                    if fill_method is not None else DEFAULT_CHUNK),
+                "chunk_size_max": chunk_size_max,
             })
             metrics["tiers"][tier] = {
                 "commit": "published", "wall_sec": time.time() - t_tier,

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from spinterps_spark import datagen
 from spinterps_spark.compress.gorilla import decode_tier_chunks
 from spinterps_spark.plans.evolve import run_evolve_pass
+from spinterps_spark.plans.merge import run_merge_pass
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 from spinterps_spark.plans.refresh import run_refresh_pass
 from spinterps_spark.plans.retention import (
@@ -179,32 +180,61 @@ def test_evolve_input_guards(spark, tmp_path):
         run_evolve_pass(spark, d, new_metrics=M3, tiers=(TIER,))  # wrong set
 
 
-def test_evolve_no_fill_store(spark, tmp_path):
-    """fill_method=None: the new metric's chunks are a direct encode of
-    the merged valid rollup (refresh's no-fill rule), horizon-trimmed
-    exactly — decoded points equal the rollup expression verbatim."""
+def _no_fill_store(spark, t, d, horizon):
+    """A hand-built store written WITHOUT gap fill: one committed 1m
+    rollup, the valid rows' chunks encoded directly, retained at
+    `horizon`."""
+    from spinterps_spark.compress.gorilla import encode_tier_chunks
     from spinterps_spark.operators.rollup import base_rollup
-    from spinterps_spark.plans.generations import current_rollup
 
-    t = datagen.transcripts_spark(spark, seed=89, n_turns_target=1200)
-    bounds = t.agg(F.min(F.unix_timestamp("ts")).alias("mn"),
-                   F.max(F.unix_timestamp("ts")).alias("mx")).first()
-    mid = bounds.mn + (bounds.mx - bounds.mn) // 2
-    d = str(tmp_path / "s")
     roll = base_rollup(t, TIER)
     roll.write.parquet(os.path.join(d, f"rollup/tier={TIER}/wave=0"))
     tier_tables(spark, os.path.join(d, "rollup")).commit_tier(
         TIER, None, os.path.join(d, f"rollup/tier={TIER}"),
         {"run_id": "p0", "stage": f"rollup:{TIER}"})
-    from spinterps_spark.compress.gorilla import encode_tier_chunks
-
     encode_tier_chunks(
         roll.where("valid").select(
             "conv_id", "bucket_ts",
             (F.col("tok_len_sum") / F.col("turn_cnt")).alias("value_filled")),
         TIER,
     ).write.parquet(os.path.join(d, f"chunks/tier={TIER}/wave=0"))
-    run_retention_pass(spark, d, TIER, int(mid), run_id="ret", n_waves=2)
+    run_retention_pass(spark, d, TIER, int(horizon), run_id="ret", n_waves=2)
+
+
+def _mid(t):
+    bounds = t.agg(F.min(F.unix_timestamp("ts")).alias("mn"),
+                   F.max(F.unix_timestamp("ts")).alias("mx")).first()
+    return bounds.mn + (bounds.mx - bounds.mn) // 2
+
+
+def _no_fill_want(spark, d, horizon, metrics):
+    """Every metric's points as a direct encode of the store's merged
+    valid rollup trimmed at the horizon would decode them."""
+    from spinterps_spark.plans.generations import current_rollup
+
+    valid = (current_rollup(spark, d, TIER).where("valid")
+             .where(F.unix_timestamp("bucket_ts") >= int(horizon)))
+    want = None
+    for name, expr in metrics.items():
+        leg = valid.select("conv_id", "bucket_ts",
+                           F.expr(expr).alias("value"),
+                           F.lit(name).alias("metric"))
+        want = leg if want is None else want.unionByName(leg)
+    return (want.toPandas().sort_values(["conv_id", "metric", "bucket_ts"])
+            .reset_index(drop=True))
+
+
+NO_FILL_METRICS = {"tok_len_mean": "tok_len_sum / turn_cnt", **M2}
+
+
+def test_evolve_no_fill_store(spark, tmp_path):
+    """fill_method=None: the new metric's chunks are a direct encode of
+    the merged valid rollup (refresh's no-fill rule), horizon-trimmed
+    exactly — decoded points equal the rollup expression verbatim."""
+    t = datagen.transcripts_spark(spark, seed=89, n_turns_target=1200)
+    mid = _mid(t)
+    d = str(tmp_path / "s")
+    _no_fill_store(spark, t, d, mid)
     # a gorilla_chunk knob is IGNORED by the no-fill encode (DEFAULT_CHUNK)
     # — the stamp must record what was encoded, not the knob, or the
     # metadata pruning span silently drops rows (code-review r7 #3)
@@ -218,16 +248,60 @@ def test_evolve_no_fill_store(spark, tmp_path):
         if s.get("stage") == f"evolve:{TIER}")
     assert int(ev_row["chunk_size_max"]) == DEFAULT_CHUNK
     got = _pts(spark, d, where="metric = 'turn_rate'")
-    want = (
-        current_rollup(spark, d, TIER).where("valid")
-        .where(F.unix_timestamp("bucket_ts") >= int(mid))
-        .select("conv_id", "bucket_ts",
-                F.expr(M2["turn_rate"]).alias("value"),
-                F.lit("turn_rate").alias("metric"))
-        .toPandas().sort_values(["conv_id", "bucket_ts"])
-        .reset_index(drop=True)[got.columns.tolist()]
-    )
+    want = _no_fill_want(spark, d, mid, M2)[got.columns.tolist()]
     pd.testing.assert_frame_equal(got, want, check_exact=True)
     # old metric rows untouched: padded with the primary name, present
     old = _pts(spark, d, where="metric = 'tok_len_mean'")
     assert len(old) > 0
+
+
+def _evolved_no_fill_store(spark, t, d, horizon):
+    _no_fill_store(spark, t, d, horizon)
+    run_evolve_pass(spark, d, new_metrics=M2, tiers=(TIER,),
+                    fill_method=None, n_waves=2, run_id="ev")
+
+
+def test_evolved_no_fill_store_refresh(spark, tmp_path):
+    """Refresh of an evolved no-fill store re-encodes every metric of the
+    evolved set through the encoder evolve used: both logs get the
+    refresh commit, and each decoded metric equals a direct encode of the
+    merged valid rollup trimmed at the horizon."""
+    t = datagen.transcripts_spark(spark, seed=89, n_turns_target=1200)
+    mid = _mid(t)
+    d = str(tmp_path / "s")
+    _evolved_no_fill_store(spark, t, d, mid)
+    late = datagen.transcripts_spark(spark, seed=80, n_turns_target=100)
+    run_refresh_pass(spark, late, d, tiers=(TIER,), fill_method=None,
+                     extra_fill_metrics=M2, n_waves=2, run_id="r1")
+    for log in ("rollup", "chunks"):
+        fmt = tier_tables(spark, os.path.join(d, log))
+        row = next(s for s in fmt.snapshots()
+                   if s.get("run_id") == "r1"
+                   and s.get("stage") == f"refresh:{TIER}")
+        assert spark.read.parquet(
+            os.path.join(row["data_location"], "wave=*")).count() > 0, log
+    pd.testing.assert_frame_equal(
+        _pts(spark, d), _no_fill_want(spark, d, mid, NO_FILL_METRICS),
+        check_exact=True)
+
+
+def test_evolved_no_fill_stores_merge(spark, tmp_path):
+    """Combine-merge of two evolved no-fill stores (disjoint turn sets over
+    shared conversations): the overlap's re-encode carries every metric,
+    and each decoded metric equals a direct encode of the merged valid
+    rollup trimmed at the horizon."""
+    t = datagen.transcripts_spark(spark, seed=89, n_turns_target=1200)
+    mid = _mid(t)
+    half = F.xxhash64("conv_id", "ts") % 2 == 0
+    dirs = [str(tmp_path / k) for k in ("a", "b")]
+    for d, part in zip(dirs, (t.where(half), t.where(~half))):
+        _evolved_no_fill_store(spark, part, d, mid)
+    dm = str(tmp_path / "m")
+    m = run_merge_pass(spark, dirs, dm, tiers=(TIER,), mode="combine",
+                       fill_method=None, extra_fill_metrics=M2, n_waves=2,
+                       run_id="mg")
+    assert m["n_overlap_convs"] > 0
+    assert m["tiers"][TIER]["chunks_reencoded"] > 0
+    pd.testing.assert_frame_equal(
+        _pts(spark, dm), _no_fill_want(spark, dm, mid, NO_FILL_METRICS),
+        check_exact=True)

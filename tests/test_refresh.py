@@ -409,6 +409,19 @@ def test_refresh_rejects_mismatched_metric_set(spark, tmp_path):
     assert m["tiers"]["1m"]["commit"] == "published"
 
 
+def test_unknown_fill_method_rejected_before_any_commit(spark, stores):
+    """A fill method the kernel does not know fails up front: no rollup
+    delta is committed first (the chunk pass would fail inside a Spark
+    task and leave the two logs disagreeing)."""
+    d = stores["dirs"]["a"]
+    logs = [tier_tables(spark, os.path.join(d, t)) for t in ("rollup", "chunks")]
+    before = [f.snapshots() for f in logs]
+    with pytest.raises(ValueError, match="fill_method"):
+        run_refresh_pass(spark, stores["slices"]["d1"], d, tiers=TIERS,
+                         fill_method="idw", n_waves=2, run_id="r-bad")
+    assert [f.snapshots() for f in logs] == before
+
+
 def test_multi_metric_rejects_duplicate_names(spark):
     from spinterps_spark.operators.gapfill import gapfill_virtual_chunks
 
