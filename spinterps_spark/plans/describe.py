@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import DataFrame
 
-from spinterps_spark.plans.generations import _strip_scheme
+from spinterps_spark.plans.generations import _strip_scheme, commit_kind
 from spinterps_spark.plans.vacuum import TABLE_ROOTS, _dir_bytes, _tier_history
 from spinterps_spark.sources.tableformat import tier_tables
 
@@ -36,22 +36,6 @@ HISTORY_SCHEMA = (
     "data_location string, bytes long, horizon_ts long, "
     "n_expired long, bytes_freed long"
 )
-
-
-def _kind(stage: str) -> str:
-    if stage.startswith("refresh:"):
-        return "delta"
-    if stage.startswith("merge_delta:"):
-        return "delta"  # cross-store merge's overlap re-encode: a delta —
-        # classifying it 'full' would report the live copied base as
-        # superseded (code-review r7 #5)
-    if stage.startswith("evolve:"):
-        return "evolve"  # additive delta: backfill of a new metric
-    if stage.startswith("vacuum:"):
-        return "vacuum"
-    if stage.startswith("meta:"):
-        return "meta"  # settings-only marker (e.g. evolved metric set)
-    return "full"
 
 
 def history(spark, out_dir: str, with_sizes: bool = False) -> DataFrame:
@@ -79,14 +63,13 @@ def history(spark, out_dir: str, with_sizes: bool = False) -> DataFrame:
             # the live window starts at the LAST full generation
             last_full = max(
                 (i for i, s in enumerate(hist)
-                 if _kind(str(s.get("stage", ""))) == "full"),
+                 if commit_kind(s.get("stage")) == "full"),
                 default=-1,
             )
             expired_locs = set()
             for s in snaps:
-                if s.get("tier") == tier and str(
-                    s.get("stage", "")
-                ).startswith("vacuum:"):
+                if s.get("tier") == tier and commit_kind(
+                        s.get("stage")) == "vacuum":
                     expired_locs.update(
                         json.loads(s.get("expired_locations", "[]")))
             seq = 0
@@ -94,7 +77,7 @@ def history(spark, out_dir: str, with_sizes: bool = False) -> DataFrame:
                 if s.get("tier") != tier:
                     continue
                 stage = str(s.get("stage", ""))
-                kind = _kind(stage)
+                kind = commit_kind(stage)
                 loc = s.get("data_location", "")
                 if kind in ("vacuum", "meta"):
                     status = "applied"

@@ -49,6 +49,22 @@ from pyspark.sql import DataFrame, functions as F
 from spinterps_spark.sources.tableformat import tier_tables
 
 
+_KINDS = {"refresh": "delta", "merge_delta": "delta", "evolve": "evolve",
+          "vacuum": "vacuum", "meta": "meta"}
+
+
+def commit_kind(stage) -> str:
+    """Classify a snapshot-log row by its stage prefix (see the module
+    docstring): 'full' (a complete generation), 'delta' (refresh: or
+    merge_delta:, latest-wins per conv_id), 'evolve' (additive delta),
+    'vacuum' (expiry marker) or 'meta' (settings-only stamp). The one copy
+    of this rule: a delta misread as full would let vacuum expire the live
+    base it rides on (code-review r7 #1), and merge_delta read as full
+    would report the copied base as superseded (code-review r7 #5)."""
+    prefix, sep, _ = str(stage or "").partition(":")
+    return _KINDS.get(prefix, "full") if sep else "full"
+
+
 def _strip_scheme(loc: str) -> str:
     return loc[7:] if loc.startswith("file://") else loc
 
@@ -72,17 +88,13 @@ def generation_plan(fmt, tier: str, default_base: str, as_of: str | None = None)
     for s in fmt.snapshots():
         if s.get("tier") != tier:
             continue
-        stage = str(s.get("stage", ""))
-        if stage.startswith("vacuum:") or stage.startswith("meta:"):
+        kind = commit_kind(s.get("stage"))
+        if kind in ("vacuum", "meta"):
             # metadata-only rows (expiry markers, evolved-settings stamps):
             # neither base nor delta — but valid as_of anchors (state ==
             # the preceding data commit)
             pass
-        elif (stage.startswith("refresh:") or stage.startswith("evolve:")
-              or stage.startswith("merge_delta:")):
-            # merge_delta (plans/merge.py): the overlap conversations of a
-            # cross-store merge, re-encoded from the merged rollup —
-            # refresh-shaped (latest-wins per conv_id over the copied base)
+        elif kind in ("delta", "evolve"):
             deltas.append(s)
         else:
             # a full rewrite was computed FROM the merged view, so it
@@ -111,9 +123,7 @@ def _raise_if_expired(fmt, tier: str, as_of: str | None, missing: str):
 
     what = f"snapshot {as_of!r}" if as_of is not None else "current view"
     for s in fmt.snapshots():
-        if s.get("tier") != tier or not str(s.get("stage", "")).startswith(
-            "vacuum:"
-        ):
+        if s.get("tier") != tier or commit_kind(s.get("stage")) != "vacuum":
             continue
         if missing in _json.loads(s.get("expired_locations", "[]")):
             raise RuntimeError(
@@ -170,7 +180,7 @@ def read_current(spark, fmt, tier: str, default_base: str,
         if later is not None:
             leg = leg.join(F.broadcast(later), "conv_id", "left_anti")
         legs.append(leg)
-        if str(s.get("stage", "")).startswith("evolve:"):
+        if commit_kind(s.get("stage")) == "evolve":
             if s.get("primary_metric"):
                 primary = primary or s["primary_metric"]
             continue
@@ -242,8 +252,8 @@ def tier_chunk_size_bound(spark, out_dir: str, tier: str) -> int | None:
     for s in fmt.snapshots():
         if s.get("tier") != tier:
             continue
-        stage = str(s.get("stage", ""))
-        if stage.startswith("vacuum:") or stage.startswith("meta:"):
+        kind = commit_kind(s.get("stage"))
+        if kind in ("vacuum", "meta"):
             continue
         raw = s.get("chunk_size_max")
         try:
@@ -252,8 +262,7 @@ def tier_chunk_size_bound(spark, out_dir: str, tier: str) -> int | None:
             v = None
         if v is not None and v <= 0:
             v = None  # stamped over an empty source: no information
-        if (stage.startswith("refresh:") or stage.startswith("evolve:")
-                or stage.startswith("merge_delta:")):
+        if kind in ("delta", "evolve"):
             # delta over the existing chain: bound must cover both sides
             if have_base and bound is not None:
                 bound = max(bound, v) if v is not None else None

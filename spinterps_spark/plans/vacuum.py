@@ -59,7 +59,7 @@ import shutil
 import time
 
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
-from spinterps_spark.plans.generations import _strip_scheme, read_current
+from spinterps_spark.plans.generations import _strip_scheme, commit_kind, read_current
 from spinterps_spark.sources.tableformat import tier_tables
 
 TABLE_ROOTS = ("rollup", "chunks")
@@ -159,28 +159,11 @@ def run_flatten_pass(
             "wall_sec": time.time() - t0}
 
 
-# every delta-shaped stage generation_plan recognizes — keep this in sync
-# with plans/generations.py: a delta misread as a FULL generation would
-# make _expirable expire the live base it rides on (code-review r7 #1)
-_DELTA_PREFIXES = ("refresh:", "evolve:", "merge_delta:")
-
-
-def _is_delta(s: dict) -> bool:
-    return str(s.get("stage", "")).startswith(_DELTA_PREFIXES)
-
-
 def _tier_history(snaps: list[dict], tier: str) -> list[dict]:
     """The tier's data-bearing commits in log order (metadata-only vacuum
     and meta: settings rows skipped)."""
-    out = []
-    for s in snaps:
-        if s.get("tier") != tier:
-            continue
-        stage = str(s.get("stage", ""))
-        if stage.startswith("vacuum:") or stage.startswith("meta:"):
-            continue
-        out.append(s)
-    return out
+    return [s for s in snaps if s.get("tier") == tier
+            and commit_kind(s.get("stage")) not in ("vacuum", "meta")]
 
 
 def _expirable(history: list[dict], keep_last: int):
@@ -193,7 +176,8 @@ def _expirable(history: list[dict], keep_last: int):
     resets the delta list at each full rewrite) and full generations
     before it are superseded — both unreferenced by any retained snapshot.
     """
-    full_pos = [i for i, s in enumerate(history) if not _is_delta(s)]
+    full_pos = [i for i, s in enumerate(history)
+                if commit_kind(s.get("stage")) == "full"]
     if len(full_pos) < keep_last:
         # fewer full generations than the retention window: even the
         # oldest deltas are still reachable from the default base
@@ -385,7 +369,7 @@ def run_vacuum_pass(
     all_tiers = sorted({
         s["tier"] for tb in TABLE_ROOTS for s in snaps[tb]
         if s.get("tier")
-        and not str(s.get("stage", "")).startswith("vacuum:")
+        and commit_kind(s.get("stage")) != "vacuum"
     })
     if tiers is None:
         tiers = all_tiers
@@ -440,8 +424,7 @@ def run_vacuum_pass(
         # data_location: the surviving base — keeps the low-level
         # latest-commit reader (ParquetTierTables.read_tier) coherent
         kept_full = [s for s in _kept
-                     if not str(s.get("stage", "")).startswith(
-                         _DELTA_PREFIXES)]
+                     if commit_kind(s.get("stage")) == "full"]
         fmt.commit_tier(
             tier, None, kept_full[-1]["data_location"] if kept_full
             else os.path.join(out_dir, f"{tb}/tier={tier}"),

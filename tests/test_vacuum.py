@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from spinterps_spark import datagen
 from spinterps_spark.compress.gorilla import decode_tier_chunks
 from spinterps_spark.plans.generations import (
-    current_chunks, current_rollup, generation_plan)
+    commit_kind, current_chunks, current_rollup, generation_plan)
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 from spinterps_spark.plans.refresh import run_refresh_pass
 from spinterps_spark.plans.retention import run_retention_pass
@@ -95,6 +95,17 @@ def store(spark, tmp_path_factory):
     )
     return {"dirs": dirs, "commits": commits,
             "layout_stat": [(p, os.path.getmtime(p)) for p in layout_files]}
+
+
+@pytest.mark.parametrize("stage,kind", [
+    ("rollup:1m", "full"), ("chunks:1h", "full"), ("retention:1m", "full"),
+    ("compaction:1m", "full"), ("flatten:1m", "full"), ("merge:1m", "full"),
+    ("refresh:1m", "delta"), ("merge_delta:1h", "delta"),
+    ("evolve:1m", "evolve"), ("vacuum:1d", "vacuum"),
+    ("meta:evolve:1m", "meta"), ("", "full"), (None, "full"),
+])
+def test_commit_kind(stage, kind):
+    assert commit_kind(stage) == kind
 
 
 def test_time_travel_reads_the_old_snapshot(spark, store):
