@@ -103,7 +103,7 @@ def run_evolve_pass(
     # (k+1)-metric rebuild, whose per-metric fills are independent
     project, chunker, chunk_size_max = fused_fill_builder(
         fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        dict(fill_knobs or {}), dict(new_metrics),
+        fill_knobs, new_metrics,
     )
     run_id = run_id or new_run_id()
     t0 = time.time()

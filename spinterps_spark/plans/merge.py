@@ -109,7 +109,7 @@ def run_merge_pass(
         raise ValueError(f"mode must be one of {MODES}, got {mode!r}")
     project, chunker, chunk_size_max = fused_fill_builder(
         fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        dict(fill_knobs or {}), dict(extra_fill_metrics or {}),
+        fill_knobs, extra_fill_metrics,
     )
     run_id = run_id or new_run_id()
     t0 = time.time()

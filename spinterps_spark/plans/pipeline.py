@@ -60,8 +60,10 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
     - no-fill stores (fill_method=None) hold only the refs: the rows are
       trimmed at the horizon and each metric is encoded directly.
 
-    With extras, every metric's chunks carry a `metric` column (primary =
-    fill_metric); without, the single-metric chunk schema."""
+    extras ({name: SQL expression over the rollup columns}) and
+    fill_knobs may be None. With extras, every metric's chunks carry a
+    `metric` column (primary = fill_metric); without, the single-metric
+    chunk schema."""
     if (drift is None) != (not drift_cols):
         raise ValueError(
             "drift and drift_cols go together: a drift table without "
@@ -74,6 +76,8 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
             f"fill_method must be one of {FILL_METHODS} or None (no fill), "
             f"got {fill_method!r}"
         )
+    fill_knobs = dict(fill_knobs or {})
+    extras = dict(extras or {})
     names = [fill_metric, *extras]
 
     def project(rolled_valid: DataFrame) -> DataFrame:
@@ -115,6 +119,9 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
             )
         return chunk
 
+    # the no-fill encode ignores the gorilla_chunk knob: stamping the knob
+    # would under-size the pruning span and drop rows from routed reads
+    # (code-review r7 #3)
     chunk_size_max = (DEFAULT_CHUNK if fill_method is None
                       else int(fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)))
     return project, chunker, chunk_size_max
@@ -188,7 +195,7 @@ def run_retention_pipeline(
     # with the kernel's NaN-drift ValueError, never a silent fallback.
     project, chunker, _ = fused_fill_builder(
         fill_metric, fill_method, coords, vg_dim, drift, drift_cols,
-        fill_knobs or {}, dict(extra_fill_metrics or {}),
+        fill_knobs, extra_fill_metrics,
     )
     run_id = run_id or new_run_id()
     ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
