@@ -84,10 +84,6 @@ class BitReader:
         return out
 
 
-def _twos(value: int, bits: int) -> int:
-    return value & ((1 << bits) - 1)
-
-
 def _untwos(raw: int, bits: int) -> int:
     if raw & (1 << (bits - 1)):
         return raw - (1 << bits)
@@ -159,14 +155,6 @@ def decode_ts(first_ts: int, data: bytes, n: int) -> np.ndarray:
         delta += dod
         out[i] = out[i - 1] + delta
     return out
-
-
-def _leading_zeros64(x: int) -> int:
-    return 64 - x.bit_length() if x else 64
-
-
-def _trailing_zeros64(x: int) -> int:
-    return (x & -x).bit_length() - 1 if x else 64
 
 
 def encode_vals(vals: np.ndarray) -> bytes:

@@ -24,7 +24,6 @@ stays small (4-16) and constant, not proportional to data.
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 import time
@@ -261,10 +260,3 @@ def run_waved_pass(
 
 def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
-
-
-def summarize(ckpt: CheckpointLog, run_id: str) -> str:
-    rows = [r.asDict() for r in ckpt.read().where(F.col("run_id") == run_id).collect()]
-    for r in rows:
-        r["ts"] = str(r["ts"])
-    return json.dumps(rows, default=str)

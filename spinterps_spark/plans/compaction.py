@@ -20,11 +20,11 @@ fragmentation that actually grows without bound is at the FILE level, and
 fixing it needs no decode: binary chunk payloads are moved as opaque bytes.
 
 Spark-first mechanics:
-- copy-on-write into a new generation directory, published by ONE metadata
-  commit on the tier's snapshot log (sources/tableformat.py) — readers
-  through plans/retention.read_tier_chunks flip atomically; a crash before
-  the commit leaves the previous generation fully readable (same contract
-  as the retention pass).
+- copy-on-write into a new generation directory through
+  plans/retention.rewrite_generation (the procedure retention and flatten
+  share), published by ONE metadata commit on the tier's snapshot log —
+  readers flip atomically; a crash before the commit leaves the previous
+  generation fully readable.
 - the rewrite is `repartitionByRange(n_target, conv_id, chunk_start_ts)` +
   `sortWithinPartitions`: n_target is sized from the MEASURED source bytes
   (target_file_mb per output file), and range clustering keeps each output
@@ -50,38 +50,25 @@ import math
 import os
 import time
 
-from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
-from spinterps_spark.sources.tableformat import (
-    pinned_tier_validator, release_pin, tier_tables)
+from spinterps_spark.plans.checkpoint import new_run_id
+from spinterps_spark.plans.generations import _strip_scheme
+from spinterps_spark.plans.retention import read_tier_chunks, rewrite_generation
+from spinterps_spark.sources.tableformat import tier_tables
 
 
-def _local_path(uri: str) -> str:
-    return uri[7:] if uri.startswith("file://") else uri
-
-
-def _tier_source(spark, out_dir: str, tier: str):
-    """Current merged view for the tier (plans/retention.read_tier_chunks —
-    folds refresh deltas, so compaction flattens the delta chain like a
-    table-format compaction resolving delete files), plus the file
-    inventory beneath it."""
-    from spinterps_spark.plans.retention import read_tier_chunks
-
-    fmt = tier_tables(spark, os.path.join(out_dir, "chunks"))
-    df = read_tier_chunks(spark, out_dir, tier)
-    # inputFiles() lists every FileScan leaf of the merged plan, which
-    # includes each refresh delta's convs-list parquet (the broadcast
-    # anti-join side) — metadata, not chunk bytes. Keep only chunk-table
-    # files. Superseded base rows a delta replaces still count, which
-    # overstates bytes slightly in the SAFE direction (more, smaller
-    # output files than target_file_mb, never fewer larger ones).
+def _chunk_files(df, out_dir: str) -> list[str]:
+    """Chunk-table files beneath the tier's merged view: inputFiles() minus
+    each refresh delta's convs-list parquet (the broadcast anti-join side).
+    Superseded base rows a delta replaces still count, which overstates
+    bytes in the SAFE direction (more, smaller output files than
+    target_file_mb, never fewer larger ones)."""
     sidecar_root = os.path.join(
         os.path.realpath(out_dir), "refresh", "run="
     )
-    files = [
-        p for p in (_local_path(f) for f in df.inputFiles())
+    return [
+        p for p in (_strip_scheme(f) for f in df.inputFiles())
         if not os.path.realpath(p).startswith(sidecar_root)
     ]
-    return fmt, df, files
 
 
 def run_compaction_pass(
@@ -99,17 +86,14 @@ def run_compaction_pass(
     `compact` leg of the gorilla_roundtrip driver-gate row: decoded points
     after compaction hash-equal the pre-compaction generation).
 
-    Resumable like the retention pass: same (run_id, stage) already
-    committed -> whole pass skipped; crash mid-rewrite redoes only the
-    missing waves (n_waves=1 default — compaction output is one clustered
-    artifact, and each extra wave multiplies the file count by splitting
-    the range clustering across conv-hash waves).
+    Resumable like the retention pass (rewrite_generation): same (run_id,
+    stage) already committed -> whole pass skipped; crash mid-rewrite
+    redoes only the missing waves (n_waves=1 default — compaction output
+    is one clustered artifact, and each extra wave multiplies the file
+    count by splitting the range clustering across conv-hash waves).
     """
     run_id = run_id or new_run_id()
-    t0 = time.time()
-    stage = f"compaction:{tier}"
     fmt = table_format or tier_tables(spark, os.path.join(out_dir, "chunks"))
-    ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
 
     if getattr(fmt, "manages_files", False):
         # Iceberg manages its own data files: delegate the bin-pack +
@@ -120,6 +104,7 @@ def run_compaction_pass(
         # No (run_id, stage) resume skip here: rewrite_data_files records
         # no run marker, so a retry repeats the rewrite — content-safe
         # (the procedure preserves rows), just repeated write work.
+        t0 = time.time()
         res = [r.asDict() if hasattr(r, "asDict") else dict(r)
                for r in fmt.rewrite_data_files(
                    target_file_mb, where=f"tier = '{tier}'")]
@@ -127,55 +112,27 @@ def run_compaction_pass(
                 "mode": "iceberg-rewrite-data-files", "result": res,
                 "wall_sec": time.time() - t0}
 
-    pin = os.path.join(out_dir, "_pins", f"compaction-{tier}-{run_id}.json")
-    if fmt.committed(run_id, stage):
-        release_pin(pin)  # converge a crash between commit and release
-        return {"run_id": run_id, "tier": tier, "commit": "skipped",
-                "wall_sec": time.time() - t0}
-
-    # pin the tier history the rewrite folds; revalidated under the commit's
-    # atomic claim so a concurrent refresh delta can't be silently dropped
-    validate = pinned_tier_validator(pin, [(fmt, tier)])
-    _, src, files = _tier_source(spark, out_dir, tier)
-    # sizes through the seam: the posix getsize is the parquet fallback's
-    # own valid implementation (Iceberg never reaches here)
-    bytes_before = fmt.file_bytes(files)
-    n_target = max(1, math.ceil(bytes_before / int(target_file_mb * (1 << 20))))
-    per_wave = max(1, math.ceil(n_target / max(n_waves, 1)))
-
     def repack(sub):
+        # output file count sized from the MEASURED source bytes, through
+        # the seam (the posix getsize is the parquet fallback's own valid
+        # implementation; Iceberg never reaches here)
+        src_bytes = fmt.file_bytes(_chunk_files(sub, out_dir))
+        n_target = max(1, math.ceil(src_bytes / int(target_file_mb * (1 << 20))))
+        per_wave = max(1, math.ceil(n_target / max(n_waves, 1)))
         return sub.repartitionByRange(
             per_wave, "conv_id", "chunk_start_ts"
         ).sortWithinPartitions("conv_id", "chunk_start_ts")
 
-    gen_loc = os.path.join(out_dir, f"chunks_compacted/tier={tier}/gen={run_id}")
-    compacted = run_waved_pass(
-        spark, src, repack, gen_loc,
-        ckpt, run_id, stage, n_waves=n_waves,
-    )
-    files_after = [_local_path(f) for f in compacted.inputFiles()]
-    bytes_after = fmt.file_bytes(files_after)
-    # one narrow int-column aggregate per (rare, maintenance-time) pass so
-    # every (frequent) routed read can take the pruning span from commit
-    # metadata instead of running its own max(chunk_size) job (ADVICE r6 #5)
-    cs_max = 0
-    if "chunk_size" in compacted.columns:
-        import pyspark.sql.functions as F
+    def sizes(src, gen):
+        files = _chunk_files(src, out_dir)
+        files_after = [_strip_scheme(f) for f in gen.inputFiles()]
+        return {"files_before": len(files), "files_after": len(files_after),
+                "bytes_before": int(fmt.file_bytes(files)),
+                "bytes_after": int(fmt.file_bytes(files_after))}
 
-        cs_max = compacted.agg(F.max("chunk_size")).first()[0] or 0
-    props = {
-        "run_id": run_id, "stage": stage,
-        "target_file_mb": int(target_file_mb),
-        "files_before": len(files), "files_after": len(files_after),
-        "bytes_before": int(bytes_before), "bytes_after": int(bytes_after),
-        "chunk_size_max": int(cs_max),
-    }
-    commit_id = fmt.commit_tier(tier, compacted, gen_loc, props,
-                                validate=validate)
-    release_pin(pin)
-    return {
-        "run_id": run_id, "tier": tier, "commit": commit_id,
-        "files_before": len(files), "files_after": len(files_after),
-        "bytes_before": int(bytes_before), "bytes_after": int(bytes_after),
-        "wall_sec": time.time() - t0,
-    }
+    return rewrite_generation(
+        spark, fmt, out_dir, tier, run_id, f"compaction:{tier}",
+        os.path.join(out_dir, f"chunks_compacted/tier={tier}/gen={run_id}"),
+        lambda: read_tier_chunks(spark, out_dir, tier), repack, sizes,
+        n_waves=n_waves, props={"target_file_mb": int(target_file_mb)},
+    )

@@ -63,7 +63,7 @@ from spinterps_spark.plans.generations import current_rollup, tier_horizons
 from spinterps_spark.plans.pipeline import (
     fused_fill_builder, metric_set, stamped_metrics)
 from spinterps_spark.sources.tableformat import (
-    pinned_tier_validator, release_pin, tier_tables)
+    pin_file, pinned_tier_validator, release_pin, tier_tables)
 
 
 def run_evolve_pass(
@@ -141,7 +141,7 @@ def run_evolve_pass(
     for tier in tiers:
         t_tier = time.time()
         stage = f"evolve:{tier}"
-        pin = os.path.join(out_dir, "_pins", f"evolve-{tier}-{run_id}.json")
+        pin = pin_file(out_dir, "evolve", run_id, tier)
         if cfmt.committed(run_id, stage):
             release_pin(pin)  # converge a crash between commit and release
             # crash window between the chunks commit and the settings

@@ -240,9 +240,12 @@ def current_rollup(spark, out_dir: str, tier: str,
 def tier_chunk_size_bound(spark, out_dir: str, tier: str) -> int | None:
     """Upper bound on the `chunk_size` of every row in the tier's CURRENT
     chunk view, derived from commit metadata alone (chunk_size_max stamped
-    by refresh/retention/compaction/flatten commits). None when the chain
-    is anchored by the pipeline's never-committed layout dirs or any chain
-    link lacks the property (pre-r7 store) — callers then fall back to the
+    by refresh/merge/evolve commits as the encode setting, and by
+    retention/compaction/flatten — plans/retention.rewrite_generation — as
+    the max in their generation's parquet footer stats). None when the
+    chain is anchored by the pipeline's never-committed layout dirs or any
+    chain link lacks the property (pre-r7 store, or a generation whose
+    footers carried no min/max stats) — callers then fall back to the
     per-read max(chunk_size) aggregate. This is NOT a caller claim (the r5
     trap): every stamped value was computed from, or is the exact encode
     setting of, the rows that commit published."""

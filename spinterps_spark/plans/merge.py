@@ -63,7 +63,7 @@ from spinterps_spark.plans.generations import (
 from spinterps_spark.plans.pipeline import (
     fused_fill_builder, metric_set, stamped_metrics)
 from spinterps_spark.sources.tableformat import (
-    pinned_tier_validator, release_pin, tier_tables)
+    pin_file, pinned_tier_validator, release_pin, tier_tables)
 
 MODES = ("combine", "overwrite")
 
@@ -130,7 +130,7 @@ def run_merge_pass(
     # under each publish; PERSISTED under the out store so a crash +
     # concurrent source commit + same-run_id resume conflicts instead of
     # re-capturing the post-commit state (code-review r7 #2).
-    pin = os.path.join(out_dir, "_pins", f"merge-{run_id}.json")
+    pin = pin_file(out_dir, "merge", run_id)
     pin_preexisting = os.path.exists(pin)
     validate = pinned_tier_validator(
         pin, [(f, t) for t in tiers for f in (*src_rfmts, *src_cfmts)])

@@ -1,4 +1,6 @@
-"""Retention: age fine-tier chunks out past a horizon (north-rule third leg).
+"""Retention: age fine-tier chunks out past a horizon (north-rule third leg),
+and `rewrite_generation`, the one copy-on-write generation rewrite behind
+retention, compaction (plans/compaction.py) and flatten (plans/vacuum.py).
 
 Tier COEXISTENCE (1m/1h/1d all written) was already in place; this pass
 completes the retention story: points older than a horizon are dropped from
@@ -10,13 +12,16 @@ Spark-first mechanics (reference analog: the lock-serialized incremental
 netCDF rewrite/restart unit, interp/steps.py:895-949, which lets a crashed
 run keep completed work):
 
-- the pass is COPY-ON-WRITE, like an Iceberg rewrite: surviving chunks are
-  written to a NEW generation directory via the checkpointed wave machinery
+- every generation rewrite is COPY-ON-WRITE, like an Iceberg rewrite: the
+  tier's current merged view is rewritten under the pass's transform
+  (keep-predicate here, range repack for compaction, identity for flatten)
+  into a NEW `gen=<run_id>` directory via the checkpointed wave machinery
   (plans/checkpoint.run_waved_pass — per-wave lineage rows, resumable after
-  executor loss), then ONE metadata commit publishes the new generation in
-  the chunk table's snapshot log (sources/tableformat.py). Readers that go
-  through `read_tier_chunks` flip atomically at the commit; a crash before
-  the commit leaves the previous generation fully readable.
+  executor loss), then ONE metadata commit publishes it in the table's
+  snapshot log (sources/tableformat.py). Readers flip atomically at the
+  commit; a crash before it leaves the previous generation fully readable,
+  and a delta published meanwhile is never silently superseded (the CPiX
+  rewrite contract — the pin is in the generation, see rewrite_generation).
 - the keep/drop predicate needs NO decode: chunk windows are pure functions
   of the row. A chunk with key k = floor(first_ts / span) holds only points
   in [k*span, (k+1)*span), span = chunk_size * tier_seconds, and the
@@ -35,6 +40,7 @@ fraction.
 
 from __future__ import annotations
 
+import glob
 import os
 import time
 
@@ -42,8 +48,7 @@ from pyspark.sql import functions as F
 
 from spinterps_spark import TIER_SECONDS
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
-from spinterps_spark.sources.tableformat import (
-    pinned_tier_validator, release_pin, tier_tables)
+from spinterps_spark.sources.tableformat import pinned_tier_validator, tier_tables
 
 
 def _window_end(tier: str):
@@ -61,6 +66,78 @@ def _window_end(tier: str):
     return ((F.col("first_ts") / span).cast("long") + 1) * span
 
 
+def _footer_chunk_size_max(gen_loc: str) -> int | None:
+    """max(chunk_size) over a generation's `wave=*/*.parquet` files, from
+    their footer min/max statistics (driver-side pyarrow, no Spark job).
+    None when a file lacks the column (rollup tables) or a row group lacks
+    the stats: nothing is stamped and tier_chunk_size_bound treats the
+    bound as unknown."""
+    import pyarrow.parquet as pq
+
+    top = 0
+    for path in glob.glob(os.path.join(gen_loc, "wave=*", "*.parquet")):
+        md = pq.read_metadata(path)
+        if "chunk_size" not in md.schema.names:
+            return None
+        j = md.schema.names.index("chunk_size")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(j).statistics
+            if st is None or not st.has_min_max:
+                return None
+            top = max(top, int(st.max))
+    return top
+
+
+def rewrite_generation(spark, fmt, out_dir: str, tier: str, run_id: str,
+                       stage: str, gen_loc: str, read_source, transform,
+                       extra_props, *, n_waves: int, props: dict | None = None,
+                       wave_stage: str | None = None) -> dict:
+    """Publish `transform` of the tier's current view as its next FULL
+    generation at `gen_loc` (one `gen=<run_id>` dir):
+
+    1. (run_id, stage) already committed -> "skipped", zero jobs;
+    2. pin the tier history at `<gen_loc>/_folded.json` (vacuum deletes it
+       with the generation); on a same-run_id resume the pin is checked
+       before any wave runs, so waves built from an older view never
+       publish over a newer delta (CommitConflictError);
+    3. `read_source()` -> the current merged view (not the layout dir:
+       refresh deltas fold in, no superseded conv version resurrects and
+       an earlier rewrite's clustering survives), read after the pin;
+    4. run_waved_pass writes `transform(sub)`, lineage under `wave_stage`;
+    5. chunk_size_max from the generation's parquet footers — it covers
+       waves done before a resume and costs no Spark job;
+    6. commit_tier under the pinned validator.
+
+    `extra_props(src, gen)` returns commit properties the result also
+    reports; `props` are commit-only. Returns {run_id, tier, commit,
+    **extra_props, wall_sec}."""
+    t0 = time.time()
+    if fmt.committed(run_id, stage):
+        return {"run_id": run_id, "tier": tier, "commit": "skipped",
+                "wall_sec": time.time() - t0}
+    pin = os.path.join(gen_loc, "_folded.json")
+    resumed = os.path.exists(pin)
+    validate = pinned_tier_validator(pin, [(fmt, tier)])
+    if resumed:
+        validate()
+    src = read_source()
+    gen = run_waved_pass(
+        spark, src, transform, gen_loc,
+        CheckpointLog(spark, os.path.join(out_dir, "ckpt")),
+        run_id, wave_stage or stage, n_waves=n_waves,
+    )
+    extra = extra_props(src, gen)
+    commit_props = {"run_id": run_id, "stage": stage, **(props or {}),
+                    **extra}
+    cs_max = _footer_chunk_size_max(gen_loc)
+    if cs_max is not None:  # the routed reads' pruning span
+        commit_props["chunk_size_max"] = cs_max
+    commit_id = fmt.commit_tier(tier, gen, gen_loc, commit_props,
+                                validate=validate)
+    return {"run_id": run_id, "tier": tier, "commit": commit_id, **extra,
+            "wall_sec": time.time() - t0}
+
+
 def run_retention_pass(
     spark,
     out_dir: str,
@@ -73,91 +150,44 @@ def run_retention_pass(
     """Drop every chunk of `chunks/tier=<tier>` whose whole window lies
     before `horizon_ts` (epoch seconds); publish the retained generation.
 
-    Resumable at two levels, mirroring run_retention_pipeline:
-    - snapshot-summary resume: same (run_id, stage) already committed ->
-      whole pass skipped (zero jobs);
-    - wave resume: a crash mid-rewrite re-runs only the waves whose
-      lineage rows are missing.
+    Resumable at two levels (rewrite_generation): same (run_id, stage)
+    already committed -> whole pass skipped (zero jobs); a crash
+    mid-rewrite re-runs only the waves whose lineage rows are missing.
 
     Returns a metrics dict (chunks/points kept and dropped, wall time,
     commit id or 'skipped').
     """
     run_id = run_id or new_run_id()
-    t0 = time.time()
-    stage = f"retention:{tier}"
-    fmt = table_format or tier_tables(spark, os.path.join(out_dir, "chunks"))
-    ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
+    keep = _window_end(tier) > F.lit(int(horizon_ts))
 
-    pin = os.path.join(out_dir, "_pins", f"retention-{tier}-{run_id}.json")
-    if fmt.committed(run_id, stage):
-        # a crash between the commit and release_pin strands the pin; the
-        # committed re-run is the converge point (code-review r7 pass 2)
-        release_pin(pin)
-        return {"run_id": run_id, "tier": tier, "commit": "skipped",
-                "wall_sec": time.time() - t0}
+    def read():
+        src = read_tier_chunks(spark, out_dir, tier)
+        if "chunk_size" not in src.columns:
+            raise ValueError(
+                f"retention: chunk table for tier={tier} lacks the "
+                "chunk_size column (pre-r6 encoder?) — window bounds cannot "
+                "be derived"
+            )
+        return src
 
-    # rewrite FROM the current merged view (not the original layout dir):
-    # this folds any refresh deltas into the new generation and keeps the
-    # generation chain monotone — a retention pass after a refresh must not
-    # resurrect superseded conv versions, and one after a compaction must
-    # not discard its clustering. The validator pins the tier history THIS
-    # read is based on; the commit below revalidates it under the atomic
-    # claim so a concurrently-published delta can never be silently folded
-    # away (optimistic concurrency, sources/tableformat.py).
-    # pinned (persisted) baseline: a crash + concurrent delta + same-
-    # run_id resume must CONFLICT, not re-capture and silently fold the
-    # delta away (code-review r7 #2)
-    validate = pinned_tier_validator(pin, [(fmt, tier)])
-    src = read_tier_chunks(spark, out_dir, tier)
-    if "chunk_size" not in src.columns:
-        raise ValueError(
-            f"retention: chunk table for tier={tier} lacks the chunk_size "
-            "column (pre-r6 encoder?) — window bounds cannot be derived"
-        )
-    keep_pred = _window_end(tier) > F.lit(int(horizon_ts))
+    def counts(src, _gen):
+        # how much is aged out: one columnar aggregate over int columns,
+        # no binary movement
+        st = src.select(
+            F.count(F.lit(1)).alias("chunks_total"),
+            F.count(F.when(keep, 1)).alias("chunks_kept"),
+            F.sum("n").alias("points_total"),
+            F.sum(F.when(keep, F.col("n"))).alias("points_kept"),
+        ).first()
+        return {k: int(v or 0) for k, v in st.asDict().items()}
 
-    # lineage metrics for the commit row: how much is aged out (one
-    # columnar aggregate over int columns, no binary movement)
-    stats = src.select(
-        F.count(F.lit(1)).alias("c_all"),
-        F.sum("n").alias("p_all"),
-        F.count(F.when(keep_pred, 1)).alias("c_keep"),
-        F.sum(F.when(keep_pred, F.col("n"))).alias("p_keep"),
-        # true per-row max over the source (a superset of what survives):
-        # stamped into the commit so routed reads derive the pruning span
-        # from metadata, not a per-read aggregate (ADVICE r6 #5)
-        F.max("chunk_size").alias("cs_max"),
-    ).first()
-
-    # deterministic generation path: resume with the same run_id lands in
-    # the same directory, so done waves are genuinely reusable
-    gen_loc = os.path.join(out_dir, f"chunks_retained/tier={tier}/gen={run_id}")
-    retained = run_waved_pass(
-        spark, src.where(keep_pred), lambda sub: sub, gen_loc,
-        ckpt, run_id, stage, n_waves=n_waves,
+    return rewrite_generation(
+        spark, table_format or tier_tables(spark, os.path.join(out_dir, "chunks")),
+        out_dir, tier, run_id, f"retention:{tier}",
+        os.path.join(out_dir, f"chunks_retained/tier={tier}/gen={run_id}"),
+        read, lambda sub: sub.where(keep), counts,
+        n_waves=n_waves, props={"horizon_ts": int(horizon_ts)},
     )
-    commit_id = fmt.commit_tier(
-        tier, retained, gen_loc,
-        {
-            "run_id": run_id, "stage": stage,
-            "horizon_ts": int(horizon_ts),
-            "chunks_total": int(stats.c_all or 0),
-            "chunks_kept": int(stats.c_keep or 0),
-            "points_total": int(stats.p_all or 0),
-            "points_kept": int(stats.p_keep or 0),
-            "chunk_size_max": int(stats.cs_max or 0),
-        },
-        validate=validate,
-    )
-    release_pin(pin)
-    return {
-        "run_id": run_id, "tier": tier, "commit": commit_id,
-        "chunks_total": int(stats.c_all or 0),
-        "chunks_kept": int(stats.c_keep or 0),
-        "points_total": int(stats.p_all or 0),
-        "points_kept": int(stats.p_keep or 0),
-        "wall_sec": time.time() - t0,
-    }
 
 
 def read_tier_chunks(spark, out_dir: str, tier: str):

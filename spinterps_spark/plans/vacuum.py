@@ -14,9 +14,11 @@ passes close the loop; together they are the Iceberg
 
 - ``run_flatten_pass``: materialize a tier's current merged view (base plus
   all deltas, latest-wins) as ONE new full generation, published with one
-  metadata commit. Reads through generations.read_current collapse back to
-  a single parquet scan. Works on either table root; the rollup table is
-  the one with no other flattening path.
+  metadata commit (the identity plans/retention.rewrite_generation, the
+  procedure retention and compaction share). Reads through
+  generations.read_current collapse back to a single parquet scan. Works
+  on either table root; the rollup table is the one with no other
+  flattening path.
 - ``run_vacuum_pass``: delete the generation directories no snapshot within
   the last `keep_last` full generations can reference, then record WHAT was
   expired in a metadata-only ``vacuum:<tier>`` commit — so a later
@@ -41,7 +43,8 @@ pipeline's original layout dirs (chunks/tier=*/wave=*, rollup/tier=*/wave=*)
 are not in the log and are never candidates. The refresh pass's
 affected-conv sidecars (refresh/run=*/convs) are reference-counted across
 BOTH table logs: a convs dir is deleted only when no live delta in either
-table still points at it.
+table still points at it. A rewrite's `_folded.json` pin lives in its
+gen= dir and goes with it.
 
 100-TB scale: both passes are metadata-driven — the expirable set is
 computed from the snapshot log (KBs, driver-side); flatten is one scan +
@@ -58,15 +61,13 @@ import os
 import shutil
 import time
 
-from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
-from spinterps_spark.plans.generations import _strip_scheme, commit_kind, read_current
-from spinterps_spark.sources.tableformat import tier_tables
+from spinterps_spark.plans.checkpoint import new_run_id
+from spinterps_spark.plans.generations import (
+    _strip_scheme, commit_kind, generation_plan, read_current)
+from spinterps_spark.plans.retention import rewrite_generation
+from spinterps_spark.sources.tableformat import pin_run_id, tier_tables
 
 TABLE_ROOTS = ("rollup", "chunks")
-
-
-def _default_base(out_dir: str, table: str, tier: str) -> str:
-    return os.path.join(out_dir, f"{table}/tier={tier}", "wave=*")
 
 
 def run_flatten_pass(
@@ -80,9 +81,11 @@ def run_flatten_pass(
     """Fold a tier's refresh-delta chain into one new full generation.
 
     No-op (commit "noop") when the chain has no deltas: a flatten would
-    rewrite every byte to produce the identical merged view. Resumable at
-    the same two levels as retention/compaction: committed (run_id, stage)
-    skips the pass; a crash mid-write redoes only the missing waves.
+    rewrite every byte to produce the identical merged view. Otherwise an
+    identity rewrite_generation (plans/retention.py), resumable at the
+    same two levels as retention/compaction: committed (run_id, stage)
+    skips the pass; a crash mid-write redoes only the missing waves, and
+    a resume whose delta chain moved raises CommitConflictError.
     """
     if table not in TABLE_ROOTS:
         raise ValueError(f"table must be one of {TABLE_ROOTS}, got {table!r}")
@@ -90,73 +93,22 @@ def run_flatten_pass(
     t0 = time.time()
     stage = f"flatten:{tier}"
     fmt = tier_tables(spark, os.path.join(out_dir, table))
-    if fmt.committed(run_id, stage):
-        return {"run_id": run_id, "tier": tier, "table": table,
-                "commit": "skipped", "wall_sec": time.time() - t0}
-
-    from spinterps_spark.plans.generations import generation_plan
-    from spinterps_spark.sources.tableformat import unchanged_tier_validator
-
-    # pin the tier history before reading it; revalidated under the commit's
-    # atomic claim (a refresh delta landing DURING the fold would otherwise
-    # be silently superseded by the published full generation)
-    validate = unchanged_tier_validator(fmt, tier)
-    _, deltas = generation_plan(fmt, tier, _default_base(out_dir, table, tier))
+    base = os.path.join(out_dir, f"{table}/tier={tier}", "wave=*")
     gen_loc = os.path.join(out_dir, f"{table}_flat/tier={tier}/gen={run_id}")
-    if not deltas:
-        # a resumed run can reach here when a retention/compaction full
-        # rewrite emptied the chain in between: its partial waves +
-        # _folded.json were never committed, so they'd orphan forever
-        # (never a vacuum candidate) — remove them before the noop
-        if os.path.isdir(gen_loc):
-            shutil.rmtree(gen_loc)
+    _, deltas = generation_plan(fmt, tier, base)
+    if not deltas and not fmt.committed(run_id, stage):
+        # a resumed run whose chain a full rewrite emptied meanwhile: no
+        # snapshot row will ever expire its partial waves + pin
+        shutil.rmtree(gen_loc, ignore_errors=True)
         return {"run_id": run_id, "tier": tier, "table": table,
                 "commit": "noop", "n_deltas_folded": 0,
                 "wall_sec": time.time() - t0}
-
-    src = read_current(spark, fmt, tier, _default_base(out_dir, table, tier))
-    ckpt = CheckpointLog(spark, os.path.join(out_dir, "ckpt"))
-    # pin the delta set this run folds: a --resume after a crash reuses
-    # done waves, which captured the state at the ORIGINAL start — if a
-    # refresh delta committed in between, publishing would supersede (and
-    # silently drop) rows those waves never saw. Abort loudly instead; a
-    # fresh run_id folds everything.
-    folded_ids = [s.get("commit_id") for s in deltas]
-    manifest = os.path.join(gen_loc, "_folded.json")
-    os.makedirs(gen_loc, exist_ok=True)
-    if os.path.exists(manifest):
-        with open(manifest) as f:
-            recorded = json.load(f)
-        if recorded != folded_ids:
-            raise RuntimeError(
-                f"flatten resume {run_id!r}: the tier={tier} delta chain "
-                f"changed since this run started (recorded {recorded}, "
-                f"now {folded_ids}) — its partial waves would publish a "
-                "full generation missing the newer delta. Re-run with a "
-                "fresh run_id to fold the current chain."
-            )
-    else:
-        with open(manifest, "w") as f:
-            json.dump(folded_ids, f)
-    flat = run_waved_pass(
-        spark, src, lambda sub: sub, gen_loc,
-        ckpt, run_id, f"flatten_{table}:{tier}",
-        n_waves=n_waves,
-    )
-    props = {"run_id": run_id, "stage": stage,
-             "n_deltas_folded": len(deltas)}
-    if "chunk_size" in flat.columns:
-        # keep the metadata-derived pruning span alive across a flatten of
-        # the chunks table (same contract as retention/compaction commits)
-        import pyspark.sql.functions as F
-
-        props["chunk_size_max"] = int(
-            flat.agg(F.max("chunk_size")).first()[0] or 0)
-    commit_id = fmt.commit_tier(tier, flat, gen_loc, props,
-                                validate=validate)
-    return {"run_id": run_id, "tier": tier, "table": table,
-            "commit": commit_id, "n_deltas_folded": len(deltas),
-            "wall_sec": time.time() - t0}
+    return {"table": table, **rewrite_generation(
+        spark, fmt, out_dir, tier, run_id, stage, gen_loc,
+        lambda: read_current(spark, fmt, tier, base), lambda sub: sub,
+        lambda _src, _gen: {"n_deltas_folded": len(deltas)},
+        n_waves=n_waves, wave_stage=f"flatten_{table}:{tier}",
+    )}
 
 
 def _tier_history(snaps: list[dict], tier: str) -> list[dict]:
@@ -197,6 +149,21 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+def _newest_mtime(path: str) -> float:
+    """Newest mtime of `path` and of every file beneath it (0 if gone)."""
+    try:
+        newest = os.path.getmtime(path)
+    except OSError:
+        return 0.0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(root, f)))
+            except OSError:
+                pass
+    return newest
+
+
 _ORPHAN_PATTERNS = (
     # every managed generation layout a pass writes BEFORE its commit —
     # a crash in that window (or a pre-r7 empty-batch refresh) leaves the
@@ -213,10 +180,10 @@ _ORPHAN_PATTERNS = (
     "chunks_merge_delta/tier=*/gen=*",
     "refresh/run=*/convs",
     "merge/run=*/convs",
-    # pinned-history baselines (sources/tableformat.pinned_tier_validator):
-    # released after each pass's final commit, but a crash in the
+    # merge/evolve pinned-history baselines (sources/tableformat.pin_file):
+    # released after the pass's final commit, but a crash in the
     # commit-to-release window strands the file — age-guarded like the
-    # generation dirs
+    # generation dirs (the generation rewrites pin inside their gen= dir)
     "_pins/*.json",
 )
 
@@ -243,7 +210,12 @@ def _sweep_orphans(out_dir: str, snaps: dict[str, list[dict]],
             rp = os.path.realpath(p)
             if rp in referenced:
                 continue
-            if os.path.isfile(rp):
+            is_pin = os.path.isfile(rp)
+            if not (is_pin or os.path.isdir(rp)):
+                continue
+            live = [rp]
+            run_id = pin_run_id(rp) if is_pin else None
+            if run_id:
                 # pin baselines are single files, not generation dirs.
                 # Age alone is not enough (ADVICE r7 #3): a pass can run
                 # longer than min_age_sec while its pin (written once at
@@ -252,40 +224,17 @@ def _sweep_orphans(out_dir: str, snaps: dict[str, list[dict]],
                 # concurrent commits. A pin is LIVE while ANY artifact of
                 # its run_id (gen=/run= dirs, which every wave touches) is
                 # younger than min_age_sec; its own mtime still counts too.
-                newest = os.path.getmtime(rp)
-                run_id = os.path.basename(rp)[:-5].split("-", 1)[-1]
-                if run_id:
-                    for rel in (f"*/tier=*/gen={run_id}",
-                                f"*/run={run_id}*"):
-                        for q in _g.glob(os.path.join(out_dir, rel)):
-                            try:
-                                newest = max(newest, os.path.getmtime(q))
-                                for root, _d, files in os.walk(q):
-                                    for f in files:
-                                        newest = max(newest, os.path.getmtime(
-                                            os.path.join(root, f)))
-                            except OSError:
-                                pass
-                if now - newest < min_age_sec:
-                    continue
+                live += [q for rel in (f"*/tier=*/gen={run_id}",
+                                       f"*/run={run_id}*")
+                         for q in _g.glob(os.path.join(out_dir, rel))]
+            if now - max(map(_newest_mtime, live)) < min_age_sec:
+                continue
+            if is_pin:
                 freed += os.path.getsize(rp)
                 os.remove(rp)
-                removed.append(p)
-                continue
-            if not os.path.isdir(rp):
-                continue
-            newest = os.path.getmtime(rp)
-            for root, _dirs, files in os.walk(rp):
-                for f in files:
-                    try:
-                        newest = max(
-                            newest, os.path.getmtime(os.path.join(root, f)))
-                    except OSError:
-                        pass
-            if now - newest < min_age_sec:
-                continue
-            freed += _dir_bytes(rp)
-            shutil.rmtree(rp)
+            else:
+                freed += _dir_bytes(rp)
+                shutil.rmtree(rp)
             removed.append(p)
     return {"n_removed": len(removed), "bytes_freed": freed,
             "removed": sorted(removed)}

@@ -64,26 +64,27 @@ def tier_data_commit_ids(snapshots: list[dict], tier: str) -> list[str]:
 def unchanged_tier_validator(fmt, tier: str):
     """Capture the tier's data history NOW; returns a `validate` hook for
     commit_tier that raises CommitConflictError if any other writer
-    published to the tier in between. Full-rewrite passes (retention,
-    compaction, flatten) use this: their output folds the merged view they
-    READ, so a concurrent refresh delta would be silently dropped by an
-    unvalidated publish — the lost-update the optimistic protocol exists
-    to prevent."""
+    published to the tier in between. A full rewrite folds the merged view
+    it READ, so an unvalidated publish would silently drop a concurrent
+    refresh delta — the lost update the optimistic protocol exists to
+    prevent. Passes that can resume use pinned_tier_validator."""
     seen = tier_data_commit_ids(fmt.snapshots(), tier)
 
     def validate(snapshots: list[dict]):
-        now = tier_data_commit_ids(snapshots, tier)
-        if now != seen:
-            raise CommitConflictError(
-                f"tier={tier}: the snapshot log gained "
-                f"{len(now) - len(seen)} commit(s) since this pass read its "
-                "source (a concurrent refresh/rewrite published) — "
-                "publishing this full rewrite would silently drop them. "
-                "Re-run the pass with a fresh run_id against the current "
-                "view."
-            )
+        _raise_if_moved(tier, seen, tier_data_commit_ids(snapshots, tier))
 
     return validate
+
+
+def _raise_if_moved(tier: str, seen: list, now: list) -> None:
+    if now != seen:
+        raise CommitConflictError(
+            f"tier={tier}: the delta chain changed since this pass first "
+            f"read its source (recorded {seen}, now {now}; possibly across "
+            "a crash/resume) — publishing would silently drop the new "
+            "commits. Re-run the pass with a fresh run_id against the "
+            "current view."
+        )
 
 
 def pinned_tier_validator(pin_path: str, pairs: list) -> "callable":
@@ -97,14 +98,18 @@ def pinned_tier_validator(pin_path: str, pairs: list) -> "callable":
     pre-commit view, then publishing a mixed-state full rewrite that
     supersedes the concurrent delta: exactly the lost update the
     optimistic protocol exists to prevent (code-review r7 #2).
-    run_flatten_pass pins the same way via its _folded.json manifest.
+
+    The generation rewrites (plans/retention.rewrite_generation) keep the
+    pin at `<gen_loc>/_folded.json`, inside the generation it guards: it
+    is never released (vacuum deletes it with the generation), so a
+    same-run_id resume after a lost commit still sees the original
+    baseline. Merge and evolve keep theirs under `_pins/` (pin_file) and
+    release it after their final commit; a leftover pin is harmless —
+    committed (run_id, stage) short-circuits before any validator runs.
 
     The returned validate ignores the snapshots argument commit_tier
     passes and re-reads every fmt, since the pairs may span several
-    stores (the cross-store merge pins its SOURCES). Call sites should
-    remove `pin_path` after their final successful commit (release_pin);
-    a leftover pin is harmless — committed (run_id, stage) short-circuits
-    before any validator runs."""
+    stores (the cross-store merge pins its SOURCES)."""
     def _key(fmt, tier):
         ident = getattr(fmt, "location", None) or getattr(fmt, "table", "?")
         return f"{ident}:{tier}"
@@ -113,13 +118,16 @@ def pinned_tier_validator(pin_path: str, pairs: list) -> "callable":
     if os.path.exists(pin_path):
         with open(pin_path) as f:
             rec = json.load(f)
-        if rec.get("keys") != keys:
+        # a bare list is a flatten manifest written before the pin moved
+        # into the generation: its format differs, so it never matches
+        recorded = rec.get("keys") if isinstance(rec, dict) else rec
+        if recorded != keys:
             # identity check, not just length: a same-run_id resume with
             # reordered/swapped sources would otherwise compare each
             # baseline against the WRONG store's history and raise a
             # misleading concurrency error
             raise RuntimeError(
-                f"pin {pin_path} was recorded for {rec.get('keys')} but "
+                f"pin {pin_path} was recorded for {recorded} but "
                 f"this resume validates {keys} — the pass was resumed "
                 "with different sources/tiers (or a different order); "
                 "use a fresh run_id"
@@ -136,18 +144,28 @@ def pinned_tier_validator(pin_path: str, pairs: list) -> "callable":
 
     def validate(_snapshots=None):
         for (fmt, tier), seen in zip(pairs, base):
-            now = tier_data_commit_ids(fmt.snapshots(), tier)
-            if now != seen:
-                raise CommitConflictError(
-                    f"tier={tier}: the snapshot log gained "
-                    f"{len(now) - len(seen)} commit(s) since this pass "
-                    "first read its source (possibly across a crash/"
-                    "resume) — publishing would silently drop them. "
-                    "Re-run the pass with a fresh run_id against the "
-                    "current view."
-                )
+            _raise_if_moved(tier, seen,
+                            tier_data_commit_ids(fmt.snapshots(), tier))
 
     return validate
+
+
+def pin_file(out_dir: str, kind: str, run_id: str,
+             tier: str | None = None) -> str:
+    """Where a multi-table pass (merge, evolve) persists its
+    pinned_tier_validator baseline:
+    `<out_dir>/_pins/<kind>[-<tier>]-<run_id>.json`."""
+    name = f"{kind}-{tier}-{run_id}" if tier else f"{kind}-{run_id}"
+    return os.path.join(out_dir, "_pins", f"{name}.json")
+
+
+def pin_run_id(path: str) -> str:
+    """Inverse of pin_file: the run_id a `_pins/` file belongs to."""
+    from spinterps_spark import TIER_SECONDS
+
+    rest = os.path.basename(path)[:-len(".json")].partition("-")[2]
+    tier, _, run_id = rest.partition("-")
+    return run_id if tier in TIER_SECONDS and run_id else rest
 
 
 def release_pin(pin_path: str) -> None:

@@ -144,3 +144,12 @@ def test_compaction_composes_with_retention(spark, tmp_path):
     assert snaps[-1]["stage"] == "compaction:1m"
     assert "chunks_compacted" in snaps[-1]["data_location"]
     assert m["files_after"] <= m["files_before"]
+
+
+def test_compaction_stamps_the_published_chunk_size_max(spark, piped):
+    snaps = tier_tables(spark, os.path.join(piped, "chunks")).snapshots()
+    for rec in (s for s in snaps if s.get("stage") == "compaction:1m"):
+        gen_max = spark.read.parquet(
+            os.path.join(rec["data_location"], "wave=*")
+        ).agg(F.max("chunk_size")).first()[0]
+        assert int(rec["chunk_size_max"]) == gen_max

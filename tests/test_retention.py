@@ -148,3 +148,43 @@ def test_retention_rejects_legacy_chunk_table(spark, tmp_path):
     spark.createDataFrame(legacy).write.parquet(os.path.join(loc, "wave=0"))
     with pytest.raises(ValueError, match="chunk_size"):
         run_retention_pass(spark, tdir, "1m", 10**9, run_id="r", n_waves=1)
+
+
+def _stamp_and_gen_max(spark, tdir, run_id):
+    from spinterps_spark.sources.tableformat import tier_tables
+    snap = next(s for s in tier_tables(spark, os.path.join(tdir, "chunks"))
+                .snapshots() if s.get("run_id") == run_id)
+    gen_max = spark.read.parquet(
+        os.path.join(snap["data_location"], "wave=*")
+    ).agg(F.max("chunk_size")).first()[0]
+    return int(snap["chunk_size_max"]), gen_max
+
+
+def test_retention_stamps_the_published_chunk_size_max(spark, piped):
+    """The stamp is max(chunk_size) of the published generation — also
+    after a resume that reused one done wave (its rows were written by an
+    earlier run, so only the generation's files can vouch for them)."""
+    horizon = _mid_horizon(_points(spark, piped, "1m"))
+    run_retention_pass(spark, piped, "1m", horizon, run_id="ret2", n_waves=2)
+    stamp, gen_max = _stamp_and_gen_max(spark, piped, "ret2")
+    assert stamp == gen_max
+
+    shutil.rmtree(os.path.join(piped, "chunks_retained/tier=1m/gen=ret2/wave=1"))
+    from spinterps_spark.sources.tableformat import remove_commits
+    remove_commits(os.path.join(piped, "chunks"),
+                   lambda r: r.get("run_id") == "ret2")
+    ck = C.CheckpointLog(spark, os.path.join(piped, "ckpt"))
+    kept = ck.read().where(
+        "NOT (run_id = 'ret2' AND tier = 'retention:1m' AND wave = 1)"
+    ).toPandas()
+    shutil.rmtree(os.path.join(piped, "ckpt"))
+    spark.createDataFrame(kept).write.parquet(os.path.join(piped, "ckpt"))
+
+    m = run_retention_pass(spark, piped, "1m", horizon, run_id="ret2",
+                           n_waves=2)
+    assert m["commit"] not in (None, "skipped")
+    done = C.CheckpointLog(spark, os.path.join(piped, "ckpt")).done_waves(
+        "ret2", "retention:1m")
+    assert done == {0, 1}
+    stamp, gen_max = _stamp_and_gen_max(spark, piped, "ret2")
+    assert stamp == gen_max

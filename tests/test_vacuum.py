@@ -156,6 +156,25 @@ def test_flatten_chunks_matches_full_recompute(spark, store):
         check_exact=True)
 
 
+def _gen_chunk_size_max(spark, snap):
+    return spark.read.parquet(
+        os.path.join(snap["data_location"], "wave=*")
+    ).agg(F.max("chunk_size")).first()[0]
+
+
+def test_rewrites_stamp_the_published_chunk_size_max(spark, store):
+    """Retention and flatten(chunks) stamp max(chunk_size) of the generation
+    they published; flatten(rollup) has no chunk_size and stamps nothing."""
+    d = store["dirs"]["a"]
+    chunk_log = tier_tables(spark, os.path.join(d, "chunks")).snapshots()
+    for run_id in ("ret1", "fc1"):
+        snap = next(s for s in chunk_log if s.get("run_id") == run_id)
+        assert int(snap["chunk_size_max"]) == _gen_chunk_size_max(spark, snap)
+    roll = next(s for s in tier_tables(spark, os.path.join(d, "rollup"))
+                .snapshots() if s.get("run_id") == "fl1")
+    assert "chunk_size_max" not in roll
+
+
 def test_vacuum_keep2_retains_time_travel_window(spark, store):
     """keep_last=2 on the chunks log keeps the retention generation (the
     2nd-last full gen) and the v2 delta after it — so the as-of read at
@@ -463,3 +482,28 @@ def test_orphan_sweep_keeps_live_pass_pin(tmp_path):
     res = _sweep_orphans(out, {"rollup": [], "chunks": []}, min_age_sec=600)
     assert not os.path.exists(pin)
     assert res["n_removed"] >= 1
+
+
+def test_orphan_sweep_keeps_live_evolve_pin(tmp_path):
+    """A pin whose name carries a tier (`evolve-<tier>-<run_id>.json`) is
+    live while its run's generation dir is young: the sweep must recover
+    the run_id past the tier, not probe `gen=<tier>-<run_id>`."""
+    import time as _time
+
+    from spinterps_spark.plans.vacuum import _sweep_orphans
+
+    out = str(tmp_path / "store")
+    os.makedirs(os.path.join(out, "_pins"))
+    pin = os.path.join(out, "_pins", "evolve-1m-run88.json")
+    with open(pin, "w") as f:
+        f.write("{}")
+    old = _time.time() - 3600
+    os.utime(pin, (old, old))
+    gen = os.path.join(out, "chunks_evolve", "tier=1m", "gen=run88")
+    os.makedirs(gen)
+    with open(os.path.join(gen, "wave=0.parquet"), "w") as f:
+        f.write("x")
+
+    _sweep_orphans(out, {"rollup": [], "chunks": []}, min_age_sec=600)
+    assert os.path.exists(pin), "live evolve pass's pin must survive"
+    assert os.path.isdir(gen)
