@@ -1,4 +1,5 @@
-"""Gorilla chunk compression (K8): delta-of-delta timestamps + XOR floats.
+"""Gorilla chunk compression (K8): delta-of-delta timestamps, and values as
+scaled integers or XOR floats.
 
 Public-knowledge algorithm (Pelkonen et al., "Gorilla: A Fast, Scalable,
 In-Memory Time Series Database", VLDB 2015). The reference engine compresses
@@ -20,12 +21,39 @@ offset-coded [-63,64] windows — so encode/decode are exact inverses for any
 int64 input, including the boundary values 64/256/2048.)
 (64-bit escape instead of the paper's 32 — retention-tier gaps can exceed 2^31 s.)
 
-Value stream: first_val raw 64-bit IEEE754; then XOR with previous value:
+Value stream (the `vals_xor` column): first_val raw 64-bit IEEE754 in the
+struct; the stream holds the other n-1 values in one of two modes, chosen
+per chunk from the values alone (so equal values always give equal bytes):
+
+- Integer mode, for chunks of exactly-decimal values (the fill kernel rounds
+  filled points to round_p decimals, so nearly every 1m chunk qualifies).
+  Let p be the smallest of 0..7 such that for EVERY value v of the chunk
+  k = rint(v * 10**p) has |k| < 2^53 and float64(k) / 10**p == v bitwise
+  (a division, in the encoder's check and in the decoder alike). The
+  stream is '10', p as 3 bits, then the n-1 delta-of-deltas of k in the
+  timestamp token classes above, the first delta coded against a zero
+  previous delta (no raw 64-bit field). Decode: k0 = rint(first_val *
+  10**p), k accumulates the deltas, v = float64(k) / 10**p, and the first
+  value is first_val itself. NaN, +-inf and -0.0 never pass the check.
+  Decimal-origin doubles compress far better as integers than as XORs
+  (ALP, SIGMOD 2024); this reuses Gorilla's own timestamp scheme for them.
+- XOR mode, for every other chunk — the Gorilla float stream, unchanged
+  from stores written before integer mode existed. XOR with the previous
+  value:
     xor == 0 -> '0'
     else '1' then:
       meaningful block fits previous (leading, length) window ->
           '0' + length bits
       else '1' + 6-bit leading-zero count + 6-bit (length-1) + length bits
+
+An XOR stream never starts with '10': its first token is '0' (a zero XOR)
+or '11', because the window state starts invalid (lead 65), so the first
+nonzero XOR always opens a new window. A stream of n >= 2 values is never
+empty, so its first two bits name its mode; old stores need no version
+stamp. A chunk of n = 1 keeps its empty stream. Code older than
+integer mode reads a '10' first token as a window reuse and returns wrong
+values without raising: a store written with integer mode must not be read
+by it.
 
 Encode/decode are exact bit-for-bit inverses for any float64 payload
 (including NaN payloads). Chunks are bounded (default 120 points, the
@@ -90,23 +118,32 @@ def _untwos(raw: int, bits: int) -> int:
     return raw
 
 
-def encode_ts(ts: np.ndarray) -> bytes:
-    """ts: int64 seconds, ascending. Stream excludes ts[0] (stored raw in the
-    struct); includes the first delta as a raw 64-bit field.
+# 10**p for the integer value mode. Literals, so each is exact in float64.
+POW10 = (1.0, 10.0, 100.0, 1e3, 1e4, 1e5, 1e6, 1e7)
+SCALED_TAG = 0b10        # first two bits of an integer-mode value stream
+K_LIMIT = 2.0 ** 53      # |k| bound: every k is exact in float64
 
-    Classification of delta-of-deltas is vectorized (np.select); the loop
-    only emits precomputed (prefix, payload) pairs into a BitWriter."""
-    ts = np.asarray(ts, dtype=np.int64)
-    w = BitWriter()
-    if len(ts) < 2:
-        return w.bytes()
-    deltas = np.diff(ts)
-    w.write(int(deltas[0]) & ((1 << 64) - 1), 64)
-    dods = np.diff(deltas)
-    if len(dods) == 0:
-        return w.bytes()
-    # one fused (prefix|payload) write per nonzero dod; zero runs batched
-    # into a single multi-bit write (the dominant case on steady cadences).
+
+def decimal_scale(vals: np.ndarray) -> int | None:
+    """The smallest p in 0..7 at which every value is exactly
+    float64(k) / 10**p with k = rint(v * 10**p), |k| < 2^53, compared
+    bitwise; None when no p qualifies (NaN, +-inf, -0.0, non-decimals)."""
+    v = np.asarray(vals, dtype=np.float64)
+    with np.errstate(over="ignore", invalid="ignore"):
+        for p, pw in enumerate(POW10):
+            kf = np.rint(v * pw)
+            if not (np.abs(kf) < K_LIMIT).all():
+                continue
+            back = kf.astype(np.int64).astype(np.float64) / pw
+            if np.array_equal(back.view(np.uint64), v.view(np.uint64)):
+                return p
+    return None
+
+
+def _write_dods(w: BitWriter, dods: np.ndarray) -> None:
+    """Delta-of-delta tokens (the timestamp classes) for an int64 array.
+    One fused (prefix|payload) write per nonzero dod; zero runs batched
+    into a single multi-bit write (the dominant case on steady cadences)."""
     write = w.write
     nz_idx = np.flatnonzero(dods != 0)
     dod_list = dods.tolist()
@@ -128,6 +165,30 @@ def encode_ts(ts: np.ndarray) -> bytes:
     tail = len(dod_list) - prev - 1
     if tail:
         write(0, tail)
+
+
+def _read_dod(r: BitReader) -> int:
+    if r.read(1) == 0:
+        return 0
+    if r.read(1) == 0:
+        return _untwos(r.read(7), 7)
+    if r.read(1) == 0:
+        return _untwos(r.read(9), 9)
+    if r.read(1) == 0:
+        return _untwos(r.read(12), 12)
+    return _untwos(r.read(64), 64)
+
+
+def encode_ts(ts: np.ndarray) -> bytes:
+    """ts: int64 seconds, ascending. Stream excludes ts[0] (stored raw in the
+    struct); includes the first delta as a raw 64-bit field."""
+    ts = np.asarray(ts, dtype=np.int64)
+    w = BitWriter()
+    if len(ts) < 2:
+        return w.bytes()
+    deltas = np.diff(ts)
+    w.write(int(deltas[0]) & ((1 << 64) - 1), 64)
+    _write_dods(w, np.diff(deltas))
     return w.bytes()
 
 
@@ -142,30 +203,28 @@ def decode_ts(first_ts: int, data: bytes, n: int) -> np.ndarray:
     delta = _untwos(r.read(64), 64)
     out[1] = out[0] + delta
     for i in range(2, n):
-        if r.read(1) == 0:
-            dod = 0
-        elif r.read(1) == 0:
-            dod = _untwos(r.read(7), 7)
-        elif r.read(1) == 0:
-            dod = _untwos(r.read(9), 9)
-        elif r.read(1) == 0:
-            dod = _untwos(r.read(12), 12)
-        else:
-            dod = _untwos(r.read(64), 64)
-        delta += dod
+        delta += _read_dod(r)
         out[i] = out[i - 1] + delta
     return out
 
 
 def encode_vals(vals: np.ndarray) -> bytes:
     """vals: float64. Stream excludes vals[0] (stored raw in the struct).
+    Integer mode when decimal_scale finds a p, else XOR mode.
 
     XOR chain + leading/trailing-zero counts are vectorized with numpy
     (unpackbits over the big-endian byte view); the loop only applies the
     window-control state machine and emits bits."""
-    bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
+    vals = np.asarray(vals, dtype=np.float64)
+    bits = vals.view(np.uint64)
     w = BitWriter()
     if len(bits) < 2:
+        return w.bytes()
+    p = decimal_scale(vals)
+    if p is not None:
+        w.write((SCALED_TAG << 3) | p, 5)
+        k = np.rint(vals * POW10[p]).astype(np.int64)
+        _write_dods(w, np.diff(np.diff(k), prepend=0))
         return w.bytes()
     xors = bits[:-1] ^ bits[1:]
     bitmat = np.unpackbits(
@@ -214,6 +273,18 @@ def encode_vals(vals: np.ndarray) -> bytes:
 
 
 def decode_vals(first_val: float, data: bytes, n: int) -> np.ndarray:
+    if n >= 2 and data[0] >> 6 == SCALED_TAG:
+        r = BitReader(data)
+        pw = POW10[r.read(5) & 7]
+        out = np.empty(n, dtype=np.float64)
+        out[0] = first_val
+        k = int(np.rint(np.float64(first_val) * pw))
+        delta = 0
+        for i in range(1, n):
+            delta += _read_dod(r)
+            k += delta
+            out[i] = float(k) / pw
+        return out
     out_bits = np.empty(n, dtype=np.uint64)
     if n == 0:
         return out_bits.view(np.float64)

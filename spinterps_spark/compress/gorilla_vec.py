@@ -7,11 +7,17 @@ surface. These kernels process EVERY chunk of an Arrow batch at once:
 - decode: "lockstep" parsing — numpy state arrays (bit position, window
   state) advance one token per iteration across all chunks ("lanes")
   simultaneously, so the per-iteration cost is a handful of vectorized ops
-  over C lanes instead of Python work per point. Value reconstruction is a
-  segmented XOR prefix scan; timestamps are two segmented cumulative sums.
-- encode: the timestamp stream is STATELESS (control class depends only on
-  the delta-of-delta value), so classification is a single vectorized pass;
-  the value stream's window-reuse state machine locksteps over nonzero
+  over C lanes instead of Python work per point. A value stream's first
+  two bits name its mode (gorilla.py, "Value stream"), so one batch may mix
+  both: XOR-mode lanes rebuild values with a segmented XOR prefix scan;
+  integer-mode lanes and timestamps share ONE delta-of-delta token reader
+  (_read_dod_tokens) and two segmented cumulative sums (_integrate), and
+  integer lanes then divide k by 10**p.
+- encode: the value mode is chosen per chunk from the values alone
+  (_choose_scales: each pass over p = 0..7 revisits only the chunks still
+  undecided). Delta-of-delta tokens are STATELESS (the control class
+  depends only on the value), so classifying them is a single vectorized
+  pass; the XOR stream's window-reuse state machine locksteps over nonzero
   XORs only (zero runs collapse to one (0, gap) pair, computed from
   positions). Bit packing deposits (value, nbits<=64) pairs into 64-bit
   words via bitwise_or.reduceat — no per-bit expansion.
@@ -21,17 +27,21 @@ surface. These kernels process EVERY chunk of an Arrow batch at once:
   list-of-bytes forms serve tests and offline tools.
 
 Everything is bit-for-bit identical to the scalar codec (asserted by
-tests/test_gorilla_vec.py over adversarial and random inputs, and by the
-unchanged gorilla_roundtrip oracle row): all arithmetic is uint64 mod 2^64,
-which is exactly the BitWriter/BitReader semantics.
+tests/test_gorilla_vec.py and tests/test_gorilla_modes.py over adversarial,
+mode-boundary and random inputs, and by the unchanged gorilla_roundtrip
+oracle row): all arithmetic is uint64 mod 2^64, which is exactly the
+BitWriter/BitReader semantics, and the integer mode's exactness check and
+k / 10**p division are the scalar codec's expressions.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from spinterps_spark.compress.gorilla import K_LIMIT, POW10, SCALED_TAG
+
 U64 = np.uint64
-M64 = np.uint64(0xFFFFFFFFFFFFFFFF)
+_POW10 = np.array(POW10)
 
 
 # ---------------------------------------------------------------- helpers
@@ -116,30 +126,106 @@ def _window(v64, b8, pos):
 
 # ---------------------------------------------------------------- decode
 
-def decode_vals_many(first_vals: np.ndarray, streams,
-                     ns: np.ndarray) -> np.ndarray:
-    """Decode many value streams (a Binary Arrow array or a list of bytes)
-    at once; returns the flat float64 array of sum(ns) values in chunk
-    order. Bit-identical to decode_vals per chunk."""
-    C = len(streams)
-    ns = np.asarray(ns, dtype=np.int64)
-    total = int(ns.sum())
-    xs = np.zeros(total, dtype=np.uint64)
-    if total == 0:
-        return xs.view(np.float64)
+def _scales_of(v64, base_bits, ns) -> np.ndarray:
+    """Per stream: its integer-mode p, or -1 for an XOR stream (n < 2, or
+    a first token other than the '10' tag)."""
+    head = (v64[base_bits >> 3] >> U64(56)).astype(np.int64)
+    scaled = (ns >= 2) & ((head >> 6) == SCALED_TAG)
+    return np.where(scaled, (head >> 3) & 7, -1)
+
+
+def stream_scales(streams, ns: np.ndarray) -> np.ndarray:
+    """The value mode of each vals_xor stream (a Binary Arrow array or a
+    list of bytes): p >= 0 for an integer-mode stream, -1 for XOR mode."""
+    v64, _b8, base_bits = _prep_windows(streams)
+    return _scales_of(v64, base_bits, np.asarray(ns, dtype=np.int64))
+
+
+def _read_dod_tokens(v64, b8, pos0, n_tok, slot, out) -> None:
+    """The one delta-of-delta token reader (timestamp streams and
+    integer-mode value streams): lane c's n_tok[c] tokens start at bit
+    pos0[c], and the dod of its token j goes to out[slot[c] + j] (a zero
+    dod leaves out as it is). Lanes are sorted by DESCENDING token count, so
+    the active set at lockstep iteration j is a PREFIX of the sorted
+    order: every op slices exactly the active lanes, and since every
+    active lane consumes one token per iteration, the per-lane token
+    counter IS the loop index."""
+    order = np.argsort(-n_tok, kind="stable")
+    n_tok_s = n_tok[order]
+    pos = pos0.astype(np.uint64)[order]
+    slot_s = slot[order]
+    one = U64(1)
+    A = int((n_tok_s > 0).sum())
+    j = 0
+    while A > 0:
+        pa = pos[:A]
+        w = _window(v64, b8, pa)
+        c4 = w >> U64(60)
+        is7 = (c4 >= U64(8)) & (c4 < U64(12))
+        is9 = (c4 >= U64(12)) & (c4 < U64(14))
+        is12 = c4 == U64(14)
+        is64 = c4 == U64(15)
+        d = np.zeros(A, dtype=np.uint64)
+        if is7.any():
+            p = (w << U64(2)) >> U64(57)
+            d = np.where(is7, (p ^ U64(0x40)) - U64(0x40), d)
+        if is9.any():
+            p = (w << U64(3)) >> U64(55)
+            d = np.where(is9, (p ^ U64(0x100)) - U64(0x100), d)
+        if is12.any():
+            p = (w << U64(4)) >> U64(52)
+            d = np.where(is12, (p ^ U64(0x800)) - U64(0x800), d)
+        if is64.any():
+            w2 = _window(v64, b8, pa + U64(4))
+            d = np.where(is64, w2, d)
+        nz = c4 >= U64(8)
+        if nz.any():
+            idx = slot_s[:A] + j
+            out[idx[nz]] = d[nz]
+        adv = np.where(c4 < U64(8), one,
+              np.where(is7, U64(9),
+              np.where(is9, U64(12),
+              np.where(is12, U64(16), U64(68)))))
+        pos[:A] = pa + adv
+        j += 1
+        while A > 0 and n_tok_s[A - 1] <= j:
+            A -= 1
+
+
+def _integrate(firsts, f, ns) -> np.ndarray:
+    """The flat uint64 series (mod 2^64), in place in f. f holds, per lane,
+    0 at the lane's first point and then its ns-1 entries [first delta,
+    dod, dod, ...]. Two segmented cumulative sums: because f is 0 at each
+    lane's first point, the running sum there is exactly what the lanes
+    before it contributed, so subtracting it per lane segments the scan."""
+    head = np.minimum(np.cumsum(ns) - ns, len(f) - 1)
+    np.cumsum(f, out=f)
+    f -= np.repeat(f[head], ns)
+    np.cumsum(f, out=f)
+    f += np.repeat(firsts - f[head], ns)
+    return f
+
+
+def _decode_scaled(v64, b8, base_bits, firsts, ns, p) -> np.ndarray:
+    """Integer-mode lanes (all ns >= 2) -> flat float64 values."""
+    base = np.cumsum(ns) - ns
+    f = np.zeros(int(ns.sum()), dtype=np.uint64)
+    _read_dod_tokens(v64, b8, base_bits + 5, ns - 1, base + 1, f)
+    pw = _POW10[p]
+    first_f = firsts.view(np.float64)
+    k0 = np.rint(first_f * pw).astype(np.int64).view(np.uint64)
+    out = _integrate(k0, f, ns).view(np.int64).astype(np.float64)
+    out /= np.repeat(pw, ns)
+    out[base] = first_f
+    return out
+
+
+def _decode_xor(v64, b8, base_bits, firsts, ns) -> np.ndarray:
+    """XOR-mode lanes -> flat uint64 value bits. Lanes sorted by
+    DESCENDING token count, as in _read_dod_tokens."""
+    C = len(ns)
     base_out = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    firsts = np.ascontiguousarray(first_vals, dtype=np.float64).view(np.uint64)
-    if C == 0 or not (ns > 1).any():
-        out = xs
-        out[base_out] = firsts
-        return out.view(np.float64)
-    v64, b8, base_bits = _prep_windows(streams)
-    # lanes sorted by DESCENDING token count: the active set at lockstep
-    # iteration j is a PREFIX of the sorted order (same trick as the
-    # encoder's window-reuse loop, r8 third pass), so every op slices
-    # exactly the active lanes instead of masking all C; and since every
-    # active lane consumes one token per iteration, the per-lane token
-    # counter IS the loop index — it disappears.
+    xs = np.zeros(int(ns.sum()), dtype=np.uint64)
     n_tok_i = np.maximum(ns - 1, 0)
     order = np.argsort(-n_tok_i, kind="stable")
     n_tok_s = n_tok_i[order]
@@ -178,7 +264,39 @@ def decode_vals_many(first_vals: np.ndarray, streams,
     # segmented XOR prefix scan: xs[base]=0, firsts folded via correction
     acc = np.bitwise_xor.accumulate(xs)
     pre = np.where(base_out > 0, acc[np.maximum(base_out - 1, 0)], U64(0))
-    return (acc ^ np.repeat(firsts ^ pre, ns)).view(np.float64)
+    return acc ^ np.repeat(firsts ^ pre, ns)
+
+
+def decode_vals_many(first_vals: np.ndarray, streams,
+                     ns: np.ndarray) -> np.ndarray:
+    """Decode many value streams (a Binary Arrow array or a list of bytes,
+    each in either value mode) at once; returns the flat float64 array of
+    sum(ns) values in chunk order. Bit-identical to decode_vals per
+    chunk."""
+    C = len(streams)
+    ns = np.asarray(ns, dtype=np.int64)
+    total = int(ns.sum())
+    if total == 0:
+        return np.zeros(0, dtype=np.float64)
+    firsts = np.ascontiguousarray(first_vals, dtype=np.float64).view(np.uint64)
+    if C == 0 or not (ns > 1).any():
+        out = np.zeros(total, dtype=np.uint64)
+        out[np.concatenate(([0], np.cumsum(ns)))[:-1]] = firsts
+        return out.view(np.float64)
+    v64, b8, base_bits = _prep_windows(streams)
+    p = _scales_of(v64, base_bits, ns)
+    sc = p >= 0
+    if sc.all():
+        return _decode_scaled(v64, b8, base_bits, firsts, ns, p)
+    if not sc.any():
+        return _decode_xor(v64, b8, base_bits, firsts, ns).view(np.float64)
+    out = np.empty(total, dtype=np.uint64)
+    pt = np.repeat(sc, ns)
+    out[pt] = _decode_scaled(v64, b8, base_bits[sc], firsts[sc], ns[sc],
+                             p[sc]).view(np.uint64)
+    xl = ~sc
+    out[~pt] = _decode_xor(v64, b8, base_bits[xl], firsts[xl], ns[xl])
+    return out.view(np.float64)
 
 
 def decode_ts_many(first_ts: np.ndarray, streams,
@@ -186,79 +304,20 @@ def decode_ts_many(first_ts: np.ndarray, streams,
     """Decode many timestamp streams (a Binary Arrow array or a list of
     bytes) at once; flat int64 output in chunk order. Bit-identical to
     decode_ts per chunk (mod-2^64 arithmetic)."""
-    C = len(streams)
     ns = np.asarray(ns, dtype=np.int64)
-    total = int(ns.sum())
-    if total == 0:
+    if int(ns.sum()) == 0:
         return np.zeros(0, dtype=np.int64)
-    base_out = np.concatenate(([0], np.cumsum(ns)))[:-1]
     firsts = np.ascontiguousarray(first_ts, dtype=np.int64).view(np.uint64)
     v64, b8, base_bits = _prep_windows(streams)
-    dn = np.maximum(ns - 1, 0)
-    deltas = np.zeros(int(dn.sum()), dtype=np.uint64)
-    dbase = np.concatenate(([0], np.cumsum(dn)))[:-1]
+    base = np.cumsum(ns) - ns
+    f = np.zeros(int(ns.sum()), dtype=np.uint64)
     has_d = ns >= 2
     if has_d.any():
         # first delta: raw 64 bits at the (byte-aligned) stream start
-        k0 = (base_bits[has_d] >> 3).astype(np.int64)
-        deltas[dbase[has_d]] = v64[k0]
-    # same sorted-prefix lockstep as decode_vals_many: active lanes are a
-    # prefix of the count-descending order, the token counter is the loop
-    # index, and every op runs on exactly the active slice.
-    n_tok_i = np.maximum(ns - 2, 0)
-    order = np.argsort(-n_tok_i, kind="stable")
-    n_tok_s = n_tok_i[order]
-    pos = base_bits.astype(np.uint64)[order] + U64(64)
-    dbase_s = dbase[order]
-    one = U64(1)
-    A = int((n_tok_s > 0).sum())
-    j = 0
-    while A > 0:
-        pa = pos[:A]
-        w = _window(v64, b8, pa)
-        c4 = w >> U64(60)
-        is7 = (c4 >= U64(8)) & (c4 < U64(12))
-        is9 = (c4 >= U64(12)) & (c4 < U64(14))
-        is12 = c4 == U64(14)
-        is64 = c4 == U64(15)
-        d = np.zeros(A, dtype=np.uint64)
-        if is7.any():
-            p = (w << U64(2)) >> U64(57)
-            d = np.where(is7, (p ^ U64(0x40)) - U64(0x40), d)
-        if is9.any():
-            p = (w << U64(3)) >> U64(55)
-            d = np.where(is9, (p ^ U64(0x100)) - U64(0x100), d)
-        if is12.any():
-            p = (w << U64(4)) >> U64(52)
-            d = np.where(is12, (p ^ U64(0x800)) - U64(0x800), d)
-        if is64.any():
-            w2 = _window(v64, b8, pa + U64(4))
-            d = np.where(is64, w2, d)
-        nz = c4 >= U64(8)
-        if nz.any():
-            idx = dbase_s[:A] + 1 + j
-            deltas[idx[nz]] = d[nz]
-        adv = np.where(c4 < U64(8), one,
-              np.where(is7, U64(9),
-              np.where(is9, U64(12),
-              np.where(is12, U64(16), U64(68)))))
-        pos[:A] = pa + adv
-        j += 1
-        while A > 0 and n_tok_s[A - 1] <= j:
-            A -= 1
-    # deltas hold [delta0, dod1, ...] per chunk: segmented cumsum -> true
-    # deltas; a second segmented cumsum with firsts -> timestamps.
-    if len(deltas):
-        acc = np.cumsum(deltas, dtype=np.uint64)
-        pre = np.where(dbase > 0, acc[np.maximum(dbase - 1, 0)], U64(0))
-        deltas = acc - np.repeat(pre, dn)
-    full = np.zeros(total, dtype=np.uint64)
-    mask = np.ones(total, dtype=bool)
-    mask[base_out] = False
-    full[mask] = deltas
-    acc = np.cumsum(full, dtype=np.uint64)
-    pre = np.where(base_out > 0, acc[np.maximum(base_out - 1, 0)], U64(0))
-    return (acc + np.repeat(firsts - pre, ns)).view(np.int64)
+        f[base[has_d] + 1] = v64[(base_bits[has_d] >> 3).astype(np.int64)]
+    _read_dod_tokens(v64, b8, base_bits + 64, np.maximum(ns - 2, 0),
+                     base + 2, f)
+    return _integrate(firsts, f, ns).view(np.int64)
 
 
 # ---------------------------------------------------------------- encode
@@ -435,6 +494,24 @@ def encode_vals_binary(v_flat: np.ndarray, starts: np.ndarray):
     return _as_binary(_encode_vals(v_flat, starts))
 
 
+def _dod_pairs(d: np.ndarray):
+    """(vA, bA, vB, bB) token pairs of nonzero int64 delta-of-deltas: class
+    prefix and payload fused into A; a 64-bit escape's raw value in B."""
+    du = d.astype(np.uint64)
+    c7 = (d >= -64) & (d <= 63)
+    c9 = ~c7 & (d >= -256) & (d <= 255)
+    c12 = ~c7 & ~c9 & (d >= -2048) & (d <= 2047)
+    c64 = ~c7 & ~c9 & ~c12
+    vA = np.where(c7, (U64(2) << U64(7)) | (du & U64(0x7F)),
+         np.where(c9, (U64(6) << U64(9)) | (du & U64(0x1FF)),
+         np.where(c12, (U64(0xE) << U64(12)) | (du & U64(0xFFF)),
+                  U64(0xF))))
+    bA = np.where(c7, 9, np.where(c9, 12, np.where(c12, 16, 4)))
+    vB = np.where(c64, du, U64(0))
+    bB = np.where(c64, 64, 0)
+    return vA, bA, vB, bB
+
+
 def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     """Packed (buf, offsets) ts_d2d streams. Stateless classification —
     no iteration at all."""
@@ -450,19 +527,7 @@ def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     tok_base, _lr, fp = _lane_major_tokens(starts, ns, 2)
     d = dod_flat[fp] if len(fp) else np.zeros(0, np.int64)
     nz, gap, tail, lane_of_nz = _zero_gap_pairs(d != 0, tok_base, C)
-    dnz = d[nz]
-    du = dnz.astype(np.uint64)
-    c7 = (dnz >= -64) & (dnz <= 63)
-    c9 = ~c7 & (dnz >= -256) & (dnz <= 255)
-    c12 = ~c7 & ~c9 & (dnz >= -2048) & (dnz <= 2047)
-    c64 = ~c7 & ~c9 & ~c12
-    vA = np.where(c7, (U64(2) << U64(7)) | (du & U64(0x7F)),
-         np.where(c9, (U64(6) << U64(9)) | (du & U64(0x1FF)),
-         np.where(c12, (U64(0xE) << U64(12)) | (du & U64(0xFFF)),
-                  U64(0xF))))
-    bA = np.where(c7, 9, np.where(c9, 12, np.where(c12, 16, 4)))
-    vB = np.where(c64, du, U64(0))
-    bB = np.where(c64, 64, 0)
+    vA, bA, vB, bB = _dod_pairs(d[nz])
     has_d = np.flatnonzero(ns >= 2)
     head_v = (d_flat[starts[has_d]].astype(np.uint64)
               if len(has_d) else np.zeros(0, np.uint64))
@@ -472,30 +537,58 @@ def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     return _pack_pairs(v, b, lane, C)
 
 
-def _encode_vals(v_flat: np.ndarray, starts: np.ndarray):
-    """Packed (buf, offsets) vals_xor streams. Only the window-reuse
-    decision locksteps (over nonzero XORs); everything else is one pass."""
-    v_flat = np.asarray(v_flat, dtype=np.float64)
-    bits64 = v_flat.view(np.uint64)
-    starts = np.asarray(starts, dtype=np.int64)
-    ends = np.append(starts[1:], len(v_flat))
-    ns = ends - starts
-    C = len(starts)
-    if C == 0:
-        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
-    xflat = (bits64[:-1] ^ bits64[1:]) if len(bits64) > 1 else \
-        np.zeros(0, np.uint64)
-    tok_base, _lr, fp = _lane_major_tokens(starts, ns, 1)
-    x_tok = xflat[fp] if len(fp) else np.zeros(0, np.uint64)
-    nz, gap, tail, lane_of_nz = _zero_gap_pairs(x_tok != 0, tok_base, C)
-    n_nz = len(nz)
-    z0 = np.zeros(0, np.uint64)
-    zi = np.zeros(0, np.int64)
-    if n_nz == 0:
-        v, b, lane = _assemble(z0, zi, z0, zi, zi, zi, z0, zi, zi, tail, C)
-        return _pack_pairs(v, b, lane, C)
-    x_nz = x_tok[nz]
+def _exact_at(vv: np.ndarray, pw: float):
+    """Per value: (passes decimal_scale's check at 10**p = pw, rint(v*pw)).
+    kf is integral, so for |kf| < 2^53 it equals float64(int64(kf)) once
+    -0.0 is made +0.0 (the int conversion's sign) — the same check without
+    the int round trip."""
+    kf = vv * pw
+    np.rint(kf, out=kf)
+    kf += 0.0
+    ok = np.abs(kf) < K_LIMIT
+    ok &= (kf / pw).view(np.uint64) == vv.view(np.uint64)
+    return ok, kf
+
+
+def _points_of(lanes: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """Boolean mask of the points of the given lanes."""
+    m = np.zeros(len(ns), dtype=bool)
+    m[lanes] = True
+    return np.repeat(m, ns)
+
+
+def _choose_scales(v: np.ndarray, starts: np.ndarray, ns: np.ndarray):
+    """Per chunk: the integer-mode p (gorilla.decimal_scale's rule — the
+    smallest p at which EVERY value passes), or -1 for XOR mode; and the
+    flat int64 k (0 outside integer-mode chunks). Each pass over p
+    revisits only the chunks still undecided, and tests a chunk's other
+    values only when its first value passes."""
+    p_of = np.full(len(starts), -1, dtype=np.int64)
+    k = np.zeros(len(v), dtype=np.int64)
+    undecided = ns >= 2
+    with np.errstate(over="ignore", invalid="ignore"):
+        for p, pw in enumerate(POW10):
+            lanes = np.flatnonzero(undecided)
+            if not len(lanes):
+                break
+            cand = lanes[_exact_at(v[starts[lanes]], pw)[0]]
+            if not len(cand):
+                continue
+            ok, kf = _exact_at(v[_points_of(cand, ns)], pw)
+            seg = ns[cand]
+            good = np.logical_and.reduceat(ok, np.cumsum(seg) - seg)
+            won = cand[good]
+            p_of[won] = p
+            undecided[won] = False
+            k[_points_of(won, ns)] = kf[np.repeat(good, seg)].astype(np.int64)
+    return p_of, k
+
+
+def _xor_pairs(x_nz: np.ndarray, lane_of_nz: np.ndarray, C: int):
+    """(vA, bA, vB, bB) token pairs of the lane-major nonzero XORs of
+    XOR-mode lanes. Only the window-reuse decision locksteps."""
     lead_nz, trail_nz = _lead_trail(x_nz)
+    n_nz = len(x_nz)
     # lockstep the window-reuse state machine over the j-th nonzero token
     # of every lane at once
     nz_per_lane = np.bincount(lane_of_nz, minlength=C)
@@ -558,6 +651,63 @@ def _encode_vals(v_flat: np.ndarray, starts: np.ndarray):
     bA = np.where(fused, tot_bits, ctrl_bits)
     vB = np.where(fused, U64(0), payload)
     bB = np.where(fused, 0, win_len)
+    return vA, bA, vB, bB
+
+
+def _encode_vals(v_flat: np.ndarray, starts: np.ndarray):
+    """Packed (buf, offsets) vals_xor streams, each chunk in the value
+    mode _choose_scales picks. Both modes share one token enumeration:
+    token t of a lane is the XOR of values t and t+1, or the dod of k
+    there; a zero token is a '0' bit in either mode."""
+    v_flat = np.asarray(v_flat, dtype=np.float64)
+    starts = np.asarray(starts, dtype=np.int64)
+    ends = np.append(starts[1:], len(v_flat))
+    ns = ends - starts
+    C = len(starts)
+    if C == 0:
+        return np.zeros(0, np.uint8), np.zeros(1, np.int64)
+    p, k = _choose_scales(v_flat, starts, ns)
+    sc = p >= 0
+    tok_base, lane_rep, fp = _lane_major_tokens(starts, ns, 1)
+    sc_tok = sc[lane_rep]
+
+    def dods():
+        kd = np.diff(k)
+        d = np.empty_like(kd)         # each delta less the one before it,
+        d[:1] = kd[:1]                # but a lane's first delta less zero
+        np.subtract(kd[1:], kd[:-1], out=d[1:])
+        first = starts[ns >= 2]
+        d[first] = kd[first]
+        return d[fp].view(np.uint64)
+
+    def xors(f):
+        bits64 = v_flat.view(np.uint64)
+        return bits64[f] ^ bits64[f + 1]
+
+    if not sc.any():
+        tok = xors(fp)
+    else:
+        tok = dods()
+        if not sc.all():
+            x_tok = ~sc_tok
+            tok[x_tok] = xors(fp[x_tok])
+    nz, gap, tail, lane_of_nz = _zero_gap_pairs(tok != 0, tok_base, C)
+    t_nz = tok[nz]
+    s_nz = sc_tok[nz]
+    vA = np.empty(len(nz), dtype=np.uint64)
+    vB = np.empty(len(nz), dtype=np.uint64)
+    bA = np.empty(len(nz), dtype=np.int64)
+    bB = np.empty(len(nz), dtype=np.int64)
+    if s_nz.any():
+        vA[s_nz], bA[s_nz], vB[s_nz], bB[s_nz] = _dod_pairs(
+            t_nz[s_nz].view(np.int64))
+    x_nz = ~s_nz
+    if x_nz.any():
+        vA[x_nz], bA[x_nz], vB[x_nz], bB[x_nz] = _xor_pairs(
+            t_nz[x_nz], lane_of_nz[x_nz], C)
+    head_lane = np.flatnonzero(sc)
+    head_v = ((SCALED_TAG << 3) | p[head_lane]).astype(np.uint64)
+    head_b = np.full(len(head_lane), 5, dtype=np.int64)
     v, b, lane = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
-                           z0, zi, zi, tail, C)
+                           head_v, head_b, head_lane, tail, C)
     return _pack_pairs(v, b, lane, C)

@@ -126,6 +126,18 @@ def test_time_travel_unknown_commit_raises(spark, store):
         current_chunks(spark, store["dirs"]["a"], TIER, as_of="nope")
 
 
+def test_value_stream_stores_decimal_chunks_as_integers(spark, store):
+    """The fill rounds to 2 decimals, so nearly every 1m chunk is stored in
+    the integer value mode (compress/gorilla.py), well under 1 B per point
+    against about 3 B in XOR mode. A fault in the exactness check that
+    sends every chunk back to XOR mode still passes every roundtrip test;
+    it fails here."""
+    r = current_chunks(spark, store["dirs"]["b"], TIER).agg(
+        F.sum(F.length("vals_xor")).alias("nbytes"),
+        F.sum("n").alias("pts")).first()
+    assert r["nbytes"] / r["pts"] < 1.0
+
+
 def test_flatten_rollup_collapses_the_delta_chain(spark, store):
     d = store["dirs"]["a"]
     before = _rollup_rows(spark, d)
