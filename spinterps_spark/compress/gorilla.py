@@ -10,16 +10,39 @@ graft stores rolled-up points as fixed-size Gorilla chunk structs per
     (conv_id, tier, chunk_start_ts, n, first_ts, first_val,
      ts_d2d binary, vals_xor binary)
 
-Timestamp stream: first_ts raw; first delta 64-bit raw; then delta-of-delta D:
+Timestamp stream (the `ts_d2d` column): first_ts raw in the struct; the
+stream holds the other n-1 timestamps in one of two forms, chosen per chunk
+from the timestamps alone:
+
+- Grid form, when n >= 2 and all n-1 deltas equal one delta with
+  0 < delta < 2^56 (GRID_LIMIT). The fill emits every bucket between a
+  conversation's first and last reference, so nearly every chunk is such a
+  grid. The stream is the delta as a big-endian unsigned integer in the
+  fewest bytes that hold it: 1 byte for 60 s, 2 for 3600 s, 3 for
+  86400 s. The fewest-bytes rule keeps the encoding canonical (equal
+  timestamps always give equal bytes; a leading zero byte is never
+  written). Decode: ts[i] = first_ts + i * delta.
+- Token form, for every other chunk — the Gorilla stream, unchanged from
+  stores written before grid form existed: the first delta 64-bit raw,
+  then each delta-of-delta D:
     D == 0              -> '0'
     D in [-64, 63]      -> '10'  + 7-bit two's complement
     D in [-256, 255]    -> '110' + 9-bit
     D in [-2048, 2047]  -> '1110'+ 12-bit
     else                -> '1111'+ 64-bit raw
-(Ranges are symmetric with the two's-complement payload — NOT the paper's
-offset-coded [-63,64] windows — so encode/decode are exact inverses for any
-int64 input, including the boundary values 64/256/2048.)
-(64-bit escape instead of the paper's 32 — retention-tier gaps can exceed 2^31 s.)
+  (Ranges are symmetric with the two's-complement payload — NOT the
+  paper's offset-coded [-63,64] windows — so encode/decode are exact
+  inverses for any int64 input, including the boundary values
+  64/256/2048.) (64-bit escape instead of the paper's 32 — retention-tier
+  gaps can exceed 2^31 s.)
+
+A token stream of n >= 2 opens with its 64-bit raw first delta, so it is
+at least 8 bytes long, and a grid stream is 1 to 7: the length alone names
+the form, and old stores need no version stamp. A stream of n >= 2 with
+zero bytes is malformed; decode raises. A chunk of n = 1 keeps its empty
+stream. Code older than grid form reads 64 raw bits past the end of a 1-7
+byte stream and returns wrong timestamps without raising: a store written
+with grid form must not be read by it.
 
 Value stream (the `vals_xor` column): first_val raw 64-bit IEEE754 in the
 struct; the stream holds the other n-1 values in one of two modes, chosen
@@ -122,6 +145,7 @@ def _untwos(raw: int, bits: int) -> int:
 POW10 = (1.0, 10.0, 100.0, 1e3, 1e4, 1e5, 1e6, 1e7)
 SCALED_TAG = 0b10        # first two bits of an integer-mode value stream
 K_LIMIT = 2.0 ** 53      # |k| bound: every k is exact in float64
+GRID_LIMIT = 1 << 56     # grid-form delta bound: it fits 7 bytes
 
 
 def decimal_scale(vals: np.ndarray) -> int | None:
@@ -181,13 +205,18 @@ def _read_dod(r: BitReader) -> int:
 
 def encode_ts(ts: np.ndarray) -> bytes:
     """ts: int64 seconds, ascending. Stream excludes ts[0] (stored raw in the
-    struct); includes the first delta as a raw 64-bit field."""
+    struct). Grid form (one delta in the fewest bytes) when every delta is
+    the same 0 < delta < GRID_LIMIT; else token form, whose first delta is
+    a raw 64-bit field."""
     ts = np.asarray(ts, dtype=np.int64)
     w = BitWriter()
     if len(ts) < 2:
         return w.bytes()
     deltas = np.diff(ts)
-    w.write(int(deltas[0]) & ((1 << 64) - 1), 64)
+    d0 = int(deltas[0])
+    if 0 < d0 < GRID_LIMIT and (deltas == d0).all():
+        return d0.to_bytes((d0.bit_length() + 7) // 8, "big")
+    w.write(d0 & ((1 << 64) - 1), 64)
     _write_dods(w, np.diff(deltas))
     return w.bytes()
 
@@ -199,6 +228,11 @@ def decode_ts(first_ts: int, data: bytes, n: int) -> np.ndarray:
     out[0] = first_ts
     if n == 1:
         return out
+    if len(data) < 8:
+        if not data:
+            raise ValueError(f"empty ts_d2d stream for a chunk of {n} points")
+        delta = int.from_bytes(data, "big")
+        return np.arange(n, dtype=np.int64) * delta + np.int64(first_ts)
     r = BitReader(data)
     delta = _untwos(r.read(64), 64)
     out[1] = out[0] + delta

@@ -12,24 +12,33 @@ surface. These kernels process EVERY chunk of an Arrow batch at once:
   both: XOR-mode lanes rebuild values with a segmented XOR prefix scan;
   integer-mode lanes and timestamps share ONE delta-of-delta token reader
   (_read_dod_tokens) and two segmented cumulative sums (_integrate), and
-  integer lanes then divide k by 10**p.
+  integer lanes then divide k by 10**p. A timestamp stream's length names
+  its form (gorilla.py, "Timestamp stream"): a grid lane (n >= 2, fewer
+  than 8 bytes) is a token lane with a short head and no tokens — its
+  delta is the top 8*len bits of its first window, it skips the token
+  loop, and _integrate yields first_ts + i*delta.
 - encode: the value mode is chosen per chunk from the values alone
   (_choose_scales: each pass over p = 0..7 revisits only the chunks still
-  undecided). Delta-of-delta tokens are STATELESS (the control class
-  depends only on the value), so classifying them is a single vectorized
-  pass; the XOR stream's window-reuse state machine locksteps over nonzero
-  XORs only (zero runs collapse to one (0, gap) pair, computed from
-  positions). Bit packing deposits (value, nbits<=64) pairs into 64-bit
-  words via bitwise_or.reduceat — no per-bit expansion.
+  undecided), and a timestamp lane with no nonzero dod token and
+  0 < delta < 2^56 takes the grid head (delta, 8*width) and no zero run.
+  Delta-of-delta tokens are STATELESS (the control class depends only on
+  the value), so classifying them is a single vectorized pass; the XOR
+  stream's window-reuse state machine locksteps over nonzero XORs only
+  (zero runs collapse to one (0, gap) pair, computed from positions).
+  Each lane's head pair and its one trailing pair (zero run plus padding
+  to a byte boundary) go in with a single insert pass; bit packing
+  deposits the nonzero (value, nbits<=64) pairs into 64-bit words via
+  bitwise_or.reduceat — no per-bit expansion.
 - Arrow: streams cross the mapInArrow boundary as Binary columns. The
   decoders read a column's offsets and data buffers directly; the
   encoders build the column over the packed buffer (encode_*_binary). The
   list-of-bytes forms serve tests and offline tools.
 
 Everything is bit-for-bit identical to the scalar codec (asserted by
-tests/test_gorilla_vec.py and tests/test_gorilla_modes.py over adversarial,
-mode-boundary and random inputs, and by the unchanged gorilla_roundtrip
-oracle row): all arithmetic is uint64 mod 2^64, which is exactly the
+tests/test_gorilla_vec.py, tests/test_gorilla_modes.py and
+tests/test_gorilla_grid.py over adversarial, mode-boundary, grid-boundary
+and random inputs, and by the unchanged gorilla_roundtrip oracle row):
+all arithmetic is uint64 mod 2^64, which is exactly the
 BitWriter/BitReader semantics, and the integer mode's exactness check and
 k / 10**p division are the scalar codec's expressions.
 """
@@ -38,7 +47,8 @@ from __future__ import annotations
 
 import numpy as np
 
-from spinterps_spark.compress.gorilla import K_LIMIT, POW10, SCALED_TAG
+from spinterps_spark.compress.gorilla import (
+    GRID_LIMIT, K_LIMIT, POW10, SCALED_TAG)
 
 U64 = np.uint64
 _POW10 = np.array(POW10)
@@ -98,11 +108,13 @@ def _stream_bytes(streams):
 
 def _prep_windows(streams):
     """Concatenated byte streams (a Binary Arrow array or a list of
-    bytes); return (v64, b8, base_bits): v64[k] = the big-endian uint64 of
-    padded-buffer bytes k..k+7, b8[k] = byte k+8 (as uint64), base_bits[c]
-    = absolute bit offset of stream c. A window of bits [pos, pos+64) is
+    bytes); return (v64, b8, base_bits, lens): v64[k] = the big-endian
+    uint64 of padded-buffer bytes k..k+7, b8[k] = byte k+8 (as uint64),
+    base_bits[c] = absolute bit offset of stream c, lens[c] = its length in
+    bytes. A window of bits [pos, pos+64) is
     (v64[pos>>3] << (pos&7)) | (b8[pos>>3] >> (8-(pos&7)))."""
     buf, base_bytes = _stream_bytes(streams)
+    lens = np.diff(base_bytes, append=len(buf))
     # +24 pad: a token at the very end of the last stream still gathers a
     # full 64-bit window (plus the b8 byte) beyond its final payload bit —
     # e.g. a '11' value token reads bits [pos+14, pos+14+64) + 8 more,
@@ -114,7 +126,7 @@ def _prep_windows(streams):
     for j in range(1, 8):
         v64 <<= U64(8)
         v64 |= a[j:j - 9]
-    return v64, a[8:-1], base_bytes * 8
+    return v64, a[8:-1], base_bytes * 8, lens
 
 
 def _window(v64, b8, pos):
@@ -137,7 +149,7 @@ def _scales_of(v64, base_bits, ns) -> np.ndarray:
 def stream_scales(streams, ns: np.ndarray) -> np.ndarray:
     """The value mode of each vals_xor stream (a Binary Arrow array or a
     list of bytes): p >= 0 for an integer-mode stream, -1 for XOR mode."""
-    v64, _b8, base_bits = _prep_windows(streams)
+    v64, _b8, base_bits, _lens = _prep_windows(streams)
     return _scales_of(v64, base_bits, np.asarray(ns, dtype=np.int64))
 
 
@@ -283,7 +295,7 @@ def decode_vals_many(first_vals: np.ndarray, streams,
         out = np.zeros(total, dtype=np.uint64)
         out[np.concatenate(([0], np.cumsum(ns)))[:-1]] = firsts
         return out.view(np.float64)
-    v64, b8, base_bits = _prep_windows(streams)
+    v64, b8, base_bits, _lens = _prep_windows(streams)
     p = _scales_of(v64, base_bits, ns)
     sc = p >= 0
     if sc.all():
@@ -302,21 +314,29 @@ def decode_vals_many(first_vals: np.ndarray, streams,
 def decode_ts_many(first_ts: np.ndarray, streams,
                    ns: np.ndarray) -> np.ndarray:
     """Decode many timestamp streams (a Binary Arrow array or a list of
-    bytes) at once; flat int64 output in chunk order. Bit-identical to
-    decode_ts per chunk (mod-2^64 arithmetic)."""
+    bytes, each in either form) at once; flat int64 output in chunk order.
+    Bit-identical to decode_ts per chunk (mod-2^64 arithmetic). A grid
+    lane is a token lane with a short head and no tokens: its delta is the
+    top 8*len bits of its first window, and it skips the token loop."""
     ns = np.asarray(ns, dtype=np.int64)
     if int(ns.sum()) == 0:
         return np.zeros(0, dtype=np.int64)
     firsts = np.ascontiguousarray(first_ts, dtype=np.int64).view(np.uint64)
-    v64, b8, base_bits = _prep_windows(streams)
+    v64, b8, base_bits, lens = _prep_windows(streams)
+    has_d = ns >= 2
+    grid = has_d & (lens < 8)
+    if (grid & (lens == 0)).any():
+        raise ValueError("empty ts_d2d stream for a chunk of n >= 2 points")
     base = np.cumsum(ns) - ns
     f = np.zeros(int(ns.sum()), dtype=np.uint64)
-    has_d = ns >= 2
     if has_d.any():
-        # first delta: raw 64 bits at the (byte-aligned) stream start
-        f[base[has_d] + 1] = v64[(base_bits[has_d] >> 3).astype(np.int64)]
-    _read_dod_tokens(v64, b8, base_bits + 64, np.maximum(ns - 2, 0),
-                     base + 2, f)
+        # first delta: the (byte-aligned) stream start, 64 raw bits in
+        # token form, the whole 1-7 byte stream in grid form
+        head = v64[(base_bits[has_d] >> 3).astype(np.int64)]
+        shift = np.where(grid[has_d], 64 - 8 * lens[has_d], 0)
+        f[base[has_d] + 1] = head >> shift.astype(np.uint64)
+    n_tok = np.where(grid, 0, np.maximum(ns - 2, 0))
+    _read_dod_tokens(v64, b8, base_bits + 64, n_tok, base + 2, f)
     return _integrate(firsts, f, ns).view(np.int64)
 
 
@@ -342,31 +362,27 @@ def _insert_many(base: np.ndarray, ipos, bmask, vals) -> np.ndarray:
     return out
 
 
-def _pack_pairs(vals, bits, lane_of_pair, C):
-    """Pack lane-major (value, nbits<=64) pairs into per-lane byte streams,
-    bit-identical to BitWriter (each lane zero-padded to a byte boundary).
-    Zero-width pairs are allowed and must carry value 0. Returns (buf,
-    offsets): lane c's stream is buf[offsets[c]:offsets[c+1]] — the
-    layout of an Arrow Binary column (buf may run past offsets[-1])."""
-    lane_bits = np.bincount(lane_of_pair, weights=bits, minlength=C
-                            ).astype(np.int64)
-    pad = (-lane_bits) % 8
-    ins = np.searchsorted(lane_of_pair, np.arange(C), side="right")
-    ipos, bmask = _insert_plan(ins, len(vals))
-    v = _insert_many(vals, ipos, bmask, np.zeros(C, dtype=np.uint64))
-    nb = _insert_many(bits, ipos, bmask, pad)
-    total = int(lane_bits.sum() + pad.sum())
-    byte_counts = (lane_bits + pad) >> 3
+def _pack_pairs(v, nb, byte_counts):
+    """Pack lane-major (value, nbits) pairs into per-lane byte streams,
+    bit-identical to BitWriter; lane c's pairs fill exactly byte_counts[c]
+    bytes (_assemble's last pair of a lane carries its zero padding).
+    A pair wider than 64 bits or of zero width must carry value 0.
+    Returns (buf, offsets): lane c's stream is
+    buf[offsets[c]:offsets[c+1]] — the layout of an Arrow Binary column
+    (buf may run past offsets[-1])."""
     offsets = np.concatenate(([0], np.cumsum(byte_counts)))
-    if total == 0:
-        return np.zeros(0, np.uint8), offsets
+    out = np.zeros((int(offsets[-1]) + 7) >> 3, dtype=np.uint64)
     off = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    # zero-width pairs only shape the offsets; drop them before the deposit
-    # (one at the very end would otherwise index one word past the buffer)
-    live = nb > 0
+    # zero-valued pairs (zero runs, padding, empty B halves, zero-width
+    # pairs) only shape the offsets; drop them before the deposit (a
+    # zero-width one at the very end would otherwise index one word past
+    # the buffer, and one wider than 64 bits would not fit a deposit)
+    live = v != 0
     v = v[live]
     nb = nb[live]
     off = off[live]
+    if not len(v):
+        return out.view(np.uint8), offsets
     q = off >> 6
     r = off & 63
     sh1 = 64 - r - nb
@@ -374,8 +390,6 @@ def _pack_pairs(vals, bits, lane_of_pair, C):
                  v << np.clip(sh1, 0, 63).astype(np.uint64),
                  v >> np.clip(-sh1, 0, 63).astype(np.uint64))
     spill = sh1 < 0
-    n_words = (total + 63) >> 6
-    out = np.zeros(n_words, dtype=np.uint64)
     # q is nondecreasing (pairs are offset-ordered): one or-reduce per word;
     # bits of distinct pairs never overlap, so OR assembles them exactly.
     qb = np.flatnonzero(np.concatenate(([True], q[1:] != q[:-1])))
@@ -434,9 +448,11 @@ def _zero_gap_pairs(nzmask, tok_base, C):
 
 def _assemble(pairAv, pairAb, pairBv, pairBb, gap, lane_of_nz,
               head_v, head_b, head_lane, tail, C):
-    """Merge per-nz-token triples [(0,gap),(A),(B)] with per-lane head
-    pairs (prepended) and per-lane trailing zero-run pairs (appended);
-    everything lane-major."""
+    """Lane-major (value, nbits) pairs and per-lane byte counts. Per lane:
+    its head pair (head_lane is ascending), the per-nz-token triples
+    [(0,gap),(A),(B)], and one zero pair of its trailing zero run plus
+    the padding to a byte boundary. Heads and tails go in with one insert
+    pass."""
     n_nz = len(gap)
     trip_v = np.zeros(n_nz * 3, dtype=np.uint64)
     trip_b = np.empty(n_nz * 3, dtype=np.int64)
@@ -446,18 +462,31 @@ def _assemble(pairAv, pairAb, pairBv, pairBb, gap, lane_of_nz,
     trip_b[1::3] = pairAb
     trip_b[2::3] = pairBb
     trip_lane = np.repeat(lane_of_nz, 3)
-    ins_tail = np.searchsorted(trip_lane, np.arange(C), side="right")
-    ipos, bmask = _insert_plan(ins_tail, len(trip_v))
-    v1 = _insert_many(trip_v, ipos, bmask, np.zeros(C, dtype=np.uint64))
-    b1 = _insert_many(trip_b, ipos, bmask, tail)
-    l1 = _insert_many(trip_lane, ipos, bmask, np.arange(C))
-    if len(head_lane):
-        ins_head = np.searchsorted(l1, head_lane, side="left")
-        ipos, bmask = _insert_plan(ins_head, len(v1))
-        v1 = _insert_many(v1, ipos, bmask, head_v)
-        b1 = _insert_many(b1, ipos, bmask, head_b)
-        l1 = _insert_many(l1, ipos, bmask, head_lane)
-    return v1, b1, l1
+    lane_bits = np.bincount(trip_lane, weights=trip_b, minlength=C
+                            ).astype(np.int64) + tail
+    lane_bits[head_lane] += head_b
+    byte_counts = (lane_bits + 7) >> 3
+    end_b = tail + byte_counts * 8 - lane_bits
+    lanes = np.arange(C)
+    lo = np.searchsorted(trip_lane, lanes, side="left")
+    hi = np.searchsorted(trip_lane, lanes, side="right")
+    # inserted pairs in lane order, a lane's head before its tail: their
+    # positions are then sorted, as _insert_plan needs
+    n_ins = np.ones(C, dtype=np.int64)
+    n_ins[head_lane] = 2
+    tail_at = np.cumsum(n_ins) - 1
+    ins = np.empty(int(tail_at[-1]) + 1, dtype=np.int64)
+    ins_v = np.zeros(len(ins), dtype=np.uint64)
+    ins_b = np.empty(len(ins), dtype=np.int64)
+    ins[tail_at] = hi
+    ins_b[tail_at] = end_b
+    head_at = tail_at[head_lane] - 1
+    ins[head_at] = lo[head_lane]
+    ins_v[head_at] = head_v
+    ins_b[head_at] = head_b
+    ipos, bmask = _insert_plan(ins, len(trip_v))
+    return (_insert_many(trip_v, ipos, bmask, ins_v),
+            _insert_many(trip_b, ipos, bmask, ins_b), byte_counts)
 
 
 def _lane_major_tokens(starts, ns, off):
@@ -529,12 +558,17 @@ def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     nz, gap, tail, lane_of_nz = _zero_gap_pairs(d != 0, tok_base, C)
     vA, bA, vB, bB = _dod_pairs(d[nz])
     has_d = np.flatnonzero(ns >= 2)
-    head_v = (d_flat[starts[has_d]].astype(np.uint64)
-              if len(has_d) else np.zeros(0, np.uint64))
-    head_b = np.full(len(has_d), 64, dtype=np.int64)
-    v, b, lane = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
-                           head_v, head_b, has_d, tail, C)
-    return _pack_pairs(v, b, lane, C)
+    d0 = d_flat[starts[has_d]]
+    head_v = d0.astype(np.uint64)
+    # grid lanes: no nonzero dod token and 0 < delta < GRID_LIMIT. The
+    # head is the delta in its fewest bytes, and no zero run follows.
+    grid = ((np.bincount(lane_of_nz, minlength=C)[has_d] == 0)
+            & (d0 > 0) & (d0 < GRID_LIMIT))
+    head_b = np.where(grid, 8 * ((_bitlen64(head_v) + 7) >> 3), 64)
+    tail[has_d[grid]] = 0
+    v, b, byte_counts = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
+                                  head_v, head_b, has_d, tail, C)
+    return _pack_pairs(v, b, byte_counts)
 
 
 def _exact_at(vv: np.ndarray, pw: float):
@@ -708,6 +742,6 @@ def _encode_vals(v_flat: np.ndarray, starts: np.ndarray):
     head_lane = np.flatnonzero(sc)
     head_v = ((SCALED_TAG << 3) | p[head_lane]).astype(np.uint64)
     head_b = np.full(len(head_lane), 5, dtype=np.int64)
-    v, b, lane = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
-                           head_v, head_b, head_lane, tail, C)
-    return _pack_pairs(v, b, lane, C)
+    v, b, byte_counts = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
+                                  head_v, head_b, head_lane, tail, C)
+    return _pack_pairs(v, b, byte_counts)

@@ -255,6 +255,10 @@ def run_waved_pass(
                     wall_sec=wall,  # one job: wall of the whole pass
                 )
             )
+        # the pass just wrote these files from `schema`: reading them back
+        # with it skips Spark's footer-reading schema-inference job
+        return spark.read.schema(schema).parquet(
+            os.path.join(out_dir, "wave=*"))
     return spark.read.parquet(os.path.join(out_dir, "wave=*"))
 
 

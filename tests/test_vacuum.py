@@ -138,6 +138,20 @@ def test_value_stream_stores_decimal_chunks_as_integers(spark, store):
     assert r["nbytes"] / r["pts"] < 1.0
 
 
+def test_time_stream_stores_grid_chunks_as_one_delta(spark, store):
+    """The fill emits every bucket between a conversation's first and last
+    reference, so nearly every multi-point 1m chunk is an exact 60 s grid
+    and stores its timestamps in grid form (compress/gorilla.py,
+    "Timestamp stream"): a stream shorter than the 8 bytes every token
+    stream takes. A fault in grid detection that sends every chunk back to
+    token form still passes every roundtrip test; it fails here."""
+    r = current_chunks(spark, store["dirs"]["b"], TIER).where("n >= 2").agg(
+        F.count("*").alias("multi"),
+        F.sum((F.length("ts_d2d") < 8).cast("int")).alias("grid")).first()
+    assert r["multi"] > 0
+    assert r["grid"] >= 0.99 * r["multi"]
+
+
 def test_flatten_rollup_collapses_the_delta_chain(spark, store):
     d = store["dirs"]["a"]
     before = _rollup_rows(spark, d)

@@ -12,6 +12,9 @@ markdown table row:
   point;
 - how many chunks store their values in integer mode, and the histogram
   of their decimal scale p (compress/gorilla.py, "Value stream");
+- how many multi-point chunks store their timestamps in grid form (a
+  ts_d2d stream shorter than 8 bytes, compress/gorilla.py, "Timestamp
+  stream");
 - single-core seconds of decode_ts_many, decode_vals_many, encode_ts_many
   and encode_vals_many over the tier, and whether the re-encode gave the
   stored streams back byte for byte.
@@ -88,7 +91,8 @@ def tier_row(tbl: pa.Table) -> tuple[dict, int, int]:
     vs_col = tbl["vals_xor"].chunk(0)
     pts, chunks = int(ns.sum()), len(ns)
     vbytes = int(pc.sum(pc.binary_length(vs_col)).as_py() or 0)
-    tbytes = int(pc.sum(pc.binary_length(ts_col)).as_py() or 0)
+    tlens = pc.binary_length(ts_col).to_numpy(zero_copy_only=False)
+    tbytes = int(tlens.sum())
     scales = stream_scales(vs_col, ns)
     hist = np.bincount(scales[scales >= 0], minlength=8)
     t0 = time.perf_counter()
@@ -109,6 +113,7 @@ def tier_row(tbl: pa.Table) -> tuple[dict, int, int]:
         "int chunks": int((scales >= 0).sum()),
         "p histogram": " ".join(f"{p}:{c}" for p, c in enumerate(hist)
                                 if c),
+        "grid chunks": int(((ns >= 2) & (tlens < 8)).sum()),
         "dec ts s": t1 - t0, "dec vals s": t2 - t1,
         "enc ts s": t3 - t2, "enc vals s": t4 - t3,
         "re-encode": "same" if same else "DIFFERS",
