@@ -79,17 +79,28 @@ values without raising: a store written with integer mode must not be read
 by it.
 
 Encode/decode are exact bit-for-bit inverses for any float64 payload
-(including NaN payloads). Chunks are bounded (default 120 points, the
-Gorilla paper's 2h@1m block). The Spark operators below run the batch
-kernels of compress/gorilla_vec.py over whole Arrow batches inside
-mapInArrow; the scalar codec here is their bit-exact reference.
+(including NaN payloads). Chunks are bounded: FUSED_CHUNK = 480 points in
+the fused fill+encode pass that builds, refreshes, merges and evolves a
+filled store (the `gorilla_chunk` knob; 8 h at 1m), DEFAULT_CHUNK = 120
+(the Gorilla paper's 2h@1m block) in encode_tier_chunks and the no-fill
+passes. Every chunk pays a 24 B header, and on a filled 1m tier the
+stored bytes per point level off at 480-960 buckets, as Gorilla's own
+block-length measurement did at two hours; the batch decoder's cost
+barely grows with chunk length (compress/gorilla_vec.py). DEFAULT_CHUNK
+stays 120 because the gorilla_roundtrip registry legs encode with it and
+their retention twin is written in its chunk windows. Stores of either
+length decode with any reader: the length is not part of the format. The
+Spark operators below run the batch kernels of compress/gorilla_vec.py
+over whole Arrow batches inside mapInArrow; the scalar codec here is
+their bit-exact reference.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-DEFAULT_CHUNK = 120
+DEFAULT_CHUNK = 120   # encode_tier_chunks and the no-fill passes
+FUSED_CHUNK = 480     # the fused fill+encode pass (gorilla_chunk knob)
 
 
 class BitWriter:

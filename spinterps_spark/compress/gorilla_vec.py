@@ -4,23 +4,33 @@ The scalar codec in compress/gorilla.py decodes/encodes one chunk at a time
 with a per-token Python loop — the engine's last row-at-a-time Python
 surface. These kernels process EVERY chunk of an Arrow batch at once:
 
-- decode: "lockstep" parsing — numpy state arrays (bit position, window
-  state) advance one token per iteration across all chunks ("lanes")
-  simultaneously, so the per-iteration cost is a handful of vectorized ops
-  over C lanes instead of Python work per point. A value stream's first
-  two bits name its mode (gorilla.py, "Value stream"), so one batch may mix
-  both: XOR-mode lanes rebuild values with a segmented XOR prefix scan;
-  integer-mode lanes and timestamps share ONE delta-of-delta token reader
-  (_read_dod_tokens) and two segmented cumulative sums (_integrate), and
-  integer lanes then divide k by 10**p. A timestamp stream's length names
-  its form (gorilla.py, "Timestamp stream"): a grid lane (n >= 2, fewer
-  than 8 bytes) is a token lane with a short head and no tokens — its
-  delta is the top 8*len bits of its first window, it skips the token
-  loop, and _integrate yields first_ts + i*delta.
+- decode: a two-phase token reader. Phase 1 "locksteps" only the token
+  START positions: a numpy position array advances one token per
+  iteration across all chunks ("lanes") at once, each token's length read
+  from a class table indexed by the top bits of its window (4 bits for a
+  delta-of-delta token; 14 bits plus the lane's window length, the only
+  state, for an XOR token), and each start lands in the output slot its
+  token decodes into. An iteration is a handful of numpy calls over the
+  lanes still active, so the Python cost per token of the longest lane
+  is small and chunk length barely moves a batch's decode time. Phase 2
+  then decodes every token's payload in one vectorized pass: one window
+  gather, class-table shifts with an arithmetic shift for the sign, and
+  for XOR tokens the window of the lane's latest '11' token by a forward
+  fill. A value stream's first two bits name its mode (gorilla.py,
+  "Value stream"), so one batch may mix both: XOR-mode lanes rebuild
+  values with a segmented XOR prefix scan; integer-mode lanes and
+  timestamps share ONE delta-of-delta token reader (_read_dod_tokens) and
+  two segmented cumulative sums (_integrate), and integer lanes then
+  divide k by 10**p. A timestamp stream's length names its form
+  (gorilla.py, "Timestamp stream"): a grid lane (n >= 2, fewer than 8
+  bytes) is a token lane with a short head and no tokens — its delta is
+  the top 8*len bits of its first window, it skips the token reader, and
+  _integrate yields first_ts + i*delta.
 - encode: the value mode is chosen per chunk from the values alone
   (_choose_scales: each pass over p = 0..7 revisits only the chunks still
-  undecided), and a timestamp lane with no nonzero dod token and
-  0 < delta < 2^56 takes the grid head (delta, 8*width) and no zero run.
+  undecided), and a timestamp lane whose deltas all equal one
+  0 < delta < 2^56 takes the grid head (delta, 8*width) and no tokens;
+  grid lanes are found from the deltas, before any token is enumerated.
   Delta-of-delta tokens are STATELESS (the control class depends only on
   the value), so classifying them is a single vectorized pass; the XOR
   stream's window-reuse state machine locksteps over nonzero XORs only
@@ -35,15 +45,18 @@ surface. These kernels process EVERY chunk of an Arrow batch at once:
   list-of-bytes forms serve tests and offline tools.
 
 Everything is bit-for-bit identical to the scalar codec (asserted by
-tests/test_gorilla_vec.py, tests/test_gorilla_modes.py and
-tests/test_gorilla_grid.py over adversarial, mode-boundary, grid-boundary
-and random inputs, and by the unchanged gorilla_roundtrip oracle row):
+tests/test_gorilla_vec.py, tests/test_gorilla_modes.py,
+tests/test_gorilla_grid.py and tests/test_gorilla_long.py over
+adversarial, mode-boundary, grid-boundary, long-lane and random inputs,
+and by the unchanged gorilla_roundtrip oracle row):
 all arithmetic is uint64 mod 2^64, which is exactly the
 BitWriter/BitReader semantics, and the integer mode's exactness check and
 k / 10**p division are the scalar codec's expressions.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 
@@ -109,10 +122,11 @@ def _stream_bytes(streams):
 def _prep_windows(streams):
     """Concatenated byte streams (a Binary Arrow array or a list of
     bytes); return (v64, b8, base_bits, lens): v64[k] = the big-endian
-    uint64 of padded-buffer bytes k..k+7, b8[k] = byte k+8 (as uint64),
+    uint64 of padded-buffer bytes k..k+7, b8[k] = byte k+8 (uint8),
     base_bits[c] = absolute bit offset of stream c, lens[c] = its length in
     bytes. A window of bits [pos, pos+64) is
-    (v64[pos>>3] << (pos&7)) | (b8[pos>>3] >> (8-(pos&7)))."""
+    (v64[pos>>3] << (pos&7)) | (b8[pos>>3] >> (8-(pos&7))). Bit
+    8 * len(buf) starts an all-zero window (the padding)."""
     buf, base_bytes = _stream_bytes(streams)
     lens = np.diff(base_bytes, append=len(buf))
     # +24 pad: a token at the very end of the last stream still gathers a
@@ -121,19 +135,27 @@ def _prep_windows(streams):
     # up to ~9 bytes past the buffer. Keep those reads in bounds.
     pad = np.zeros(len(buf) + 24, dtype=np.uint8)
     pad[: len(buf)] = buf
-    a = pad.astype(np.uint64)
-    v64 = a[:-9].copy()
-    for j in range(1, 8):
-        v64 <<= U64(8)
-        v64 |= a[j:j - 9]
-    return v64, a[8:-1], base_bytes * 8, lens
+    n = len(buf) + 15
+    v64 = np.empty(n, dtype=np.uint64)
+    for o in range(8):      # the windows at bytes o, o+8, ... are aligned
+        v64[o::8] = np.frombuffer(pad, dtype=">u8", offset=o,
+                                  count=len(range(o, n, 8)))
+    return v64, pad[8:-1], base_bytes * 8, lens
 
 
 def _window(v64, b8, pos):
     """Bits pos..pos+63 of the buffer, top-aligned, per lane."""
-    k = pos >> U64(3)
+    k = (pos >> U64(3)).view(np.int64)
     r = pos & U64(7)
     return (v64[k] << r) | (b8[k] >> (U64(8) - r))
+
+
+def _head(v64, pos):
+    """The bits from pos to the end of its byte's 64-bit window: the top
+    64 - (pos & 7) >= 57 bits of _window(pos), the rest zero. Enough for
+    a token class and any payload of up to 43 bits after a 14-bit
+    header."""
+    return v64[(pos >> U64(3)).view(np.int64)] << (pos & U64(7))
 
 
 # ---------------------------------------------------------------- decode
@@ -153,55 +175,61 @@ def stream_scales(streams, ns: np.ndarray) -> np.ndarray:
     return _scales_of(v64, base_bits, np.asarray(ns, dtype=np.int64))
 
 
+def _lockstep(n_tok: np.ndarray):
+    """(order, active) of a phase-1 walk: lanes sorted by DESCENDING token
+    count, and per iteration j the number of lanes with a token j — a
+    prefix of that order, so every op slices exactly the active lanes."""
+    order = np.argsort(-n_tok, kind="stable")
+    n_s = n_tok[order]
+    steps = np.arange(int(n_s[0]) if len(n_s) else 0)
+    return order, np.searchsorted(-n_s, -steps, side="left").tolist()
+
+
+def _token_slots(v64, n_out):
+    """Phase 1's output: per output slot, the bit position of the token
+    decoded into it; slots without a token point at the all-zero padding
+    window at bit 8 * len(buf) (_prep_windows builds len(buf) + 15
+    windows), which every phase-2 class table reads as a zero token."""
+    return np.full(n_out, U64(8 * (len(v64) - 15)), dtype=np.uint64)
+
+
+# delta-of-delta token classes by the top 4 bits of a token's window:
+# token length, and the shifts that cut out its sign-extended payload
+# ('0': no prefix, and the top bit 0 shifted down 63 places is the zero
+# dod; '1111': the 64-bit raw escape, read from its own window)
+_DOD_LEN = np.array([1] * 8 + [9] * 4 + [12] * 2 + [16, 68], dtype=np.uint64)
+_DOD_PRE = np.array([0] * 8 + [2] * 4 + [3] * 2 + [4, 4], dtype=np.uint64)
+_DOD_SH = np.array([63] * 8 + [57] * 4 + [55] * 2 + [52, 0], dtype=np.int64)
+
+
 def _read_dod_tokens(v64, b8, pos0, n_tok, slot, out) -> None:
     """The one delta-of-delta token reader (timestamp streams and
     integer-mode value streams): lane c's n_tok[c] tokens start at bit
-    pos0[c], and the dod of its token j goes to out[slot[c] + j] (a zero
-    dod leaves out as it is). Lanes are sorted by DESCENDING token count, so
-    the active set at lockstep iteration j is a PREFIX of the sorted
-    order: every op slices exactly the active lanes, and since every
-    active lane consumes one token per iteration, the per-lane token
-    counter IS the loop index."""
-    order = np.argsort(-n_tok, kind="stable")
-    n_tok_s = n_tok[order]
+    pos0[c], and the dod of its token j is added to out[slot[c] + j]
+    (which must be 0). Two phases. Phase 1 locksteps only the token start
+    positions: a token's length is a 16-entry table lookup on its top 4
+    bits, so one iteration is a handful of numpy calls over the active
+    lanes, and the position lands in the slot the token decodes into.
+    Phase 2 decodes every token's payload at once."""
+    order, active = _lockstep(n_tok)
+    if not active:
+        return
+    P = _token_slots(v64, len(out))
     pos = pos0.astype(np.uint64)[order]
-    slot_s = slot[order]
-    one = U64(1)
-    A = int((n_tok_s > 0).sum())
-    j = 0
-    while A > 0:
-        pa = pos[:A]
-        w = _window(v64, b8, pa)
-        c4 = w >> U64(60)
-        is7 = (c4 >= U64(8)) & (c4 < U64(12))
-        is9 = (c4 >= U64(12)) & (c4 < U64(14))
-        is12 = c4 == U64(14)
-        is64 = c4 == U64(15)
-        d = np.zeros(A, dtype=np.uint64)
-        if is7.any():
-            p = (w << U64(2)) >> U64(57)
-            d = np.where(is7, (p ^ U64(0x40)) - U64(0x40), d)
-        if is9.any():
-            p = (w << U64(3)) >> U64(55)
-            d = np.where(is9, (p ^ U64(0x100)) - U64(0x100), d)
-        if is12.any():
-            p = (w << U64(4)) >> U64(52)
-            d = np.where(is12, (p ^ U64(0x800)) - U64(0x800), d)
-        if is64.any():
-            w2 = _window(v64, b8, pa + U64(4))
-            d = np.where(is64, w2, d)
-        nz = c4 >= U64(8)
-        if nz.any():
-            idx = slot_s[:A] + j
-            out[idx[nz]] = d[nz]
-        adv = np.where(c4 < U64(8), one,
-              np.where(is7, U64(9),
-              np.where(is9, U64(12),
-              np.where(is12, U64(16), U64(68)))))
-        pos[:A] = pa + adv
-        j += 1
-        while A > 0 and n_tok_s[A - 1] <= j:
-            A -= 1
+    q = slot[order].astype(np.int64)
+    for a in active:
+        pa = pos[:a]
+        qa = q[:a]
+        P[qa] = pa
+        qa += 1
+        pa += _DOD_LEN[(_head(v64, pa) >> U64(60)).view(np.int64)]
+    w = _head(v64, P)
+    c4 = (w >> U64(60)).view(np.int64)
+    d = (w << _DOD_PRE[c4]).view(np.int64) >> _DOD_SH[c4]
+    esc = np.flatnonzero(c4 == 15)
+    if len(esc):
+        d[esc] = _window(v64, b8, P[esc] + U64(4)).view(np.int64)
+    out += d.view(np.uint64)
 
 
 def _integrate(firsts, f, ns) -> np.ndarray:
@@ -232,49 +260,61 @@ def _decode_scaled(v64, b8, base_bits, firsts, ns, p) -> np.ndarray:
     return out
 
 
+@functools.lru_cache(maxsize=1)
+def _xor_tables():
+    """Phase-1 tables of the XOR token walk, indexed by (L << 14) | the
+    top 14 bits of a token's window, where L is the lane's window length:
+    the token's length, and the lane's next L << 14. '0' is 1 bit, '10'
+    is 2 + L, and '11' is 14 + the new length its header names."""
+    L = np.arange(65, dtype=np.uint32)[:, None]
+    w = np.arange(1 << 14, dtype=np.uint32)
+    top2 = w >> 12
+    new_l = (w & 63) + 1
+    adv = np.where(top2 < 2, 1, np.where(top2 == 2, 2, 14 + new_l))
+    adv = adv.astype(np.uint8) + (top2 == 2).astype(np.uint8) * L.astype(
+        np.uint8)
+    nxt = np.where(top2 == 3, new_l, L) << 14
+    for t in (adv, nxt):
+        t.flags.writeable = False     # shared by every caller
+    return adv.ravel(), nxt.ravel()
+
+
 def _decode_xor(v64, b8, base_bits, firsts, ns) -> np.ndarray:
-    """XOR-mode lanes -> flat uint64 value bits. Lanes sorted by
-    DESCENDING token count, as in _read_dod_tokens."""
-    C = len(ns)
-    base_out = np.concatenate(([0], np.cumsum(ns)))[:-1]
-    xs = np.zeros(int(ns.sum()), dtype=np.uint64)
-    n_tok_i = np.maximum(ns - 1, 0)
-    order = np.argsort(-n_tok_i, kind="stable")
-    n_tok_s = n_tok_i[order]
+    """XOR-mode lanes -> flat uint64 value bits. Phase 1 locksteps the
+    token starts as _read_dod_tokens does, with the window length as the
+    only per-lane state (one lookup in _xor_tables per iteration). Phase
+    2 decodes every token at once: a token's window is the one its lane's
+    latest '11' token opened, found by a forward fill, as _xor_pairs does
+    on the encode side."""
+    base_out = np.cumsum(ns) - ns
+    N = int(ns.sum())
+    P = _token_slots(v64, N)
+    adv_t, nxt_t = _xor_tables()
+    order, active = _lockstep(np.maximum(ns - 1, 0))
     pos = base_bits.astype(np.uint64)[order]
-    base_out_s = base_out[order]
-    L = np.ones(C, dtype=np.uint64)      # window length; lanes never read it
-    sh = np.zeros(C, dtype=np.uint64)    # before their first '11' token
-    one = U64(1)
-    A = int((n_tok_s > 0).sum())
-    j = 0
-    while A > 0:
-        pa = pos[:A]
-        w = _window(v64, b8, pa)
-        c1 = (w >> U64(63)).astype(bool)
-        c2 = ((w >> U64(62)) & one).astype(bool)
-        is10 = c1 & ~c2
-        is11 = c1 & c2
-        if is11.any():
-            hdr = (w << U64(2)) >> U64(52)
-            newL = (hdr & U64(63)) + one
-            newsh = U64(64) - (hdr >> U64(6)) - newL
-            L[:A] = np.where(is11, newL, L[:A])
-            sh[:A] = np.where(is11, newsh, sh[:A])
-        if c1.any():
-            o = pa + np.where(is11, U64(14), U64(2))
-            w2 = _window(v64, b8, o)
-            x = (w2 >> (U64(64) - L[:A])) << sh[:A]
-            idx = base_out_s[:A] + 1 + j
-            xs[idx[c1]] = x[c1]
-        adv = np.where(~c1, one,
-                       np.where(is10, U64(2) + L[:A], U64(14) + L[:A]))
-        pos[:A] = pa + adv
-        j += 1
-        while A > 0 and n_tok_s[A - 1] <= j:
-            A -= 1
+    q = base_out[order] + 1
+    ls = np.zeros(len(ns), dtype=np.uint64)
+    for a in active:
+        pa = pos[:a]
+        qa = q[:a]
+        P[qa] = pa
+        qa += 1
+        i = (ls[:a] + (_head(v64, pa) >> U64(50))).view(np.int64)
+        pa += adv_t[i]
+        ls[:a] = nxt_t[i]
+    w = _head(v64, P)
+    is11 = (w >> U64(62)) == U64(3)
+    # every lane's first nonzero XOR opens a window, so the latest '11'
+    # at or before a '10' token is in its own lane
+    opener = np.where(is11, np.arange(N), 0)
+    np.maximum.accumulate(opener, out=opener)
+    h = w[opener]
+    lead = (h << U64(2)) >> U64(58)
+    L = ((h << U64(8)) >> U64(58)) + U64(1)
+    x = _window(v64, b8, P + np.where(is11, U64(14), U64(2)))
+    x = ((x >> (U64(64) - L)) << (U64(64) - lead - L)) * (w >> U64(63))
     # segmented XOR prefix scan: xs[base]=0, firsts folded via correction
-    acc = np.bitwise_xor.accumulate(xs)
+    acc = np.bitwise_xor.accumulate(x)
     pre = np.where(base_out > 0, acc[np.maximum(base_out - 1, 0)], U64(0))
     return acc ^ np.repeat(firsts ^ pre, ns)
 
@@ -543,7 +583,9 @@ def _dod_pairs(d: np.ndarray):
 
 def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     """Packed (buf, offsets) ts_d2d streams. Stateless classification —
-    no iteration at all."""
+    no iteration at all. Grid lanes are found from the deltas alone (a
+    running count of nonzero delta-of-deltas, read at lane bounds), so
+    tokens are enumerated only for the lanes that keep token form."""
     ts_flat = np.asarray(ts_flat, dtype=np.int64)
     starts = np.asarray(starts, dtype=np.int64)
     ends = np.append(starts[1:], len(ts_flat))
@@ -552,21 +594,25 @@ def _encode_ts(ts_flat: np.ndarray, starts: np.ndarray):
     if C == 0:
         return np.zeros(0, np.uint8), np.zeros(1, np.int64)
     d_flat = np.diff(ts_flat) if len(ts_flat) > 1 else np.zeros(0, np.int64)
-    dod_flat = np.diff(d_flat) if len(d_flat) > 1 else np.zeros(0, np.int64)
-    tok_base, _lr, fp = _lane_major_tokens(starts, ns, 2)
-    d = dod_flat[fp] if len(fp) else np.zeros(0, np.int64)
-    nz, gap, tail, lane_of_nz = _zero_gap_pairs(d != 0, tok_base, C)
-    vA, bA, vB, bB = _dod_pairs(d[nz])
+    dod_flat = np.diff(d_flat)
     has_d = np.flatnonzero(ns >= 2)
-    d0 = d_flat[starts[has_d]]
-    head_v = d0.astype(np.uint64)
-    # grid lanes: no nonzero dod token and 0 < delta < GRID_LIMIT. The
-    # head is the delta in its fewest bytes, and no zero run follows.
-    grid = ((np.bincount(lane_of_nz, minlength=C)[has_d] == 0)
+    s_d = starts[has_d]
+    d0 = d_flat[s_d]
+    # grid lanes: no nonzero dod and 0 < delta < GRID_LIMIT. The head is
+    # the delta in its fewest bytes, and no token or zero run follows.
+    nz_before = np.concatenate(([0], np.cumsum(dod_flat != 0)))
+    grid = ((nz_before[s_d + ns[has_d] - 2] == nz_before[s_d])
             & (d0 > 0) & (d0 < GRID_LIMIT))
+    tok_l = has_d[~grid]
+    tok_base, _lr, fp = _lane_major_tokens(starts[tok_l], ns[tok_l], 2)
+    d = dod_flat[fp]
+    nz, gap, tail_t, lane_t = _zero_gap_pairs(d != 0, tok_base, len(tok_l))
+    vA, bA, vB, bB = _dod_pairs(d[nz])
+    tail = np.zeros(C, dtype=np.int64)
+    tail[tok_l] = tail_t
+    head_v = d0.astype(np.uint64)
     head_b = np.where(grid, 8 * ((_bitlen64(head_v) + 7) >> 3), 64)
-    tail[has_d[grid]] = 0
-    v, b, byte_counts = _assemble(vA, bA, vB, bB, gap, lane_of_nz,
+    v, b, byte_counts = _assemble(vA, bA, vB, bB, gap, tok_l[lane_t],
                                   head_v, head_b, has_d, tail, C)
     return _pack_pairs(v, b, byte_counts)
 

@@ -48,6 +48,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from spinterps_spark import TIER_SECONDS
+from spinterps_spark.compress.gorilla import FUSED_CHUNK
 from spinterps_spark.functions.vg_models import (
     check_full_nuggetness,
     parse_vg_str,
@@ -784,7 +785,7 @@ def gapfill_virtual_chunks(
     coords: DataFrame | None = None,
     tier: str = "1h",
     chunk_buckets: int = 3840,
-    gorilla_chunk: int = 120,
+    gorilla_chunk: int = FUSED_CHUNK,
     drift: DataFrame | None = None,
     drift_cols: list[str] | None = None,
     grid_min_ts: int | None = None,

@@ -20,7 +20,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, functions as F
 
 from spinterps_spark import TIERS
-from spinterps_spark.compress.gorilla import DEFAULT_CHUNK, encode_tier_chunks
+from spinterps_spark.compress.gorilla import (
+    DEFAULT_CHUNK, FUSED_CHUNK, encode_tier_chunks)
 from spinterps_spark.operators.gapfill import FILL_METHODS, gapfill_virtual_chunks
 from spinterps_spark.operators.rollup import base_rollup, rollup_tier
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
@@ -123,7 +124,7 @@ def fused_fill_builder(fill_metric, fill_method, coords, vg_dim, drift,
     # would under-size the pruning span and drop rows from routed reads
     # (code-review r7 #3)
     chunk_size_max = (DEFAULT_CHUNK if fill_method is None
-                      else int(fill_knobs.get("gorilla_chunk", DEFAULT_CHUNK)))
+                      else int(fill_knobs.get("gorilla_chunk", FUSED_CHUNK)))
     return project, chunker, chunk_size_max
 
 

@@ -2,7 +2,8 @@ import numpy as np
 import pandas as pd
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks, encode_tier_chunks
+from spinterps_spark.compress.gorilla import (
+    FUSED_CHUNK, decode_tier_chunks, encode_tier_chunks)
 from spinterps_spark.operators import gapfill as G
 from spinterps_spark.operators import rollup as R
 from spinterps_spark.operators import spine as S
@@ -22,7 +23,8 @@ def test_fused_equals_separate(spark):
     )
     # separate: fill -> encode (two shuffles)
     filled = G.gapfill(ser, "v", method="IDW", tier="1h", chunk_buckets=3840)
-    sep = encode_tier_chunks(filled.where("value_filled IS NOT NULL"), "1h")
+    sep = encode_tier_chunks(filled.where("value_filled IS NOT NULL"), "1h",
+                             chunk_size=FUSED_CHUNK)
     # fused: one grouped pass, no materialized spine
     fus = G.gapfill_virtual_chunks(valid, "v", method="IDW", tier="1h",
                                    chunk_buckets=3840)

@@ -25,7 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.compress.gorilla import FUSED_CHUNK, decode_tier_chunks
 from spinterps_spark.plans.compaction import run_compaction_pass
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 from spinterps_spark.plans.refresh import run_refresh_pass
@@ -204,7 +204,7 @@ def test_random_interleavings_with_retention_horizons(spark, tmp_path):
     run_retention_pipeline(spark, rest, d, tiers=(TIER,), n_waves=2,
                            fill_method="IDW", run_id="boot")
 
-    span = 120 * 60  # DEFAULT_CHUNK x 1m tier seconds
+    span = FUSED_CHUNK * 60  # fused chunk length x 1m tier seconds
     # monotone horizon ladder inside the data range, bucket-aligned
     ladder = [((bounds.mn + (bounds.mx - bounds.mn) * q // 100) // 60) * 60
               for q in (25, 40, 55)]

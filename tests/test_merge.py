@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.compress.gorilla import FUSED_CHUNK, decode_tier_chunks
 from spinterps_spark.plans.generations import (
     current_rollup, generation_plan, tier_horizons)
 from spinterps_spark.plans.merge import run_merge_pass
@@ -385,7 +385,7 @@ def test_crash_resume_after_concurrent_delta_conflicts(spark, split,
     assert r["commit"] not in ("skipped", None)
     got = _pts(spark, d, "1m")
     assert int((got["bucket_ts"].astype("int64") // 10**9).min()) >= hz - \
-        120 * 60  # straddling-chunk slack: one chunk window at 1m
+        FUSED_CHUNK * 60  # straddling-chunk slack: one chunk window at 1m
 
 
 def test_merge_ok_kriging_equals_full_rebuild(spark, tmp_path):

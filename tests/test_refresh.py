@@ -21,7 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.compress.gorilla import FUSED_CHUNK, decode_tier_chunks
 from spinterps_spark.plans.compaction import run_compaction_pass
 from spinterps_spark.plans.generations import generation_plan
 from spinterps_spark.plans.pipeline import run_retention_pipeline
@@ -93,6 +93,22 @@ def test_refresh_equals_full_recompute(spark, stores, tier):
     got = _points(spark, stores["dirs"]["a"], tier)
     want = _points(spark, stores["dirs"]["m"], tier)
     pd.testing.assert_frame_equal(got, want, check_exact=True)
+
+
+def test_default_refresh_stamps_the_chunk_size_it_wrote(spark, stores):
+    """The default-knob refresh encodes through the fused pass, so its
+    commit must stamp the fused chunk length: a routed read takes its
+    pruning span from the stamp, and a smaller one would prune chunks the
+    read needs."""
+    log = tier_tables(spark, os.path.join(stores["dirs"]["a"], "chunks")
+                      ).snapshots()
+    for tier in TIERS:
+        snap = next(s for s in log
+                    if s.get("run_id") == "r1" and s.get("tier") == tier)
+        wrote = spark.read.parquet(
+            os.path.join(snap["data_location"], "wave=*")
+        ).agg(F.max("chunk_size")).first()[0]
+        assert int(snap["chunk_size_max"]) == wrote == FUSED_CHUNK
 
 
 def test_base_files_untouched_and_delta_bounded(spark, stores):

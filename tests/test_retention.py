@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.compress.gorilla import FUSED_CHUNK, decode_tier_chunks
 from spinterps_spark.plans import checkpoint as C
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 from spinterps_spark.plans.retention import read_tier_chunks, run_retention_pass
@@ -62,7 +62,7 @@ def test_retention_drops_only_whole_old_chunks(spark, piped):
     assert dropped <= (ts_b < horizon).sum()
     # straddle tolerance: surviving sub-horizon points sit within one chunk
     # window of the horizon (chunks are never split/re-encoded)
-    span = 120 * 60  # encode-time chunk_size (pipeline default) * 1m tier
+    span = FUSED_CHUNK * 60  # encode-time chunk_size (pipeline default) * 1m
     old_kept = ts_a[ts_a < horizon]
     if len(old_kept):
         assert int(old_kept.min()) >= (horizon // span) * span - span

@@ -8,7 +8,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from spinterps_spark import datagen
-from spinterps_spark.compress.gorilla import decode_tier_chunks
+from spinterps_spark.compress.gorilla import FUSED_CHUNK, decode_tier_chunks
+from spinterps_spark.plans.generations import (
+    current_chunks, tier_chunk_size_bound)
 from spinterps_spark.plans.pipeline import run_retention_pipeline
 from spinterps_spark.plans.retention import read_tier_chunks, run_retention_pass
 from spinterps_spark.plans.router import query_range, tier_horizons
@@ -87,6 +89,34 @@ def test_conv_ids_pushed_into_every_leg(spark, store):
                       conv_ids=[conv]).toPandas()
     assert set(out["conv_id"]) == {conv}
     assert set(out["tier"]) == {"1m", "1h"}
+
+
+def test_pruning_bound_covers_the_default_fused_chunks(spark, store):
+    """On a default-knob store the metadata bound on chunk_size is the
+    fused chunk length the files hold, and a routed read whose window
+    starts deep inside a chunk returns exactly the decoded tier trimmed to
+    that window (too small a bound would prune the chunk it starts in)."""
+    tdir, horizon, full_1m, _ = store
+    cur = current_chunks(spark, tdir, "1m")
+    top = cur.agg(F.max("chunk_size")).first()[0]
+    assert tier_chunk_size_bound(spark, tdir, "1m") == top == FUSED_CHUNK
+    span = FUSED_CHUNK * 60
+    q3 = int(_epochs(full_1m).quantile(0.75))
+    t_min = (max(q3, horizon) // span + 1) * span + 5 * 3600 + 17 * 60 + 30
+    t_max = t_min + 4 * 3600
+    got = query_range(spark, tdir, t_min, t_max, resolution="1m").toPandas()
+    pts = decode_tier_chunks(cur).toPandas()
+    ep = _epochs(pts)
+    want = pts[(ep >= t_min) & (ep <= t_max)]
+    assert len(want) > 0 and set(got["tier"]) == {"1m"}
+    key = ["conv_id", "bucket_ts"]
+    g = got.sort_values(key).reset_index(drop=True)
+    w = want.sort_values(key).reset_index(drop=True)
+    assert len(g) == len(w)
+    assert (g["conv_id"].values == w["conv_id"].values).all()
+    assert (g["bucket_ts"].values == w["bucket_ts"].values).all()
+    assert (g["value"].values.view("int64")
+            == w["value"].values.view("int64")).all()
 
 
 def test_band_older_than_every_horizon_served_by_nobody(spark, store):

@@ -127,10 +127,10 @@ def test_virtual_edk_chunk_size_independent(spark, parts):
     dcols = ["d1", "d2"]
     a = _decode_sorted(G.gapfill_virtual_chunks(
         ser_valid, "v", method="EDK", tier="1h", coords=coords, vg_dim=vg,
-        drift=drift, drift_cols=dcols, chunk_buckets=240))
+        drift=drift, drift_cols=dcols, chunk_buckets=240, gorilla_chunk=120))
     b = _decode_sorted(G.gapfill_virtual_chunks(
         ser_valid, "v", method="EDK", tier="1h", coords=coords, vg_dim=vg,
-        drift=drift, drift_cols=dcols, chunk_buckets=7680))
+        drift=drift, drift_cols=dcols, chunk_buckets=7680, gorilla_chunk=120))
     assert len(a) == len(b)
     av, bv = a["value"].to_numpy(), b["value"].to_numpy()
     assert ((av == bv) | (np.isnan(av) & np.isnan(bv))).all()
@@ -142,10 +142,12 @@ def test_virtual_small_chunks_equal_large(spark, parts):
     span multiple wholly-empty chunks."""
     ser_valid, _ = parts
     a = _decode_sorted(
-        G.gapfill_virtual_chunks(ser_valid, "v", tier="1h", chunk_buckets=240)
+        G.gapfill_virtual_chunks(ser_valid, "v", tier="1h", chunk_buckets=240,
+                                 gorilla_chunk=120)
     )
     b = _decode_sorted(
-        G.gapfill_virtual_chunks(ser_valid, "v", tier="1h", chunk_buckets=7680)
+        G.gapfill_virtual_chunks(ser_valid, "v", tier="1h", chunk_buckets=7680,
+                                 gorilla_chunk=120)
     )
     assert len(a) == len(b)
     av, bv = a["value"].to_numpy(), b["value"].to_numpy()

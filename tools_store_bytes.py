@@ -15,9 +15,12 @@ markdown table row:
 - how many multi-point chunks store their timestamps in grid form (a
   ts_d2d stream shorter than 8 bytes, compress/gorilla.py, "Timestamp
   stream");
-- single-core seconds of decode_ts_many, decode_vals_many, encode_ts_many
-  and encode_vals_many over the tier, and whether the re-encode gave the
-  stored streams back byte for byte.
+- single-core seconds of decode_ts_many and decode_vals_many, called once
+  per chunk file and summed: a scan hands the decode kernel one Arrow batch
+  per chunk file, so this is the decode cost a scan pays;
+- single-core seconds of encode_ts_many and encode_vals_many over the
+  whole tier in one call, and whether the re-encode gave the stored
+  streams back byte for byte.
 
 The last line is the store's bytes per point over all tiers (streams plus
 headers), the figure perfbench reports as store_bytes_per_point.
@@ -47,28 +50,31 @@ COLS = ["conv_id", "n", "first_ts", "first_val", "ts_d2d", "vals_xor"]
 HEADER_B = 24
 
 
-def _read(wave_glob: str) -> pa.Table | None:
+def _read(wave_glob: str) -> list[pa.Table]:
     files = sorted(glob.glob(os.path.join(_strip_scheme(wave_glob),
                                           "*.parquet")))
-    if not files:
-        return None
-    return pa.concat_tables([pq.read_table(f, columns=COLS) for f in files])
+    return [pq.read_table(f, columns=COLS) for f in files]
 
 
-def current_tier(store: str, tier: str) -> pa.Table | None:
-    """The tier's current chunk rows: base minus the conversations a later
-    refresh or merge delta rewrote, plus each delta latest-wins per conv_id
-    (evolve deltas are additive and supersede nothing)."""
+def _drop(tables: list[pa.Table], convs) -> list[pa.Table]:
+    if convs is None:
+        return tables
+    return [t.filter(pc.invert(pc.is_in(t["conv_id"], convs)))
+            for t in tables]
+
+
+def current_tier(store: str, tier: str) -> list[pa.Table]:
+    """The tier's current chunk rows, one table per chunk file: base minus
+    the conversations a later refresh or merge delta rewrote, plus each
+    delta latest-wins per conv_id (evolve deltas are additive and supersede
+    nothing). Files left empty are dropped."""
     fmt = ParquetTierTables(None, os.path.join(store, "chunks"))
     base, deltas = generation_plan(
         fmt, tier, os.path.join(store, f"chunks/tier={tier}", "wave=*"))
     legs, later = [], None
     for s in reversed(deltas):
-        leg = _read(os.path.join(s["data_location"], "wave=*"))
-        if leg is not None and later is not None:
-            leg = leg.filter(pc.invert(pc.is_in(leg["conv_id"], later)))
-        if leg is not None:
-            legs.append(leg)
+        legs += _drop(_read(os.path.join(s["data_location"], "wave=*")),
+                      later)
         if commit_kind(s.get("stage")) == "evolve":
             continue
         convs = pq.read_table(_strip_scheme(s["convs_location"]),
@@ -76,17 +82,30 @@ def current_tier(store: str, tier: str) -> pa.Table | None:
         convs = convs.combine_chunks()
         later = convs if later is None else pa.concat_arrays(
             [later, convs])
-    base_t = _read(base)
-    if base_t is not None:
-        legs.append(base_t if later is None else base_t.filter(
-            pc.invert(pc.is_in(base_t["conv_id"], later))))
-    return pa.concat_tables(legs).combine_chunks() if legs else None
+    legs += _drop(_read(base), later)
+    return [t.combine_chunks() for t in legs if t.num_rows]
 
 
-def tier_row(tbl: pa.Table) -> tuple[dict, int, int]:
+def _decode_files(files: list[pa.Table]):
+    """(timestamps, values, ts seconds, values seconds): one decode call
+    per chunk file, as a scan makes them; the seconds are summed."""
+    ts, vals, t_ts, t_vals = [], [], 0.0, 0.0
+    for f in files:
+        ns = f["n"].to_numpy().astype(np.int64)
+        t0 = time.perf_counter()
+        ts.append(decode_ts_many(f["first_ts"].to_numpy(),
+                                 f["ts_d2d"].chunk(0), ns))
+        t1 = time.perf_counter()
+        vals.append(decode_vals_many(f["first_val"].to_numpy(),
+                                     f["vals_xor"].chunk(0), ns))
+        t_ts += t1 - t0
+        t_vals += time.perf_counter() - t1
+    return np.concatenate(ts), np.concatenate(vals), t_ts, t_vals
+
+
+def tier_row(files: list[pa.Table]) -> tuple[dict, int, int]:
+    tbl = pa.concat_tables(files).combine_chunks()
     ns = tbl["n"].to_numpy().astype(np.int64)
-    first_ts = tbl["first_ts"].to_numpy()
-    first_val = tbl["first_val"].to_numpy()
     ts_col = tbl["ts_d2d"].chunk(0)
     vs_col = tbl["vals_xor"].chunk(0)
     pts, chunks = int(ns.sum()), len(ns)
@@ -95,10 +114,7 @@ def tier_row(tbl: pa.Table) -> tuple[dict, int, int]:
     tbytes = int(tlens.sum())
     scales = stream_scales(vs_col, ns)
     hist = np.bincount(scales[scales >= 0], minlength=8)
-    t0 = time.perf_counter()
-    ts = decode_ts_many(first_ts, ts_col, ns)
-    t1 = time.perf_counter()
-    vals = decode_vals_many(first_val, vs_col, ns)
+    ts, vals, dec_ts, dec_vals = _decode_files(files)
     t2 = time.perf_counter()
     starts = np.concatenate(([0], np.cumsum(ns)[:-1]))
     ets = encode_ts_many(ts, starts)
@@ -114,7 +130,7 @@ def tier_row(tbl: pa.Table) -> tuple[dict, int, int]:
         "p histogram": " ".join(f"{p}:{c}" for p, c in enumerate(hist)
                                 if c),
         "grid chunks": int(((ns >= 2) & (tlens < 8)).sum()),
-        "dec ts s": t1 - t0, "dec vals s": t2 - t1,
+        "dec ts s": dec_ts, "dec vals s": dec_vals,
         "enc ts s": t3 - t2, "enc vals s": t4 - t3,
         "re-encode": "same" if same else "DIFFERS",
     }
@@ -130,10 +146,10 @@ def _fmt(x) -> str:
 def main(store: str) -> int:
     rows, pts, nbytes = [], 0, 0
     for tier in TIERS:
-        tbl = current_tier(store, tier)
-        if tbl is None or tbl.num_rows == 0:
+        files = current_tier(store, tier)
+        if not files:
             continue
-        row, p, b = tier_row(tbl)
+        row, p, b = tier_row(files)
         rows.append((tier, row))
         pts += p
         nbytes += b
