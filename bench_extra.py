@@ -59,7 +59,7 @@ def main():
     transcripts = spark.read.parquet(gen_dir)
     out["n_turns"] = transcripts.count()
 
-    # ---- stage A: the salted 2-phase rollup alone
+    # ---- stage A: the base rollup alone
     out["s1_rollup"] = _time(
         spark, "bx: rollup 1m",
         lambda: _noop(base_rollup(transcripts, "1m", n_salt=16)), runs)
@@ -123,14 +123,6 @@ def main():
 
     out["s4_fused_parquet"] = _time(spark, "bx: fused + write", fused_write,
                                     runs)
-
-    # ---- single-phase (unsalted) rollup comparison (guide 2.4: one
-    # exchange instead of two; map-side partial agg already bounds hot keys)
-    from spinterps_spark.operators.rollup import single_phase_rollup
-
-    out["s5_rollup_single_phase"] = _time(
-        spark, "bx: rollup single-phase",
-        lambda: _noop(single_phase_rollup(transcripts, "1m")), runs)
 
     print(json.dumps(out))
     shutil.rmtree(gen_dir, ignore_errors=True)

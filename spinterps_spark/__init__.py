@@ -4,7 +4,7 @@ downsample + retention engine over conversation/agent transcript tables.
 Re-expresses the capabilities of the reference geostatistical pipeline
 (faizan90/spinterps, surveyed in SURVEY.md) Spark-first:
 
-- salted two-phase bucket aggregation into 1m/1h/1d retention tiers
+- exact-compose bucket aggregation into 1m/1h/1d retention tiers
   (reference temporal resample w/ validity: utils/rsmp_nc_in_time.py:300-350)
 - gap-fill of empty buckets by IDW / Ordinary-Kriging / NNB weighted
   temporal interpolation (reference kernels: cyth/interpmthds.pyx:251-362,

@@ -327,8 +327,9 @@ def cmd_refresh(args) -> int:
     turns into an existing tier store, recomputing only the conversations
     the delta touched and publishing latest-wins deltas (plans/refresh.py —
     the TimescaleDB refresh_continuous_aggregate analog). Deltas must be
-    turns not previously ingested; redelivery dedup is the streaming
-    path's job."""
+    turns not previously ingested: no pass dedups. Re-running a delta
+    under its --resume run_id is a no-op, which is how stream_refresh
+    absorbs a redelivered micro-batch."""
     from spinterps_spark.plans.refresh import run_refresh_pass
 
     spark = _spark("spinterps_spark.refresh")

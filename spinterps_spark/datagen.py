@@ -136,7 +136,8 @@ def transcripts_spark(spark, seed: int = 42, n_turns_target: int = 10_000, parts
     Partitioning note for 100 TB scale: conversations are independent, so the
     generator parallelizes embarrassingly; the mega-conversation is still one
     generator task, which is fine (generation is O(n) streaming), and the
-    *consumers* handle its skew via salting (operators/rollup.py).
+    *consumers* handle its skew via map-side partial aggregation
+    (operators/rollup.py).
     """
     sizes = plan_sizes(seed, n_turns_target)
     n_convs = len(sizes)

@@ -90,11 +90,6 @@ def parse_vg_str(vg_str: str) -> list[tuple[float, str, float]]:
     return out
 
 
-def format_vg_str(parts: list[tuple[float, str, float]]) -> str:
-    """Inverse of parse (reference format: variograms/vgs.py:841-845)."""
-    return " + ".join(f"{sill} {model}({rng})" for sill, model, rng in parts)
-
-
 def vg_vals(vg_str: str, h: np.ndarray) -> np.ndarray:
     """Evaluate a (possibly nested) model string at distances h (float64)."""
     h = np.asarray(h, dtype=np.float64)
@@ -102,15 +97,6 @@ def vg_vals(vg_str: str, h: np.ndarray) -> np.ndarray:
     for sill, model, rng in parse_vg_str(vg_str):
         out += VG_FTNS[model](h, rng, sill)
     return out
-
-
-def vg_vals_floored(vg_str: str, h: np.ndarray, min_vg_val: float) -> np.ndarray:
-    """vg_vals with the reference's small-gamma floor: values <= min_vg_val
-    are set to 0 (cyth/interpmthds.pyx:203-216; knob interp/data.py:725-729).
-    """
-    v = vg_vals(vg_str, h)
-    v[v <= min_vg_val] = 0.0
-    return v
 
 
 def check_full_nuggetness(vg_str: str, min_vg_val: float) -> bool:

@@ -1,7 +1,5 @@
-"""Neighbor-selection operators (SURVEY.md §2.6 T1-T3).
+"""Neighbor-selection operators (SURVEY.md §2.6 T2-T3).
 
-- knn_neighbors (T1 'nrst'): k nearest refs per destination, the
-  row_number-over-distance pattern (reference interp/grps.py:147-166).
 - pie_neighbors (T2 'pie'): classify refs into n_pies angular sectors around
   each destination, rank by distance within sector, then select n_nebs by
   (sector-rank, distance) — round-robin across sectors so neighbors surround
@@ -43,37 +41,6 @@ def _crossjoin_guard(refs: DataFrame, fn_name: str) -> None:
             f"the refs table, which has more than {CROSSJOIN_REFS_MAX:,} "
             "rows — pass join_on (a cluster key) or pre-bucket the refs"
         )
-
-
-def knn_neighbors(
-    dst: DataFrame, refs: DataFrame, k: int,
-    join_on: str | None = "cluster_id",
-    id_cols: tuple[str, str] = ("conv_id", "conv_id"),
-) -> DataFrame:
-    """(dst_id, neighbor_id, dist, rn<=k), deterministic rank tiebreak."""
-    d = dst.select(
-        F.col(id_cols[0]).alias("dst_id"), F.col("x").alias("dx"),
-        F.col("y").alias("dy"),
-        *( [F.col(join_on).alias("_j")] if join_on else [] ),
-    )
-    r = refs.select(
-        F.col(id_cols[1]).alias("neighbor_id"), F.col("x").alias("rx"),
-        F.col("y").alias("ry"),
-        *( [F.col(join_on).alias("_jr")] if join_on else [] ),
-    )
-    if join_on:
-        j = d.join(r, F.col("_j") == F.col("_jr"))
-    else:
-        _crossjoin_guard(refs, "knn_neighbors")
-        j = d.crossJoin(r)
-    j = j.where(F.col("dst_id") != F.col("neighbor_id"))
-    j = j.withColumn("dist", F.round(_dist(F.col("dx"), F.col("dy"), F.col("rx"), F.col("ry")), 4))
-    w = W.partitionBy("dst_id").orderBy("dist", "neighbor_id")
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("dst_id", "neighbor_id", "dist", "rn")
-    )
 
 
 def horizon_pairs(

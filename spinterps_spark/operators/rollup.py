@@ -5,16 +5,18 @@ Reference semantics grafted (SURVEY.md A2):
   number of contributing units >= min_cnt, otherwise its metrics are NULL
   (reference `resample(res).sum()` * 0/1 validity mask,
   utils/rsmp_nc_in_time.py:300-350).
-- every metric is an exact-compose sum/count (no ratios, no variance), so the
-  salted two-phase aggregation is bit-identical to a single-phase groupBy
-  (SURVEY.md §4 O6 — the reference's strided-index reshuffle for worker load
-  balance, variograms/fitvgs.py:60-82, re-expressed as key salting).
+- every metric is an exact-compose sum/count (no ratios, no variance), so
+  partial aggregates merge exactly: Spark's map-side partial aggregation,
+  the refresh merge (plans/refresh.py) and the tier cascade all re-sum to
+  the from-scratch result (SURVEY.md §4 O6 — the reference's strided-index
+  reshuffle for worker load balance, variograms/fitvgs.py:60-82, is the
+  map-side partial aggregate here).
 
 Scale notes (100 TB):
-- phase 1 aggregates on (conv_id, bucket_ts, salt): the map-side partial
-  aggregation plus the salt cap the per-reducer row count even for a
-  mega-conversation whose every turn lands in one (conv, bucket) pair.
-- phase 2 merges the <= n_salt partials per (conv_id, bucket_ts): tiny.
+- the base tier is ONE groupBy on (conv_id, bucket_ts): the partial
+  aggregate emits at most one row per key per map task, so a
+  mega-conversation whose every turn lands in one (conv, bucket) pair
+  reaches its reducer as at most n_map_tasks partial rows.
 - tier N+1 rolls up from tier N output (never from raw), so the 1d pass reads
   ~1/60th of what the 1h pass read — the cascade is the cheap path at scale.
 """
@@ -52,17 +54,13 @@ def base_rollup(
     Output: (conv_id, bucket_ts, turn_cnt, tok_len_sum, tool_call_cnt,
     role_user_cnt, role_assistant_cnt, role_tool_cnt, valid)
 
-    r8 (guide 2.3/2.4): the r1-r7 explicit (conv, bucket, salt) two-phase
-    aggregation duplicated what Spark's HashAggregate already does — the
-    partial-mode aggregate runs map-side and emits at most ONE combined
-    row per key per map task, so a mega-conversation's hot bucket reaches
-    its reducer as <= n_map_tasks partial rows regardless of scale. The
-    explicit salt bought the same bound at the price of a SECOND full
-    exchange (shuffling up to n_salt x the final row count). One groupBy
-    = one exchange, bit-identical output (every metric is an exact-
-    compose sum/count; tests/test_rollup.py keeps the salted path as the
-    equality witness). n_salt is retained in the signature for caller
-    compatibility; it no longer shapes the plan.
+    Spark's HashAggregate runs the partial aggregate map-side and emits
+    at most ONE combined row per key per map task, so a mega-conversation's
+    hot bucket reaches its reducer as <= n_map_tasks partial rows
+    regardless of scale. An explicit (conv, bucket, salt) two-phase
+    aggregation would buy the same bound at the price of a SECOND full
+    exchange. n_salt is retained in the signature for caller
+    compatibility; it does not shape the plan.
     """
     del n_salt  # superseded by map-side partial aggregation (see above)
     if min_cnt is None:
@@ -79,67 +77,6 @@ def base_rollup(
         (F.col("role") == "tool").cast("long").alias("_is_tool"),
     )
     out = enriched.groupBy("conv_id", "bucket_ts").agg(
-        F.count(F.lit(1)).alias("turn_cnt"),
-        F.sum("_tok_len").alias("tok_len_sum"),
-        F.sum("_is_tool_call").alias("tool_call_cnt"),
-        F.sum("_is_user").alias("role_user_cnt"),
-        F.sum("_is_assistant").alias("role_assistant_cnt"),
-        F.sum("_is_tool").alias("role_tool_cnt"),
-    )
-    return out.withColumn("valid", F.col("turn_cnt") >= F.lit(min_cnt))
-
-
-def salted_two_phase_rollup(
-    transcripts: DataFrame,
-    tier: str = "1m",
-    n_salt: int = 16,
-    min_cnt: int | None = None,
-    shift_seconds: int = 0,
-) -> DataFrame:
-    """The r1-r7 explicit salted two-phase aggregation, kept as the
-    equality witness for base_rollup (SURVEY.md §5.2 invariant: salted
-    two-phase agg equals unsalted — all metrics compose exactly)."""
-    if min_cnt is None:
-        min_cnt = DEFAULT_MIN_CNT[tier]
-
-    t = transcripts
-    enriched = t.select(
-        "conv_id",
-        bucket_ts_col(F.col("ts"), tier, shift_seconds).alias("bucket_ts"),
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_salt)).alias("_salt"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("_tok_len"),
-        F.col("tool").isNotNull().cast("long").alias("_is_tool_call"),
-        (F.col("role") == "user").cast("long").alias("_is_user"),
-        (F.col("role") == "assistant").cast("long").alias("_is_assistant"),
-        (F.col("role") == "tool").cast("long").alias("_is_tool"),
-    )
-    phase1 = enriched.groupBy("conv_id", "bucket_ts", "_salt").agg(
-        F.count(F.lit(1)).alias("turn_cnt"),
-        F.sum("_tok_len").alias("tok_len_sum"),
-        F.sum("_is_tool_call").alias("tool_call_cnt"),
-        F.sum("_is_user").alias("role_user_cnt"),
-        F.sum("_is_assistant").alias("role_assistant_cnt"),
-        F.sum("_is_tool").alias("role_tool_cnt"),
-    )
-    phase2 = phase1.groupBy("conv_id", "bucket_ts").agg(
-        *[F.sum(c).alias(c) for c in METRIC_COLS]
-    )
-    return phase2.withColumn("valid", F.col("turn_cnt") >= F.lit(min_cnt))
-
-
-def single_phase_rollup(transcripts: DataFrame, tier: str = "1m", min_cnt: int = 1) -> DataFrame:
-    """Unsalted single-phase rollup — equality witness for the salted path
-    (SURVEY.md §5.2 invariant 'salted two-phase agg equals unsalted')."""
-    t = transcripts.select(
-        "conv_id",
-        bucket_ts_col(F.col("ts"), tier).alias("bucket_ts"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("_tok_len"),
-        F.col("tool").isNotNull().cast("long").alias("_is_tool_call"),
-        (F.col("role") == "user").cast("long").alias("_is_user"),
-        (F.col("role") == "assistant").cast("long").alias("_is_assistant"),
-        (F.col("role") == "tool").cast("long").alias("_is_tool"),
-    )
-    out = t.groupBy("conv_id", "bucket_ts").agg(
         F.count(F.lit(1)).alias("turn_cnt"),
         F.sum("_tok_len").alias("tok_len_sum"),
         F.sum("_is_tool_call").alias("tool_call_cnt"),

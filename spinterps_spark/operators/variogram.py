@@ -12,8 +12,6 @@ cluster (SURVEY.md §3.2/§3.3 graft).
   applies to the mean estimator only (ADVICE r1 scale fix).
   P10 drop_zeros: optionally drop zero-squared-diff pairs before binning
   (reference variograms/fitvgs.py:164-177 drop_zeros_flag).
-- Post-processing windows (A10-A12, vgclus/evg_clus.py:180-212):
-  rolling-mean smoothing, monotone (running-max) envelope, normalization.
 - Model fit (K6, variograms/vgs.py:661-848): bounded differential evolution
   over (sill, range) per candidate model mix, weighted SSE, AIC selection
   n*ln(obj) + 2k (variograms/vgs.py:780). scipy is unavailable in this
@@ -154,64 +152,6 @@ def empirical_variogram(
     return agg
 
 
-def auto_lag_width(
-    series: DataFrame,
-    value_col: str,
-    candidates: tuple[float, ...] = (900.0, 1800.0, 3600.0, 7200.0, 14400.0),
-    max_lag: float = 48 * 3600,
-    min_pairs: int = 30,
-) -> float:
-    """A5 auto lag search (reference variograms/vgs.py:522-551 searches the
-    lag distance before binning): pick the SMALLEST candidate width whose
-    bins over [0, max_lag) are all populated with >= min_pairs pairs —
-    finest resolution that still gives statistically meaningful bins.
-    Falls back to the largest candidate.
-
-    Spark-first: ONE pair-join pass evaluates every candidate (each pair
-    explodes into (candidate, bin) memberships; one groupBy); the driver
-    loop only inspects the tiny (candidate, n_bins, min_pairs) summary.
-    """
-    s = series.select(
-        "conv_id",
-        F.unix_timestamp("bucket_ts").alias("t"),
-    ).where(F.col(value_col).isNotNull())
-    # strict h < max_lag: otherwise the exact-max_lag pairs form a sliver
-    # bin past [0, max_lag) that corrupts both the bin count and the
-    # min-pairs check. Horizon-bucket membership bounds the per-key pair
-    # width exactly as in empirical_variogram (VERDICT r2 #1); the r8
-    # symmetric-explode + greatest-bucket dedup shape (see there) lets
-    # ReuseExchange serve the right side from the left side's shuffle.
-    hb = F.floor(F.col("t") / F.lit(float(max_lag)))
-    sym = s.withColumn("_hb0", hb).withColumn(
-        "_hb", F.explode(F.array(hb, hb + 1)))
-    a = sym.alias("a")
-    b = sym.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.conv_id") == F.col("b.conv_id"))
-        & (F.col("a._hb") == F.col("b._hb"))
-        & (F.col("a._hb") == F.greatest(F.col("a._hb0"), F.col("b._hb0")))
-        & (F.col("a.t") < F.col("b.t"))
-        & (F.col("b.t") - F.col("a.t") < max_lag),
-    ).select((F.col("b.t") - F.col("a.t")).cast("double").alias("h"))
-    cand = F.array(*[F.lit(float(w)) for w in candidates])
-    binned = pairs.select(
-        F.explode(cand).alias("w"), F.col("h")
-    ).groupBy("w", F.floor(F.col("h") / F.col("w")).alias("bin")).count()
-    summary = {
-        r["w"]: (r["n_bins"], r["min_pairs"])
-        for r in binned.groupBy("w").agg(
-            F.count(F.lit(1)).alias("n_bins"), F.min("count").alias("min_pairs")
-        ).collect()
-    }
-    for w in sorted(candidates):
-        n_bins, mp = summary.get(float(w), (0, 0))
-        want_bins = int(-(-max_lag // w))  # ceil: bins covering [0, max_lag)
-        if n_bins >= want_bins and mp >= min_pairs:
-            return float(w)
-    return float(max(candidates))
-
-
 def pairwise_series_gamma(
     series: DataFrame,
     step_col: str = "bucket_ts",
@@ -259,31 +199,6 @@ def pairwise_series_gamma(
         "series_a", "series_b", "n_common",
         F.round(var_a + var_b - 2 * cov, round_to).alias("gamma_sg"),
     )
-
-
-def smooth_and_monotone(evg: DataFrame, smooth_window: int = 3) -> DataFrame:
-    """A10 rolling-mean smoothing + A11 running-max monotone envelope,
-    ordered by lag within cluster (vgclus/evg_clus.py:180-212)."""
-    from pyspark.sql import Window as W
-
-    w_s = (
-        W.partitionBy("cluster_id").orderBy("bin")
-        .rowsBetween(-(smooth_window // 2), smooth_window // 2)
-    )
-    w_m = W.partitionBy("cluster_id").orderBy("bin").rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    out = evg.withColumn("gamma_s", F.avg("gamma").over(w_s))
-    return out.withColumn("gamma_pd", F.max("gamma_s").over(w_m))
-
-
-def normalize(evg: DataFrame) -> DataFrame:
-    """A12: divide by the per-cluster mean, keep the norming value."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("cluster_id")
-    out = evg.withColumn("norm_val", F.avg("gamma_pd").over(w))
-    return out.withColumn("gamma_n", F.col("gamma_pd") / F.col("norm_val"))
 
 
 def ecdf_interp(
@@ -446,18 +361,6 @@ def fit_vg_model(
     if not fits:
         return "nan", float("inf")
     return fits[0][1], fits[0][0]
-
-
-def fit_vg_models_nbest(lags, gammas, n_pairs=None, n_best=3, **kw):
-    """T4: keep the n_best fits by ascending AIC
-    (reference variograms/vgs.py:809-818)."""
-    results = []
-    for mix in MODEL_MIXES:
-        s, a = fit_vg_model(lags, gammas, n_pairs, mixes=(mix,), **kw)
-        if s != "nan":
-            results.append((a, s))
-    results.sort(key=lambda f: f[0])
-    return results[:n_best]
 
 
 FIT_SCHEMA = "cluster_id int, vg_str string, aic double, n_bins int"

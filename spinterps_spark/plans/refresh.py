@@ -1,11 +1,10 @@
 """Incremental continuous-aggregate refresh: merge a turn-delta into the
 tier cascade, recomputing ONLY the conversations it touched.
 
-The north rule's continuous aggregates so far had two paths: the batch
-pipeline (full recompute, plans/pipeline.py) and the streaming cascade
-(stateful, streaming/ingest.py). This pass is the third — the
-TimescaleDB-style `refresh_continuous_aggregate`: a batch of late/new turns
-arrives, and instead of re-running the pipeline the engine
+The batch pipeline (plans/pipeline.py) recomputes every tier from
+scratch. This pass is the TimescaleDB-style
+`refresh_continuous_aggregate`: a batch of late/new turns arrives, and
+instead of re-running the pipeline the engine
 
 1. re-aggregates just the affected conversations' rollup rows by MERGING
    partial aggregates — every tier metric is an exact-compose sum/count
@@ -29,6 +28,11 @@ Resumable exactly like the other passes: same (run_id, stage) committed ->
 skipped; a crash mid-write redoes only the missing waves (per-wave lineage
 rows via plans/checkpoint.run_waved_pass).
 
+A delta must hold NEW turns: merging a turn twice counts it twice, and no
+pass dedups. Redelivery is absorbed by the run_id instead: `stream_refresh`
+(below) runs this pass per micro-batch with the checkpointed batch_id as
+the run_id, so a redelivered batch finds its commits and is skipped.
+
 100-TB scale: one scan of the delta + a broadcast-semi-joined scan of the
 affected convs' rollup rows; the fill/encode fan-out is bounded by the
 affected-conv count. A day's late data against a year's history touches
@@ -42,6 +46,7 @@ import time
 
 from pyspark.sql import DataFrame, functions as F
 
+from spinterps_spark.datagen import TRANSCRIPT_SCHEMA
 from spinterps_spark.operators.rollup import (
     DEFAULT_MIN_CNT, METRIC_COLS, base_rollup, rollup_tier)
 from spinterps_spark.plans.checkpoint import CheckpointLog, new_run_id, run_waved_pass
@@ -257,3 +262,71 @@ def run_refresh_pass(
 
     metrics["wall_sec"] = time.time() - t0
     return metrics
+
+
+def stream_refresh(
+    spark,
+    input_dir: str,
+    store_dir: str,
+    checkpoint_dir: str,
+    tiers: tuple[str, ...] = ("1m",),
+    fill_method: str | None = "IDW",
+    coords: DataFrame | None = None,
+    vg_dim: DataFrame | None = None,
+    n_waves: int = 2,
+    max_files_per_trigger: int = 1,
+    available_now: bool = True,
+    run_prefix: str = "sr",
+):
+    """Continuous incremental refresh: the TimescaleDB continuous-aggregate
+    policy loop as ONE streaming query. Each micro-batch of newly-arrived
+    turns is merged into an existing tier store by run_refresh_pass
+    (affected-conversation recompute only,
+    latest-wins delta publish), with the refresh run_id keyed by the
+    checkpointed batch_id.
+
+    Exactly-once across crash/restart by COMPOSING two commit logs, with
+    no new machinery: Structured Streaming's checkpoint pins each
+    batch_id to the same input files on redelivery, and the refresh
+    pass's snapshot-commit resume (same run_id+stage already committed ->
+    zero jobs) makes a redelivered batch a no-op — so a crash at any
+    point (mid-wave, between the rollup and chunk commits, after publish)
+    converges without ever double-merging a turn's partial aggregates.
+    This is exactly why the refresh contract demands NEW turns only: the
+    stream's at-least-once redelivery is absorbed by the run_id, not by
+    re-examining the data.
+
+    The store must be bootstrapped by run_retention_pipeline first (the
+    refresh pass raises on a tier with no committed rollup). Pair with a
+    periodic run_flatten_pass + run_vacuum_pass (plans/vacuum.py) to
+    bound the delta chain the stream accretes.
+    """
+    src = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
+
+    def _merge(batch_df, batch_id):
+        # the pass scans the batch several times (conv list, per-tier
+        # merges); pin it so the file-source plan isn't re-resolved per
+        # action
+        batch_df.persist()
+        try:
+            run_refresh_pass(
+                batch_df.sparkSession, batch_df, store_dir, tiers=tiers,
+                fill_method=fill_method, coords=coords, vg_dim=vg_dim,
+                n_waves=n_waves, run_id=f"{run_prefix}-{batch_id}",
+            )
+        finally:
+            batch_df.unpersist()
+
+    writer = (
+        src.writeStream.foreachBatch(_merge)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.start()

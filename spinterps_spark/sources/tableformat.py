@@ -61,21 +61,6 @@ def tier_data_commit_ids(snapshots: list[dict], tier: str) -> list[str]:
     ]
 
 
-def unchanged_tier_validator(fmt, tier: str):
-    """Capture the tier's data history NOW; returns a `validate` hook for
-    commit_tier that raises CommitConflictError if any other writer
-    published to the tier in between. A full rewrite folds the merged view
-    it READ, so an unvalidated publish would silently drop a concurrent
-    refresh delta — the lost update the optimistic protocol exists to
-    prevent. Passes that can resume use pinned_tier_validator."""
-    seen = tier_data_commit_ids(fmt.snapshots(), tier)
-
-    def validate(snapshots: list[dict]):
-        _raise_if_moved(tier, seen, tier_data_commit_ids(snapshots, tier))
-
-    return validate
-
-
 def _raise_if_moved(tier: str, seen: list, now: list) -> None:
     if now != seen:
         raise CommitConflictError(
@@ -88,7 +73,12 @@ def _raise_if_moved(tier: str, seen: list, now: list) -> None:
 
 
 def pinned_tier_validator(pin_path: str, pairs: list) -> "callable":
-    """Crash-resume-safe unchanged_tier_validator over (fmt, tier) pairs.
+    """Capture the data histories of the (fmt, tier) pairs; returns a
+    `validate` hook for commit_tier that raises CommitConflictError if any
+    other writer published to one of those tiers in between. A full
+    rewrite folds the merged view it READ, so an unvalidated publish would
+    silently drop a concurrent refresh delta — the lost update the
+    optimistic protocol exists to prevent.
 
     The captured baseline history is PERSISTED at `pin_path` on first
     capture and reloaded on resume with the same run_id. Without the pin,

@@ -19,8 +19,6 @@ def _coords(spark, n):
 def test_crossjoin_guard_raises_on_oversized_refs(spark, monkeypatch):
     monkeypatch.setattr(NB, "CROSSJOIN_REFS_MAX", 50)
     c = _coords(spark, 60)
-    with pytest.raises(ValueError, match="knn_neighbors.*cross-join"):
-        NB.knn_neighbors(c, c, k=3, join_on=None)
     with pytest.raises(ValueError, match="pie_neighbors.*cross-join"):
         NB.pie_neighbors(c, c, n_nebs=3, join_on=None)
 
@@ -28,7 +26,5 @@ def test_crossjoin_guard_raises_on_oversized_refs(spark, monkeypatch):
 def test_crossjoin_still_works_under_bound(spark, monkeypatch):
     monkeypatch.setattr(NB, "CROSSJOIN_REFS_MAX", 50)
     c = _coords(spark, 20)
-    out = NB.knn_neighbors(c, c, k=2, join_on=None)
-    assert out.count() == 40  # every dst gets its 2 nearest
-    out2 = NB.pie_neighbors(c, c, n_nebs=2, join_on=None)
-    assert out2.count() == 40
+    out = NB.pie_neighbors(c, c, n_nebs=2, join_on=None)
+    assert out.count() == 40

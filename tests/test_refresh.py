@@ -9,8 +9,9 @@ points).
 
 Contract note: a refresh delta is NEW turns (not yet in the store) — the
 batch path merges partial aggregates, so re-delivering already-merged turns
-would double-count; exactly-once de-dup on redelivery is the streaming
-path's job (streaming/ingest.py watermark-bounded dedup).
+would double-count. No pass dedups: stream_refresh absorbs a redelivered
+micro-batch through its run_id (the checkpointed batch_id), whose commits
+are already in the store.
 """
 
 import glob
@@ -523,3 +524,82 @@ def test_reader_pinned_to_snapshot_immune_to_publish(spark, stores):
     unpinned = pts()
     assert unpinned["conv_id"].str.startswith("pin-").any()
     assert len(unpinned) > len(before)
+
+
+def test_stream_refresh_equals_batch_and_survives_redelivery(spark, tmp_path):
+    """Continuous incremental refresh (stream_refresh): a turn stream
+    merged batch-by-batch into a bootstrapped store must equal the full
+    batch pipeline bit-for-bit, a no-new-input restart must commit
+    nothing, and a crash-simulating redelivery (streaming commit log
+    truncated) must be absorbed by the refresh pass's run_id resume —
+    exactly-once end to end, no double-merged partial aggregates."""
+    import glob as _glob
+    import shutil
+
+    from spinterps_spark.compress.gorilla import decode_tier_chunks
+    from spinterps_spark.plans.pipeline import run_retention_pipeline
+    from spinterps_spark.plans.retention import read_tier_chunks
+    from spinterps_spark.sources.tableformat import tier_tables
+    from spinterps_spark.plans.refresh import stream_refresh
+
+    t = datagen.transcripts_spark(spark, seed=23, n_turns_target=2500)
+    bounds = t.agg(F.min(F.unix_timestamp("ts")).alias("mn"),
+                   F.max(F.unix_timestamp("ts")).alias("mx")).first()
+    cut = ((bounds.mn + (bounds.mx - bounds.mn) // 2) // 3600) * 3600
+    h = F.substring(F.md5("conv_id"), 1, 1)
+    e = F.unix_timestamp("ts")
+    p1 = (h >= "c") & (e >= cut)
+    p2 = h.between("8", "b") & (e >= cut)
+
+    store, full = str(tmp_path / "store"), str(tmp_path / "full")
+    run_retention_pipeline(spark, t.where(~(p1 | p2)), store, tiers=("1m",),
+                           n_waves=2, run_id="boot")
+    run_retention_pipeline(spark, t, full, tiers=("1m",), n_waves=2,
+                           run_id="gt")
+
+    # two arrival waves, conv-disjoint by hash range; maxFilesPerTrigger=1
+    # over the single-file writes -> at least two micro-batches
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
+    os.makedirs(in_dir)
+    for name, pred in (("w0", p1), ("w1", p2)):
+        stage = str(tmp_path / f"stage_{name}")
+        t.where(pred).coalesce(1).write.parquet(stage)
+        part = _glob.glob(os.path.join(stage, "part-*.parquet"))[0]
+        shutil.move(part, os.path.join(in_dir, f"{name}.parquet"))
+
+    stream_refresh(spark, in_dir, store, ckpt, tiers=("1m",), n_waves=2)
+
+    def pts(d):
+        return (
+            decode_tier_chunks(read_tier_chunks(spark, d, "1m"))
+            .select("conv_id", "bucket_ts", "value").toPandas()
+            .sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
+        )
+
+    pd.testing.assert_frame_equal(pts(store), pts(full), check_exact=True)
+
+    def n_snaps():
+        return sum(
+            len(tier_tables(spark, os.path.join(store, tb)).snapshots())
+            for tb in ("rollup", "chunks"))
+
+    before = n_snaps()
+    # restart with no new input: zero batches, zero commits
+    stream_refresh(spark, in_dir, store, ckpt, tiers=("1m",), n_waves=2)
+    assert n_snaps() == before
+
+    # crash simulation: drop the LAST streaming commit -> that batch is
+    # redelivered (same batch_id, same files) on restart; the refresh
+    # pass's committed(run_id, stage) resume must absorb it
+    commits = sorted(_glob.glob(os.path.join(ckpt, "commits", "*")),
+                     key=lambda p: os.path.basename(p))
+    commits = [c for c in commits if not c.endswith(".tmp")
+               and not os.path.basename(c).startswith(".")]
+    os.remove(commits[-1])
+    crc = os.path.join(os.path.dirname(commits[-1]),
+                       f".{os.path.basename(commits[-1])}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)  # ChecksumFs refuses the rewrite over a stale crc
+    stream_refresh(spark, in_dir, store, ckpt, tiers=("1m",), n_waves=2)
+    assert n_snaps() == before
+    pd.testing.assert_frame_equal(pts(store), pts(full), check_exact=True)

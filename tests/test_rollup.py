@@ -13,18 +13,6 @@ def _sorted(pdf):
     return pdf.sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
 
 
-def test_salted_equals_unsalted(spark):
-    """SURVEY §5.2 invariant, now witnessing r8's single-exchange
-    base_rollup against BOTH prior shapes: the explicit salted two-phase
-    aggregation and the plain single-phase helper."""
-    t = datagen.transcripts_spark(spark, seed=42, n_turns_target=4000)
-    a = _sorted(R.base_rollup(t, "1m", n_salt=16).toPandas())
-    b = _sorted(R.single_phase_rollup(t, "1m").toPandas())
-    c = _sorted(R.salted_two_phase_rollup(t, "1m", n_salt=16).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)
-
-
 def test_base_rollup_matches_oracle(spark):
     turns = datagen.transcripts_pandas(seed=42, n_turns_target=4000)
     sdf = spark.createDataFrame(turns)

@@ -271,14 +271,14 @@ def test_concurrent_writers_lose_no_commit(tmp_path):
 
 
 def test_commit_validate_conflict(tmp_path):
-    """unchanged_tier_validator: a commit whose read-basis was superseded
+    """pinned_tier_validator: a commit whose read-basis was superseded
     by a concurrent writer raises CommitConflictError instead of silently
     dropping the concurrent commit."""
     loc = str(tmp_path / "store")
     fmt = TF.ParquetTierTables(None, loc)
     fmt.commit_tier("1m", None, loc, {"run_id": "p0", "stage": "chunks:1m"})
 
-    validate = TF.unchanged_tier_validator(fmt, "1m")
+    validate = TF.pinned_tier_validator(str(tmp_path / "pin1.json"), [(fmt, "1m")])
     # another writer publishes a refresh delta in between
     fmt.commit_tier("1m", None, loc, {"run_id": "rX", "stage": "refresh:1m"})
     with pytest.raises(TF.CommitConflictError, match="fresh run_id"):
@@ -286,14 +286,14 @@ def test_commit_validate_conflict(tmp_path):
                         {"run_id": "f1", "stage": "flatten:1m"},
                         validate=validate)
     # a vacuum row (metadata-only) does NOT trip the validator
-    validate2 = TF.unchanged_tier_validator(fmt, "1m")
+    validate2 = TF.pinned_tier_validator(str(tmp_path / "pin2.json"), [(fmt, "1m")])
     fmt.commit_tier("1m", None, loc, {"run_id": "v1", "stage": "vacuum:1m"})
     cid = fmt.commit_tier("1m", None, loc,
                           {"run_id": "f2", "stage": "flatten:1m"},
                           validate=validate2)
     assert cid
     # nor does another TIER's commit
-    validate3 = TF.unchanged_tier_validator(fmt, "1m")
+    validate3 = TF.pinned_tier_validator(str(tmp_path / "pin3.json"), [(fmt, "1m")])
     fmt.commit_tier("1h", None, loc, {"run_id": "rY", "stage": "refresh:1h"})
     assert fmt.commit_tier("1m", None, loc,
                            {"run_id": "f3", "stage": "flatten:1m"},
@@ -428,7 +428,7 @@ def test_commit_without_hard_links(tmp_path, monkeypatch):
     assert [s["commit_id"] for s in snaps] == [c1, c2]
     assert [n for n, _p in fmt._version_files()] == [1, 2]
     # revalidation still raises on a superseding data commit
-    validate = TF.unchanged_tier_validator(fmt, "1m")
+    validate = TF.pinned_tier_validator(str(tmp_path / "pin.json"), [(fmt, "1m")])
     fmt.commit_tier("1m", None, loc, {"run_id": "c", "stage": "refresh:1m"})
     with pytest.raises(TF.CommitConflictError):
         fmt.commit_tier("1m", None, loc,

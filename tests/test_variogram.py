@@ -99,28 +99,6 @@ def test_p10_drop_zeros_filters_zero_pairs(spark):
     assert np.isclose(drop["gamma"].iloc[0], 0.5 * 16.0, rtol=1e-12)
 
 
-def test_auto_lag_width_picks_finest_populated(spark, series, coords):
-    """A5 auto lag: one-pass candidate evaluation; dense hourly data must
-    admit a fine width, a sparse series must fall back to a coarse one."""
-    w = V.auto_lag_width(series, "v", candidates=(3600.0, 7200.0),
-                         max_lag=12 * 3600, min_pairs=5)
-    assert w in (3600.0, 7200.0)
-    # a 3-point series can never give >= 5 pairs per bin -> largest candidate
-    tiny = series.limit(3)
-    w2 = V.auto_lag_width(tiny, "v", candidates=(3600.0, 7200.0),
-                          max_lag=12 * 3600, min_pairs=5)
-    assert w2 == 7200.0
-
-
-def test_smooth_monotone_normalize(spark, series, coords):
-    evg = V.empirical_variogram(series, coords, "v", estimator="mean")
-    out = V.normalize(V.smooth_and_monotone(evg)).toPandas()
-    for _, g in out.sort_values("bin").groupby("cluster_id"):
-        pd_vals = g["gamma_pd"].to_numpy()
-        assert (np.diff(pd_vals) >= -1e-12).all(), "envelope not monotone"
-    assert np.allclose(out["gamma_n"] * out["norm_val"], out["gamma_pd"])
-
-
 def test_regime_variogram_pairs_stay_within_regime(spark):
     """Per-(cluster, regime) evg: pairs never span regimes, and the fit dim
     has one row per (cluster, regime) — the per-step vg table analog."""
@@ -196,17 +174,6 @@ def test_cluster_fit_end_to_end(spark, series, coords):
     filled = G.gapfill(sp, "v", method="OK", tier="1h", coords=coords, vg_dim=vg_dim)
     fp = filled.toPandas()
     assert (fp["fill_method"] == "ok").sum() > 0
-
-
-def test_nbest_fits():
-    from spinterps_spark.functions.vg_models import vg_vals
-
-    lags = np.linspace(600, 48 * 3600, 40)
-    gammas = vg_vals("3.0 Sph(43200.0)", lags)
-    best = V.fit_vg_models_nbest(lags, gammas, n_best=3, seed=5)
-    assert len(best) == 3
-    aics = [a for a, _ in best]
-    assert aics == sorted(aics)
 
 
 def test_ks_clustering_merges_identical_models():
